@@ -4,9 +4,8 @@ because driver code calls them sequentially).
 
 Several operators materialize two or more independent small tables before
 joining them (a truth panel and a sketch table, a register table and its
-exact verifier, the two count tables of a bigram model). Run sequentially,
-each eager materialization pays the full job latency while most of the
-cluster idles — at bench scale the per-action floor (~0.2-0.5 s: stage
+exact verifier). Run sequentially, each eager materialization pays the
+full job latency while most of the cluster idles — at bench scale the per-action floor (~0.2-0.5 s: stage
 scheduling, AQE re-planning, commit) dominates the data work, and on a
 real cluster the tail of one job leaves executors idle that the next
 job's tasks could back-fill. `pyspark.InheritableThread` is the
@@ -41,29 +40,6 @@ def parallel_checkpoints(*dfs: DataFrame) -> list[DataFrame]:
     threads = [
         InheritableThread(target=run, args=(i, df)) for i, df in enumerate(dfs)
     ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    for e in errs:
-        if e is not None:
-            raise e
-    return out
-
-
-def parallel_run(*fns):
-    """Run argument-less callables (each may issue Spark actions)
-    concurrently on InheritableThreads; returns their results in order."""
-    out: list = [None] * len(fns)
-    errs: list = [None] * len(fns)
-
-    def run(i: int, fn) -> None:
-        try:
-            out[i] = fn()
-        except BaseException as exc:  # noqa: BLE001 - re-raised below
-            errs[i] = exc
-
-    threads = [InheritableThread(target=run, args=(i, f)) for i, f in enumerate(fns)]
     for t in threads:
         t.start()
     for t in threads:

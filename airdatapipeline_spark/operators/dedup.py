@@ -106,8 +106,12 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     naive h1 + j·h2 double hashing) per-j orderings that are actually
     independent, so band buckets don't correlate. Docs with <3 tokens have
     no shingles and drop out (nothing to near-dup on)."""
-    d = load_table(spark, sf_dir, "documents")
-    sh = _shingles(d)
+    return _signatures(load_table(spark, sf_dir, "documents"))
+
+
+def _signatures(docs: DataFrame) -> DataFrame:
+    """minhash_signatures over a documents frame."""
+    sh = _shingles(docs)
     h = F.conv(F.substring(F.md5("shingle"), 1, 14), 16, 10).cast("long") % F.lit(
         1073741824
     )
@@ -120,15 +124,13 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _minhash_bands(docs: DataFrame) -> DataFrame:
     """(doc_id, band, bx, by) — LSH banding of the minhash signatures
-    (4 bands × 2 rows), persisted: every caller joins this table against
-    itself or a filtered view of it, and without the cache each side
-    recomputes the whole shingle→md5→min-agg subtree (verified: 2 parquet
-    scans, no ReusedExchange). The cached table is 4 short rows per doc —
-    tiny next to the shingle pass it saves; MEMORY_AND_DISK spills rather
-    than evicts under pressure, and lineage stays intact for recovery."""
-    sig = minhash_signatures(spark, sf_dir)
+    (4 bands × 2 rows). Not persisted: a self-join of this table reads
+    one signature aggregation through a ReusedExchange, and filtered
+    views of it (incremental_minhash_candidates) push their doc_id filter
+    below the aggregation, so each side aggregates only its own docs."""
+    sig = _signatures(docs)
     # one posexplode pass, NOT a 4-way union of selects (a union would make
     # Catalyst recompute the signature aggregation once per band)
     band_structs = F.array(
@@ -142,14 +144,19 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sig.select(
         "doc_id", F.posexplode(band_structs).alias("band", "bs")
     ).select("doc_id", "band", F.col("bs.bx").alias("bx"), F.col("bs.by").alias("by"))
-    return bands.persist(StorageLevel.MEMORY_AND_DISK)
+    return bands
 
 
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding (4 bands × 2 rows): docs sharing any band bucket are
     candidate near-dup pairs. The pair search is an equi-join on
     (band, bucket) — shuffle-partitioned by bucket, never quadratic."""
-    bands = _minhash_bands(spark, sf_dir)
+    return lsh_candidate_pairs(load_table(spark, sf_dir, "documents"))
+
+
+def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
+    """minhash_lsh_candidates over a documents frame."""
+    bands = _minhash_bands(docs)
     x = bands.alias("x")
     y = bands.alias("y")
     return (
@@ -178,7 +185,7 @@ def incremental_minhash_candidates(
     At 100 TB the corpus bands live as a bucketed table keyed by
     (band, bx, by) and each day's batch joins against it shuffle-free on
     the corpus side."""
-    bands = _minhash_bands(spark, sf_dir)
+    bands = _minhash_bands(load_table(spark, sf_dir, "documents"))
     is_batch = (F.col("doc_id") % batch_mod) == batch_rem
     new = bands.filter(is_batch).alias("n")
     corpus = bands.filter(~is_batch).alias("c")
@@ -429,66 +436,84 @@ def cluster_assignments(spark: SparkSession, sf_dir: str, max_iter: int = 20) ->
     min label among itself and its neighbors; converges in O(component
     diameter) rounds (near-dup components are dense, so diameter is tiny —
     2-3 rounds in practice). Each round is one shuffle-join + one
-    aggregate, all JVM-side; rounds early-exit on a converged fixpoint. At
-    extreme graph sizes the same loop upgrades to alternating large/small-
-    star (O(log n) rounds) — the per-round dataflow is identical.
+    aggregate, all JVM-side. At extreme graph sizes the same loop upgrades
+    to alternating large/small-star (O(log n) rounds) — the per-round
+    dataflow is identical.
 
     Non-iterable SQL cannot express this; the DuckDB oracle uses a
     recursive CTE (min reachable id ≡ HashMin fixpoint).
 
-    Each round (and the candidate graph itself) is materialized via
-    localCheckpoint: persist alone leaves the logical plan growing by one
-    join per round, so analysis/compilation cost — and the recompute risk
-    on block eviction — grows quadratically with iterations. Truncating
-    lineage keeps every round O(graph). On a cluster, swap for
-    `spark.sparkContext.setCheckpointDir` + `checkpoint()` (reliable,
-    executor-loss-safe); the loop is unchanged.
+    The labels are seeded with min(self, min neighbor) — the first round,
+    computed in the aggregation that enumerates the nodes. Before each
+    further round a probe asks whether the labels are already the fixpoint
+    (see _hashmin_fixpoint); only then does the round run. What runs at
+    build time, under AQE:
 
-    r12 (guide §1.2 — the serial-action floor dominates at bench scale
-    and idles the cluster tail at any scale): checkpoints are LAZY
-    (`eager=False`), so each round runs exactly ONE job — the convergence
-    probe's aggregation both materializes that round's label checkpoint
-    (local checkpointing piggybacks on the first computation) and reads
-    the sum. The eager form paid two jobs per round plus two at seed."""
-    pairs = minhash_lsh_candidates(spark, sf_dir)
+    - the candidate graph is a lazy localCheckpoint, read by every probe
+      and round. Taking it runs the plan's shuffle-map and broadcast
+      stages (signature aggregate, band join) as jobs, two at test scale;
+      its last stage runs inside the first probe's job;
+    - each probe is one limit-1 action. The checkpoint carries no size
+      estimate, so it plans two sort-merge joins; AQE runs their
+      shuffle-map stages and the label aggregate's as jobs before the
+      result (five jobs at test scale);
+    - a round that runs checkpoints the labels it reads (lazily, so again
+      only the shuffle-map stages run when it is taken), which keeps the
+      plan one join deep per round instead of doubling it.
+
+    On corpora whose components are cliques (near-dup groups) the seed is
+    already the fixpoint: one checkpoint and one probe, no round. The
+    returned frame recomputes the last labels from the checkpoints inside
+    the caller's query. On a cluster, swap for
+    `spark.sparkContext.setCheckpointDir` + `checkpoint()` (reliable,
+    executor-loss-safe); the loop is unchanged."""
+    return hashmin_components(minhash_lsh_candidates(spark, sf_dir), max_iter)
+
+
+def hashmin_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+    """The HashMin loop of cluster_assignments over any undirected pair
+    list (columns id_a, id_b) → (doc_id, cluster_id = component min)."""
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .localCheckpoint(eager=False)
     )
-    # seed with min(self, min neighbor): exactly the result of the first
-    # HashMin round, but computed in the same aggregation that enumerates
-    # the nodes — one full round saved
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("mn"))
         .select(F.col("src").alias("node"), F.least("src", "mn").alias("label"))
-        .localCheckpoint(eager=False)
     )
-    # Convergence probe: HashMin labels are monotonically NON-INCREASING
-    # (new label = min over a set containing the old label) and the node set
-    # is fixed after seeding, so sum(label) strictly decreases iff ANY label
-    # improved — one cheap scan of the just-checkpointed table per round,
-    # where a join-against-previous probe would re-shuffle both label sets.
-    # This first probe also materializes the edge AND seed checkpoints.
-    label_sum = labels.agg(F.sum("label")).collect()[0][0]
     for _ in range(max_iter):
+        if _hashmin_fixpoint(edges, labels):
+            break
+        # (r12 measured, left alone: a pointer-jumping label-of-label
+        # shortcut halves the round count but adds a label self-join
+        # shuffle per round — net +0.6s at sf0.1 because rounds here are
+        # stage-floor-bound, not data-bound. Revisit only if a real corpus
+        # shows deep-diameter components.)
+        labels = labels.localCheckpoint(eager=False)
         prop = edges.join(labels, edges["dst"] == labels["node"]).select(
             edges["src"].alias("node"), "label"
         )
-        # (r12 measured, left alone: adding a pointer-jumping
-        # label-of-label shortcut halves the round count but adds a label
-        # self-join shuffle per round — net +0.6s at sf0.1 because rounds
-        # here are stage-floor-bound, not data-bound. Revisit only if a
-        # real corpus shows deep-diameter components.)
-        labels = (
-            labels.unionByName(prop).groupBy("node").agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=False)
-        new_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if new_sum == label_sum:
-            break
-        label_sum = new_sum
+        labels = labels.unionByName(prop).groupBy("node").agg(F.min("label").alias("label"))
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+
+def _hashmin_fixpoint(edges: DataFrame, labels: DataFrame) -> bool:
+    """True when no HashMin round would change `labels`: every edge joins
+    two equally labeled nodes. (A node's next label is the min over its
+    own and its neighbors' labels, so it changes iff some neighbor holds a
+    smaller one; edges hold both directions, so that is exactly an edge
+    whose two labels differ.) One limit-1 action: it stops at the first
+    such edge, and on a converged graph its partition scan scales up over
+    a few jobs (two at test scale)."""
+    x, y = labels.alias("x"), labels.alias("y")
+    return not (
+        edges.join(x, F.col("src") == F.col("x.node"))
+        .join(y, F.col("dst") == F.col("y.node"))
+        .where(F.col("x.label") != F.col("y.label"))
+        .take(1)
+    )
 
 
 def exact_substring_pairs(
@@ -590,11 +615,16 @@ def star_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Core large-star/small-star loop over an undirected edge list
     (columns a, b) → (node, label = component min). Factored out of
     `cluster_assignments_star` so synthetic graphs (chains, stars, forests)
-    can exercise it directly in tests."""
-    # Lazy checkpoints (r12, guide §1.2): the edge set materializes inside
-    # the first round's probe job; the node spine is only read by the final
-    # root-labeling join, so its checkpoint materializes there — each
-    # eager form here was one extra serial job before any round ran.
+    can exercise it directly in tests.
+
+    Every checkpoint here is lazy (`eager=False`), but under AQE taking a
+    lazy checkpoint runs the plan's shuffle-map stages as jobs at once;
+    only the last stage waits for the first action that reads it. So the
+    edge set and the node spine each run their distinct's map stage when
+    taken, and a round runs the large-star/small-star map stages when its
+    contraction is checkpointed (seven jobs on a 13-node chain) and then
+    its convergence probe, one count over a union of two limit-1
+    excepts (five jobs)."""
     edges = edges.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col("a").alias("node"))
@@ -638,9 +668,8 @@ def star_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         contracted = small_star(large_star(edges)).localCheckpoint(eager=False)
         # converged when the edge set is stable (symmetric difference
         # empty). Both directions of the probe run as ONE action — a union
-        # of the two limit-1 excepts — which also materializes this
-        # round's lazy checkpoint: 1 job/round where the eager form +
-        # two separate counts paid 3 (r12, guide §1.2).
+        # of the two limit-1 excepts — which also computes the last stage
+        # of this round's lazy checkpoint.
         delta = (
             contracted.exceptAll(edges)
             .limit(1)

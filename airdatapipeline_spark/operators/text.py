@@ -184,7 +184,7 @@ def curated_documents(
     (cluster_id != doc_id from the MinHash-LSH connected components) are
     removed with a left-anti join on doc_id. Keeps docs that clear the
     quality threshold, are predicted `lang`, and have >= min_words."""
-    from .dedup import cluster_assignments
+    from .dedup import hashmin_components, lsh_candidate_pairs
 
     d = load_table(spark, sf_dir, "documents")
     t = tokens_col()
@@ -212,7 +212,7 @@ def curated_documents(
         _predicted_lang().alias("predicted_lang"),
     )
     losers = (
-        cluster_assignments(spark, sf_dir)
+        hashmin_components(lsh_candidate_pairs(d))
         .filter(F.col("cluster_id") != F.col("doc_id"))
         .select("doc_id")
     )
@@ -1041,14 +1041,15 @@ def lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer than two tokens have no bigrams and drop out (mirrored by the
     oracle's identical construction).
 
-    Scale shape: unigram + bigram counts are each ONE partial-aggregated
-    shuffle over the token stream; the bigram stream itself is built
-    zero-shuffle per doc (zip_with over adjacent slices — no positional
-    self-join); scoring joins the stream to the two count tables on their
-    natural keys (equi-joins, work ∝ corpus tokens); the per-doc log-prob
-    sum folds a position-sorted array (F.aggregate — explicit
-    left-to-right order, so the float total is partitioning-independent,
-    the same determinism discipline as BM25's fixed-order pivot sum).
+    Scale shape: unigram + bigram counts are ONE partial-aggregated
+    shuffle over one gram stream (see _lm_model); the bigram stream
+    itself is built zero-shuffle per doc (zip_with over adjacent slices —
+    no positional self-join); scoring joins the stream to the per-bigram
+    model table on (prev, cur) (one equi-join, work ∝ corpus tokens); the
+    per-doc log-prob sum folds a position-sorted array (F.aggregate —
+    explicit left-to-right order, so the float total is
+    partitioning-independent, the same determinism discipline as BM25's
+    fixed-order pivot sum).
 
     Numerics contract (the BM25 idf precedent, operators/text.py:907): ln
     is evaluated DRIVER-side with python's libm over the DISTINCT INTEGER
@@ -1057,79 +1058,89 @@ def lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     while python math.log and DuckDB ln share libm. The distinct COUNT
     VALUES (not types!) are Zipf-collapsed — a few hundred at any corpus
     size that has a vocabulary — so the collect is driver-side-by-nature
-    like the IVF centroid table. logp = ln_num - ln_den is then one exact
-    double subtraction per position."""
+    like the IVF centroid table. logp = ln(cb+1) - ln(cu+V) is then one
+    exact double subtraction per distinct bigram."""
     d = load_table(spark, sf_dir, "documents")
-    return lm_score_documents(d, lm_model_tables(spark, sf_dir))
+    return lm_score_documents(d, _lm_model(spark, d))
+
+
+# (prev, cur) structs of adjacent tokens, over the `toks` column in scope
+_LM_PAIRS = (
+    "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1),"
+    " (a, b) -> struct(a AS prev, b AS cur))"
+)
 
 
 def _lm_bigrams(docs: DataFrame) -> DataFrame:
     """(doc_id, source, pos, prev, cur) — the zero-shuffle bigram stream:
     zip_with over adjacent token slices, no positional self-join."""
     tok = docs.select("doc_id", "source", tokens_col().alias("toks"))
-    pairs = F.expr(
-        "zip_with(slice(toks, 1, size(toks) - 1), slice(toks, 2, size(toks) - 1),"
-        " (a, b) -> struct(a AS prev, b AS cur))"
-    )
     return tok.select(
-        "doc_id", "source", F.posexplode(pairs).alias("pos", "pc")
+        "doc_id", "source", F.posexplode(F.expr(_LM_PAIRS)).alias("pos", "pc")
     ).select("doc_id", "source", "pos", "pc.prev", "pc.cur")
 
 
 def lm_model_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """The OFFLINE-trained bigram model as two persisted lookup tables:
-    bic2 (prev, cur, cb, ln_num = ln(cb+1)) and uni2 (prev, ln_den =
-    ln(cu+V)) — ln attached from the driver-side libm table over the
+    """The OFFLINE-trained bigram model as one lookup table, `bigrams`
+    (prev, cur, hapax, logp): per corpus bigram, whether it occurs once,
+    and logp = ln(cb+1) - ln(cu+V), the add-one-smoothed log-probability
+    of cur after prev — ln taken from the driver-side libm table over the
     Zipf-collapsed distinct integer args (see lm_perplexity_filter's
-    numerics contract). This dict is the deployable model artifact: the
-    batch filter and the streaming ingest gate score against the SAME
-    tables, so offline and online decisions can never drift."""
+    numerics contract); `vsz` is V. This dict is the deployable model
+    artifact: the batch filter and the streaming ingest gate score against
+    the SAME table, so offline and online decisions can never drift."""
+    return _lm_model(spark, load_table(spark, sf_dir, "documents"))
+
+
+def _lm_model(spark: SparkSession, docs: DataFrame) -> dict:
+    """lm_model_tables over a documents frame. Unigram and bigram counts
+    come from ONE aggregation over one gram stream per document (each
+    token as (w, NULL), then each adjacent pair), and the driver reads
+    vocabulary size plus the distinct count values from ONE collect of a
+    second aggregation over it: two shuffle stages and a result job at
+    build. Each bigram row then takes its prev word's unigram count from
+    a window over the same table. The returned table stays lazy and is
+    recomputed inside the scoring query's own job; nothing is persisted,
+    so nothing outlives the query."""
     import math
 
-    from pyspark import StorageLevel
+    from pyspark.sql import Window
 
-    from .concurrency import parallel_run
-
-    d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "source", tokens_col().alias("toks"))
-    uni = (
-        tok.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cu"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    tok = docs.select(tokens_col().alias("toks"))
+    unigrams = F.transform(
+        "toks", lambda w: F.struct(w.alias("prev"), F.lit(None).cast("string").alias("cur"))
     )
-    bic = (
-        _lm_bigrams(d)
-        .groupBy("prev", "cur")
-        .agg(F.count("*").alias("cb"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    counts = (
+        tok.select(F.explode(F.concat(unigrams, F.expr(_LM_PAIRS))).alias("g"))
+        .groupBy("g.prev", "g.cur")
+        .agg(F.count("*").alias("c"))
     )
-    # r12 (guide §1.2/§2.6): vocabulary size + the Zipf-collapsed distinct
-    # count values come from ONE aggregate job per table (count +
-    # collect_set in the same pass, which also materializes the persist),
-    # and the two jobs — independent scans — run concurrently instead of
-    # as three serial driver actions. The +1/+V shifts move driver-side
-    # over the same integers, so the libm ln args are unchanged.
-    uni_stats, cb_vals = parallel_run(
-        lambda: uni.groupBy()
-        .agg(F.count(F.lit(1)).alias("v"), F.collect_set("cu").alias("cus"))
-        .collect()[0],
-        lambda: bic.groupBy().agg(F.collect_set("cb").alias("cbs")).collect()[0],
-    )
-    vsz = int(uni_stats.v)  # vocabulary size
-    args = {int(c) + 1 for c in cb_vals.cbs} | {int(c) + vsz for c in uni_stats.cus}
+    is_uni = F.col("cur").isNull()
+    stats = counts.groupBy(is_uni.alias("uni"), "c").agg(F.count("*").alias("n")).collect()
+    vsz = sum(int(r.n) for r in stats if r.uni)  # vocabulary size
+    args = {int(r.c) + (vsz if r.uni else 1) for r in stats}
     lnt = F.broadcast(
         spark.createDataFrame(
             [(a, math.log(float(a))) for a in sorted(args)], "arg bigint, lnv double"
         )
     )
-    bic2 = bic.join(lnt, (F.col("cb") + 1) == F.col("arg")).select(
-        "prev", "cur", "cb", F.col("lnv").alias("ln_num")
+    num, den = lnt.alias("num"), lnt.alias("den")
+    bigrams = (
+        counts.select(
+            "prev", "cur", F.col("c").alias("cb"),
+            F.max(F.when(is_uni, F.col("c"))).over(Window.partitionBy("prev")).alias("cu"),
+        )
+        .where(~is_uni)
+        .join(num, (F.col("cb") + 1) == F.col("num.arg"))
+        .join(den, (F.col("cu") + F.lit(vsz)) == F.col("den.arg"))
+        .select(
+            "prev",
+            "cur",
+            (F.col("cb") == 1).cast("long").alias("hapax"),
+            (F.col("num.lnv") - F.col("den.lnv")).alias("logp"),
+        )
     )
-    uni2 = uni.join(lnt, (F.col("cu") + F.lit(vsz)) == F.col("arg")).select(
-        F.col("w").alias("prev"), F.col("lnv").alias("ln_den")
-    )
-    return {"bic2": bic2, "uni2": uni2, "vsz": vsz}
+    return {"bigrams": bigrams, "vsz": vsz}
 
 
 def lm_score_documents(docs: DataFrame, model: dict) -> DataFrame:
@@ -1141,15 +1152,8 @@ def lm_score_documents(docs: DataFrame, model: dict) -> DataFrame:
     entries, the documented extension)."""
     scored = (
         _lm_bigrams(docs)
-        .join(model["bic2"], ["prev", "cur"])
-        .join(model["uni2"], "prev")
-        .select(
-            "doc_id",
-            "source",
-            "pos",
-            (F.col("ln_num") - F.col("ln_den")).alias("logp"),
-            (F.col("cb") == 1).cast("long").alias("hapax"),
-        )
+        .join(model["bigrams"], ["prev", "cur"])
+        .select("doc_id", "source", "pos", "logp", "hapax")
     )
     per = scored.groupBy("doc_id", "source").agg(
         F.count("*").cast("long").alias("n_bigrams"),
@@ -1213,7 +1217,7 @@ def adaptive_source_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- distributed BPE tokenizer training (first-K merge rules) ----------------
+# --- BPE tokenizer training (first-K merge rules) ----------------------------
 
 BPE_N_MERGES = 4  # fixed K so the SQL oracle can unroll the iterations
 BPE_VOCAB_TOPK = 20
@@ -1236,40 +1240,22 @@ def bpe_word_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def _bpe_pairs(seqs: DataFrame) -> DataFrame:
-    """Weighted adjacent-symbol pair counts over (seq, wcount). The pair
-    stream is built zero-shuffle per word (transform over an index
-    sequence — no positional self-join); the only shuffle is the
-    partial-aggregated groupBy on (l, r). `syms` is projected ONCE and the
-    guard/transform read the column — the first cut re-derived
-    split(trim(seq)) three times inside one expr (r9 review)."""
-    staged = seqs.select(
-        F.split(F.trim(F.col("seq")), " ").alias("syms"), "wcount"
-    )
-    pairs = F.when(
-        F.size(F.col("syms")) >= 2,
-        F.expr(
-            "transform(sequence(1, size(syms) - 1),"
-            " i -> struct(element_at(syms, i) AS l,"
-            "             element_at(syms, i + 1) AS r))"
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<struct<l:string,r:string>>)"))
-    return (
-        staged.select(F.explode(pairs).alias("p"), "wcount")
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("wcount").alias("pair_count"))
-    )
+def _bpe_symbol_pairs(seq: str):
+    """Adjacent symbol pairs of one space-padded sequence — the split the
+    SQL oracle does: trim spaces, split on ' ', no pairs below 2 symbols."""
+    syms = seq.strip(" ").split(" ")
+    return zip(syms, syms[1:])
 
 
 def _bpe_apply_merge(seq: Column, left: str, right: str) -> Column:
     """Apply one merge rule to a space-padded symbol sequence: two literal
     replace passes of ' l r ' -> ' lr '. A single pass misses every other
     occurrence in a chain (matches share their boundary space); the second
-    pass catches those. Both Spark's and DuckDB's replace() do the same
-    leftmost non-overlapping scan, so the two engines produce bit-equal
-    sequences — the parity contract. (A pathological leftover adjacency
-    after two passes simply re-enters the next iteration's pair counts;
-    it is never silently lost.)"""
+    pass catches those. Spark's, DuckDB's and Python's replace() all do
+    the same leftmost non-overlapping scan, so the three produce bit-equal
+    sequences — the parity contract the driver-side trainer relies on. (A
+    pathological leftover adjacency after two passes simply re-enters the
+    next iteration's pair counts; it is never silently lost.)"""
     pat = F.lit(f" {left} {right} ")
     rep = F.lit(f" {left}{right} ")
     return F.replace(F.replace(seq, pat, rep), pat, rep)
@@ -1278,69 +1264,87 @@ def _bpe_apply_merge(seq: Column, left: str, right: str) -> Column:
 BPE_CHECKPOINT_EVERY = 32  # lineage-truncation cadence at production K
 
 
-def bpe_iterate(
-    wf: DataFrame,
-    n_merges: int,
-    keep_cache: bool = True,
-    checkpoint_every: int | None = BPE_CHECKPOINT_EVERY,
-    merge_times: list[float] | None = None,
-) -> tuple[list[tuple], DataFrame]:
-    """Run n_merges BPE iterations over a (word, wcount) table. Returns
-    (merges, final_seqs): merges = [(rank, left, right, merged, count)],
-    final_seqs = (word, seq, wcount) after all merges.
-
-    Scale shape: wf is persisted once (vocab-sized); each iteration is one
-    vocab-proportional pair-count aggregation plus a 1-ROW collect — the
-    winning merge rule is a scalar model parameter, the same
-    driver-side-by-nature justification as the IVF centroid table and
-    BM25's K-term query plan (operators/text.py:920). The merge is then
-    applied as a narrow map; lineage depth grows by one projection per
-    merge, truncated by an eager localCheckpoint every `checkpoint_every`
-    merges (VERDICT-r9 item 5: the cadence the docstring promised is now a
-    real code path — inert at the oracle's K=4, exercised at production K
-    by the bench tier and the lineage test). `merge_times`, when passed,
-    receives each iteration's wall seconds (per-merge flatness is the
-    vocab-bound design claim the bench records)."""
-    import time as _time
-
-    from pyspark import StorageLevel
-
-    wf = wf.persist(StorageLevel.MEMORY_AND_DISK)
-    seqs = wf.select(
+def _bpe_seed(wf: DataFrame) -> DataFrame:
+    """(word, seq, wcount) with seq = ' c1 c2 ... ' — every character a
+    symbol, space-padded so a merge is a literal replace."""
+    return wf.select(
         "word",
-        F.concat(
-            F.lit(" "), F.regexp_replace("word", "(.)", "$1 ")
-        ).alias("seq"),
+        F.concat(F.lit(" "), F.regexp_replace("word", "(.)", "$1 ")).alias("seq"),
         "wcount",
     )
+
+
+def bpe_train(
+    wf: DataFrame, n_merges: int, merge_times: list[float] | None = None
+) -> list[tuple]:
+    """The first n_merges BPE merge rules of a (word, wcount) table:
+    [(rank, left, right, merged, count)].
+
+    Scale shape: the corpus-proportional work is the word table, one
+    partial-aggregated Spark pass; the merge loop runs on the driver over
+    that vocabulary-sized table, collected ONCE with Spark's own seed
+    sequences — the HuggingFace-tokenizers trainer shape, which also keeps
+    the word counts in one process. Each iteration picks the top pair
+    under the total order (count desc, l, r), then re-splits only the
+    words whose sequence holds it and moves their pair counts, applying
+    the same two literal replace passes as _bpe_apply_merge. Training thus
+    costs one Spark collect (two jobs under AQE) at any K, where a
+    pair-count job per merge cost two jobs per merge. Counts are exact
+    Python ints, so the rules equal the DuckDB unroll's. `merge_times`,
+    when passed, receives each iteration's wall seconds."""
+    import time as _time
+    from collections import Counter
+
+    rows = [[r.seq, int(r.wcount)] for r in _bpe_seed(wf).select("seq", "wcount").collect()]
+    counts: Counter = Counter()
+    for seq, wc in rows:
+        for p in _bpe_symbol_pairs(seq):
+            counts[p] += wc
     merges: list[tuple] = []
     for rank in range(1, n_merges + 1):
         t_it = _time.time()
-        top = (
-            _bpe_pairs(seqs)
-            .orderBy(F.desc("pair_count"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:  # corpus too small to support n_merges rules
+        if not counts:  # corpus too small to support n_merges rules
             break
-        l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["pair_count"])
+        (l, r), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((rank, l, r, l + r, cnt))
+        pat, rep = f" {l} {r} ", f" {l}{r} "
+        for row in rows:
+            seq, wc = row
+            if pat in seq:
+                for p in _bpe_symbol_pairs(seq):
+                    counts[p] -= wc
+                row[0] = seq = seq.replace(pat, rep).replace(pat, rep)
+                for p in _bpe_symbol_pairs(seq):
+                    counts[p] += wc
+        counts = +counts  # drop the pairs no sequence holds any more
+        if merge_times is not None:
+            merge_times.append(round(_time.time() - t_it, 3))
+    return merges
+
+
+def bpe_iterate(
+    wf: DataFrame,
+    n_merges: int,
+    checkpoint_every: int | None = BPE_CHECKPOINT_EVERY,
+    merge_times: list[float] | None = None,
+) -> tuple[list[tuple], DataFrame]:
+    """Train n_merges BPE rules over a (word, wcount) table (bpe_train)
+    and apply them. Returns (merges, final_seqs): final_seqs = (word, seq,
+    wcount) after all merges, the word table with the rules applied as a
+    lazy chain of narrow projections that runs inside the caller's query.
+    Lineage grows by one projection per merge, truncated by an eager
+    localCheckpoint every `checkpoint_every` merges (inert at the oracle's
+    K=4, exercised at production K by the lineage test)."""
+    merges = bpe_train(wf, n_merges, merge_times)
+    seqs = _bpe_seed(wf)
+    for rank, l, r, _, _ in merges:
         seqs = seqs.select(
             "word", _bpe_apply_merge(F.col("seq"), l, r).alias("seq"), "wcount"
         )
         if checkpoint_every and rank % checkpoint_every == 0:
-            # truncate the K-deep projection chain: the checkpoint cost is
-            # one vocab-sized materialization, attributed to this iteration
+            # truncate the K-deep projection chain: one vocab-sized
+            # materialization per `checkpoint_every` merges
             seqs = seqs.localCheckpoint(eager=True)
-        if merge_times is not None:
-            merge_times.append(round(_time.time() - t_it, 3))
-    if not keep_cache:
-        # caller discards the sequence table (train_merges): release the
-        # vocab cache instead of pinning it for the session (r9 review —
-        # the repo convention unpersists when nothing returned depends on
-        # the cache benefit)
-        wf.unpersist(blocking=False)
     return merges, seqs
 
 
@@ -1351,14 +1355,10 @@ def bpe_train_merges(
     tokenizer-training operator every LLM data pipeline runs before
     anything downstream can count a token. Output is the model artifact
     itself: (merge_rank, left_sym, right_sym, merged_sym, pair_count),
-    built from the K per-iteration scalar collects (see bpe_iterate).
+    trained driver-side over the collected word table (see bpe_train).
     Reference scope: the reference has no tokenizer trainer; this is part
     of the LLM-pipeline extension family the brief asks for."""
-    merges, _ = bpe_iterate(
-        bpe_word_table(load_table(spark, sf_dir, "documents")),
-        n_merges,
-        keep_cache=False,
-    )
+    merges = bpe_train(bpe_word_table(load_table(spark, sf_dir, "documents")), n_merges)
     return spark.createDataFrame(
         merges,
         "merge_rank int, left_sym string, right_sym string,"

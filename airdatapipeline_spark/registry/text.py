@@ -1575,12 +1575,11 @@ _BPE_MERGES_SQL = f"""
 
 @register("text_bpe_train_merges", _BPE_MERGES_SQL)
 def t_bpe_merges(spark, sf_dir):
-    """Distributed BPE tokenizer training, first K=4 merge rules. Corpus
-    scanned ONCE into the distinct-word frequency table; every iteration
-    is vocab-proportional (the HuggingFace-tokenizers trainer shape) with
-    a 1-row collect for the winning rule (a scalar model parameter — the
-    IVF-centroid justification). Counts are exact integers, ties broken
-    (l, r) ascending, so the rule sequence is partitioning-independent."""
+    """BPE tokenizer training, first K=4 merge rules. Corpus scanned ONCE
+    by Spark into the distinct-word frequency table, collected once; the
+    merge loop runs driver-side over it (the HuggingFace-tokenizers
+    trainer shape). Counts are exact integers, ties broken (l, r)
+    ascending, so the rule sequence is partitioning-independent."""
     return text.bpe_train_merges(spark, sf_dir)
 
 

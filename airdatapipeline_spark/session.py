@@ -55,6 +55,12 @@ def get_spark(app_name: str = "airdatapipeline_spark", master: str | None = None
         # events.parquet stores TIMESTAMP(NANOS) which the vectorized reader
         # rejects; read nanos as long and convert in io.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python call-site capture off: with it on, PySpark wraps every
+        # Column method and function in a stack walk plus an origin
+        # set/clear on the JVM, about six py4j round-trips per Column call,
+        # which dominates the build of the expression-heavy operators.
+        # Trade-off: analysis errors no longer name the Python call site.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

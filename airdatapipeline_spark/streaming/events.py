@@ -672,7 +672,7 @@ def lm_gated_ingest_append(
     """Model-scoring-at-ingest: the OFFLINE-trained bigram LM
     (operators/text.lm_model_tables — trained once per corpus snapshot,
     the deployable artifact) applied ONLINE to arriving documents. Each
-    micro-batch scores its docs against the static model tables via
+    micro-batch scores its docs against the static model table via
     foreachBatch (the stream-static pattern for scoring that needs a
     per-doc aggregation, which append-mode streaming aggs cannot express
     without a time window) and appends only the LM-keep survivors to a
@@ -693,6 +693,10 @@ def lm_gated_ingest_append(
 
     if model is None:
         model = lm_model_tables(spark, sf_dir)
+    # the model table is a lazy plan over the corpus snapshot: cache it
+    # for the stream's life so no micro-batch recounts the corpus, and
+    # release it when the stream stops
+    table = model["bigrams"].persist()
     batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     reader = spark.readStream.schema(batch_schema)
     if max_files_per_trigger is not None:
@@ -726,6 +730,7 @@ def lm_gated_ingest_append(
         q.processAllAvailable()
     finally:
         q.stop()
+        table.unpersist()
     return spark.read.schema(out_schema).parquet(out)
 
 

@@ -654,11 +654,11 @@ def _bpe_production_tier(spark) -> dict:
     """Train BPE_PROD_MERGES merges on the sf documents corpus with the
     production checkpoint cadence, recording each iteration's wall time.
     The design claim is per-iteration cost ∝ DISTINCT vocabulary (flat
-    across merges — each iteration is one vocab-proportional pair count +
-    a 1-row collect), NOT corpus- or rank-proportional; `flatness` is the
-    measured form: median of the last 8 iterations over the first 8.
-    Checkpoint iterations pay one extra vocab-sized materialization and
-    are listed so they are not misread as drift."""
+    across merges — each iteration is one driver-side pass over the
+    collected word table), NOT corpus- or rank-proportional; `flatness` is
+    the measured form: median of the last 8 iterations over the first 8.
+    The checkpoints fall in the application of the merges, after the
+    timed iterations; their ranks are listed for reference."""
     from airdatapipeline_spark.io import load_table
     from airdatapipeline_spark.operators.text import (
         BPE_CHECKPOINT_EVERY,
@@ -671,7 +671,6 @@ def _bpe_production_tier(spark) -> dict:
     merges, _seqs = bpe_iterate(
         bpe_word_table(load_table(spark, SF_DIR, "documents")),
         BPE_PROD_MERGES,
-        keep_cache=False,
         merge_times=times,
     )
     total = round(time.time() - t0, 3)

@@ -805,17 +805,18 @@ def test_heavy_hitters_guard_raises_at_tiny_capacity(spark):
 
 
 def test_lm_perplexity_plan_and_threshold_split(spark):
-    """LM-perplexity filter plan: the persisted unigram/bigram count
-    tables serve all their consumers from cache (InMemoryTableScan), the
-    driver-side ln table arrives via broadcast joins, and nothing
-    degenerates to a cartesian product. The median-pinned threshold must
-    also exercise BOTH keep branches at test scale."""
+    """LM-perplexity filter plan: the unigram/bigram count table is
+    recomputed inside the scoring query, never read from a cache the
+    build left persisted (no InMemoryTableScan), the driver-side ln table
+    arrives via broadcast joins, and nothing degenerates to a cartesian
+    product. The median-pinned threshold must also exercise BOTH keep
+    branches at test scale."""
     from airdatapipeline_spark.operators import text as t
 
     df = t.lm_perplexity_filter(spark, SF_SMALL)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "InMemoryTableScan" in plan  # persisted count tables reused
+    assert "InMemoryTableScan" not in plan  # nothing persisted by the build
     assert plan.count("BroadcastHashJoin") >= 2  # ln table join-backs
     pdf = df.toPandas()
     assert pdf.keep.nunique() == 2, "threshold no longer splits the corpus"
@@ -1013,19 +1014,17 @@ def test_bpe_merges_partitioning_invariant(spark):
 
 
 def test_bpe_plans(spark):
-    """Scale shape assertions: the per-iteration pair count is a partial
-    (map-side) aggregation with no join at all — work ∝ distinct words;
-    the vocab top-k is TakeOrderedAndProject, never a global sort."""
+    """Scale shape assertions: the Spark pass the driver-side trainer
+    reads, the word table, is a partial (map-side) aggregation with no
+    join at all — one corpus scan, output ∝ distinct words; the vocab
+    top-k is TakeOrderedAndProject, never a global sort."""
     from airdatapipeline_spark.operators import text as t
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    wf = t.bpe_word_table(docs)
-    pairs_plan = t._bpe_pairs(
-        wf.selectExpr("' ' || regexp_replace(word, '(.)', '$1 ') AS seq", "wcount")
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "partial" in pairs_plan.lower()
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"):
-        assert bad not in pairs_plan
+    words_plan = t.bpe_word_table(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "partial" in words_plan.lower()
+    for bad in ("Join", "CartesianProduct"):
+        assert bad not in words_plan
 
     vocab_plan = t.bpe_vocab_top(spark, SF_SMALL)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in vocab_plan
