@@ -74,8 +74,3 @@ def spread(df: DataFrame) -> DataFrame:
         return df.repartition(cores)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view (for spark.sql paths)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

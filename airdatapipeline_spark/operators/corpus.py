@@ -87,43 +87,23 @@ def shard_assignments(
     table crosses a single-partition window to produce per-bucket base
     offsets, which a broadcast join adds back. One wide shuffle (by bucket)
     + one 256-row window + one broadcast: the TeraSort-style layout pass,
-    linear at 100 TB. The narrow (doc_id, carry..., hkey, n_tok) projection
-    is persisted so the bucket-total pass and the layout pass share ONE
-    parquet scan — the text column is read exactly once."""
-    df, _per = _assignments_for(load_table(spark, sf_dir, "documents"), budget, carry)
-    return df
+    linear at 100 TB. Nothing is cached: the bucket-total pass and the
+    layout pass each scan the documents (the total pass reads only the
+    token counts)."""
+    return _assignments_for(load_table(spark, sf_dir, "documents"), budget, carry)
 
 
-def _assignments_for(
-    d: DataFrame, budget: int, carry: tuple[str, ...]
-) -> tuple[DataFrame, DataFrame]:
+def _assignments_for(d: DataFrame, budget: int, carry: tuple[str, ...]) -> DataFrame:
     """The layout pass over an arbitrary documents DataFrame (full corpus
     for shard_assignments; the not-yet-sharded delta for append_shards).
     Offsets and shard ids are LOCAL to `d` starting at 0 — append_shards
-    rebases them past the existing layout. Returns (assignments, per) where
-    `per` is the persisted narrow scan: lazy callers leave it cached (LRU
-    reclaims it); the WRITE paths unpersist it after their terminal action,
-    both to release the blocks and because a lingering cache on a plan that
-    reads the layout path would be silently substituted for a LATER
-    equivalent plan by the CacheManager even after the dir's contents
-    changed (observed: append #2's delta anti-join returned append #1's
-    cached rows)."""
-    from pyspark import StorageLevel
-
-    per = (
-        d.select(
-            "doc_id",
-            *carry,
-            _shard_hkey().alias("hkey"),
-            F.size(tokens_col()).cast("long").alias("n_tok"),
-        )
-        .withColumn("bucket", F.expr(f"hkey div {SHARD_BUCKET_DIV}"))
-        # Not unpersisted: the returned plan is lazy, so the cache must
-        # outlive this function. MEMORY_AND_DISK blocks are evicted LRU by
-        # the block manager across a long-lived session (same policy as
-        # dedup.py's shared-materialization persists).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    rebases them past the existing layout."""
+    per = d.select(
+        "doc_id",
+        *carry,
+        _shard_hkey().alias("hkey"),
+        F.size(tokens_col()).cast("long").alias("n_tok"),
+    ).withColumn("bucket", F.expr(f"hkey div {SHARD_BUCKET_DIV}"))
 
     btot = per.groupBy("bucket").agg(F.sum("n_tok").alias("btok"))
     # 256-row table: the only unpartitioned window in the plan, by design.
@@ -131,12 +111,11 @@ def _assignments_for(
     bases = btot.select("bucket", (F.sum("btok").over(wb) - F.col("btok")).alias("base"))
 
     wd = Window.partitionBy("bucket").orderBy("hkey", "doc_id")
-    assignments = (
+    return (
         per.join(F.broadcast(bases), "bucket")
         .withColumn("start_off", F.col("base") + F.sum("n_tok").over(wd) - F.col("n_tok"))
         .withColumn("shard_id", F.expr(f"start_off div {budget}"))
     )
-    return assignments, per
 
 
 def shard_manifest(spark: SparkSession, sf_dir: str, budget: int = SHARD_TOKENS) -> DataFrame:
@@ -409,41 +388,35 @@ def write_shards(
     tombs = read_tombstones(spark, out_path)
     if tombs is not None:
         docs = docs.join(tombs, "doc_id", "left_anti")
-    assign, per_cache = _assignments_for(docs, budget, carry=("source", "text"))
-    # unpersist even on a failed write: a leaked cache over a plan that
-    # reads the layout path is exactly the CacheManager stale-substitution
-    # hazard documented in _assignments_for
-    try:
-        stats = assign.agg(
-            F.max("shard_id").alias("max_shard"), F.count("*").alias("n_docs")
-        ).first()
-        if stats["max_shard"] is None:
-            # zero admitted docs has TWO causes that must not conflate
-            # (ADVICE-r7): a genuinely empty source (a misconfigured
-            # sf_dir must crash, not retire a serving layout) vs a source
-            # whose every doc the tombstones barred. One head(1) probe of
-            # the pre-filter source disambiguates — only reached on the
-            # empty-admission path, so it costs nothing in normal writes.
-            if tombs is None or not raw_docs.select("doc_id").head(1):
-                raise ValueError(f"no documents in {sf_dir}; nothing to shard")
-            # every source doc is barred: the rewrite's honest result is a
-            # shard-less root that still carries the bar — the same legal
-            # state a delete-everything leaves, not a crash
-            os.makedirs(staging)
-            n_shards, n_docs = 0, 0
-        else:
-            n_shards = int(stats["max_shard"]) + 1
-            n_docs = int(stats["n_docs"])
-            (
-                assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-                .repartitionByRange(n_shards, "shard_id")
-                .sortWithinPartitions("shard_id", "hkey", "doc_id")
-                .write.mode("overwrite")
-                .partitionBy("shard_id")
-                .parquet(staging)
-            )
-    finally:
-        per_cache.unpersist()
+    assign = _assignments_for(docs, budget, carry=("source", "text"))
+    stats = assign.agg(
+        F.max("shard_id").alias("max_shard"), F.count("*").alias("n_docs")
+    ).first()
+    if stats["max_shard"] is None:
+        # zero admitted docs has TWO causes that must not conflate
+        # (ADVICE-r7): a genuinely empty source (a misconfigured
+        # sf_dir must crash, not retire a serving layout) vs a source
+        # whose every doc the tombstones barred. One head(1) probe of
+        # the pre-filter source disambiguates — only reached on the
+        # empty-admission path, so it costs nothing in normal writes.
+        if tombs is None or not raw_docs.select("doc_id").head(1):
+            raise ValueError(f"no documents in {sf_dir}; nothing to shard")
+        # every source doc is barred: the rewrite's honest result is a
+        # shard-less root that still carries the bar — the same legal
+        # state a delete-everything leaves, not a crash
+        os.makedirs(staging)
+        n_shards, n_docs = 0, 0
+    else:
+        n_shards = int(stats["max_shard"]) + 1
+        n_docs = int(stats["n_docs"])
+        (
+            assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
+            .repartitionByRange(n_shards, "shard_id")
+            .sortWithinPartitions("shard_id", "hkey", "doc_id")
+            .write.mode("overwrite")
+            .partitionBy("shard_id")
+            .parquet(staging)
+        )
     if n_shards > 0:
         if not os.path.exists(os.path.join(staging, "_SUCCESS")):
             raise RuntimeError(f"shard write to {staging} did not commit")
@@ -763,35 +736,30 @@ def append_docs(
     # redelivery carries identical content — asserted above — so any
     # survivor is the row)
     delta_docs = delta_docs.dropDuplicates(["doc_id"])
-    delta_assign, per_cache = _assignments_for(
-        delta_docs, budget, carry=("source", "text")
+    delta_assign = _assignments_for(delta_docs, budget, carry=("source", "text"))
+    assign = delta_assign.withColumn(
+        "start_off", F.col("start_off") + F.lit(prev_end)
+    ).withColumn("shard_id", F.col("shard_id") + F.lit(last_shard + 1))
+    stats = assign.agg(
+        F.max("shard_id").alias("max_shard"), F.count("*").alias("n_docs")
+    ).first()
+    if stats["max_shard"] is None:
+        return {
+            "path": out_path,
+            "n_new_docs": 0,
+            "n_new_shards": 0,
+            "first_new_shard": last_shard + 1,
+        }
+    n_new_docs = int(stats["n_docs"])
+    n_new_shards = int(stats["max_shard"]) - last_shard
+    (
+        assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
+        .repartitionByRange(n_new_shards, "shard_id")
+        .sortWithinPartitions("shard_id", "hkey", "doc_id")
+        .write.mode("overwrite")
+        .partitionBy("shard_id")
+        .parquet(staging)
     )
-    try:
-        assign = delta_assign.withColumn(
-            "start_off", F.col("start_off") + F.lit(prev_end)
-        ).withColumn("shard_id", F.col("shard_id") + F.lit(last_shard + 1))
-        stats = assign.agg(
-            F.max("shard_id").alias("max_shard"), F.count("*").alias("n_docs")
-        ).first()
-        if stats["max_shard"] is None:
-            return {
-                "path": out_path,
-                "n_new_docs": 0,
-                "n_new_shards": 0,
-                "first_new_shard": last_shard + 1,
-            }
-        n_new_docs = int(stats["n_docs"])
-        n_new_shards = int(stats["max_shard"]) - last_shard
-        (
-            assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-            .repartitionByRange(n_new_shards, "shard_id")
-            .sortWithinPartitions("shard_id", "hkey", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(staging)
-        )
-    finally:
-        per_cache.unpersist()
     if not os.path.exists(os.path.join(staging, "_SUCCESS")):
         raise RuntimeError(f"shard append to {staging} did not commit")
     staged_rows = spark.read.parquet(staging).count()  # footer-only scan
@@ -915,26 +883,23 @@ def compact_shards(
     moved = layout.filter(F.col("shard_id").isin(under)).select(
         "doc_id", "source", "text"
     )
-    assign, per_cache = _assignments_for(moved, budget, carry=("source", "text"))
+    assign = _assignments_for(moved, budget, carry=("source", "text"))
     tmp_delta = staging + ".__delta__"
-    try:
-        assign = assign.withColumn(
-            "start_off", F.col("start_off") + F.lit(prev_end)
-        ).withColumn("shard_id", F.col("shard_id") + F.lit(next_id))
-        stats = assign.agg(
-            F.max("shard_id").alias("max_shard"), F.count("*").alias("n_moved")
-        ).first()
-        n_moved, n_new = int(stats["n_moved"]), int(stats["max_shard"]) - next_id + 1
-        (
-            assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-            .repartitionByRange(n_new, "shard_id")
-            .sortWithinPartitions("shard_id", "hkey", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(tmp_delta)
-        )
-    finally:
-        per_cache.unpersist()
+    assign = assign.withColumn(
+        "start_off", F.col("start_off") + F.lit(prev_end)
+    ).withColumn("shard_id", F.col("shard_id") + F.lit(next_id))
+    stats = assign.agg(
+        F.max("shard_id").alias("max_shard"), F.count("*").alias("n_moved")
+    ).first()
+    n_moved, n_new = int(stats["n_moved"]), int(stats["max_shard"]) - next_id + 1
+    (
+        assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
+        .repartitionByRange(n_new, "shard_id")
+        .sortWithinPartitions("shard_id", "hkey", "doc_id")
+        .write.mode("overwrite")
+        .partitionBy("shard_id")
+        .parquet(tmp_delta)
+    )
     for entry in sorted(os.listdir(tmp_delta)):
         if entry.startswith("shard_id="):
             os.rename(os.path.join(tmp_delta, entry), os.path.join(staging, entry))
@@ -1511,9 +1476,9 @@ def token_rarity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. Occurrences collapse to per-(doc, token) COUNTS before any join —
        the join input is the distinct-token profile of each doc, not the
-       token stream, and that small table is persisted so the head/tail
-       branches and the vocabulary all read one materialization (one
-       parquet scan total).
+       token stream. Its aggregation shuffles once: the head/tail
+       branches and the vocabulary read that exchange (ReusedExchange),
+       so the documents are scanned once with nothing cached.
     2. The top VOCAB_HEAD_K tokens by frequency (a tiny sorted limit)
        broadcast to every executor and resolve the head profile rows
        map-side — no hot key ever shuffles.
@@ -1523,16 +1488,9 @@ def token_rarity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Results are identical to a plain occurrence join (same frequency
     table), so the DuckDB oracle is the naive formulation."""
-    from pyspark import StorageLevel
-
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", "source", F.explode(tokens_col()).alias("token"))
-    profile = (
-        tok.groupBy("doc_id", "source", "token")
-        .agg(F.count("*").alias("cnt"))
-        # Lazy-plan cache, reclaimed by LRU eviction (see shard_manifest).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    profile = tok.groupBy("doc_id", "source", "token").agg(F.count("*").alias("cnt"))
     vocab = profile.groupBy("token").agg(F.sum("cnt").alias("tf"))
     head = vocab.orderBy(F.col("tf").desc(), F.col("token").asc()).limit(VOCAB_HEAD_K)
 

@@ -215,10 +215,11 @@ def decontamination_report(
     would otherwise fan the join out quadratically (this is the skew guard,
     same role as stop-words in an inverted index). The eval side is tiny
     relative to the corpus, so Catalyst broadcasts it once the rare-gram
-    filter has run."""
-    grams = _shingles(load_table(spark, sf_dir, "documents")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    filter has run. The gram frame is a lazy localCheckpoint: the rare-gram
+    count and the gram join both read it, and as a plan leaf it gives the
+    runtime Bloom filter (text_decontamination_bloom) a filter over a scan
+    on the eval side to build from."""
+    grams = _shingles(load_table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
     rare = (
         grams.groupBy("shingle")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -403,9 +404,9 @@ def simhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sig.select(
         "doc_id", "simhash", F.posexplode(band_structs).alias("band", "bv")
     )
-    # same self-join dedup as minhash_lsh_candidates: one materialization
-    # feeds both sides instead of recomputing the packed bit-count agg twice
-    bands = bands.persist(StorageLevel.MEMORY_AND_DISK)
+    # same self-join as minhash_lsh_candidates: both sides shuffle on
+    # (band, bv), so the second reads the first's exchange (ReusedExchange)
+    # instead of recomputing the packed bit-count aggregation
     x = bands.alias("x")
     y = bands.alias("y")
     cand = (

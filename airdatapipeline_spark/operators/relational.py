@@ -13,7 +13,7 @@ Reference citations (into /root/reference/) are per-function.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..model import CATEGORIES, SENTIMENTS, URL_PREFIX
@@ -83,11 +83,6 @@ def today_filter(df: DataFrame, ts_col: str, today: str) -> DataFrame:
     """P5 — DATE(ts) = 'today' (scripts/llm_enricher.py:337-352); `today` is a
     pinned literal so runs are reproducible (reference uses CURRENT_DATE)."""
     return df.filter(F.to_date(ts_col) == F.lit(today).cast("date"))
-
-
-def exclude_errors(df: DataFrame, col: str = "sentiment") -> Column:
-    """P6 — error-exclusion predicate (dags/g1_enrichement_dag.py:142-151)."""
-    return df.filter(F.col(col) != "Erro")
 
 
 def pending_headlines(bronze_clean: DataFrame, silver: DataFrame, batch: int | None = None) -> DataFrame:

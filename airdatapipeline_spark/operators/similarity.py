@@ -496,11 +496,9 @@ def clustered_recall_panel(
     aggregate for the scanned-rows accounting. Output columns (hits,
     recall, scanned_rows, scanned_frac) are all exact integer / single-
     division arithmetic — full value-hash oracle."""
-    from pyspark import StorageLevel
-
     from pyspark.sql import Row
 
-    corpus = clustered_embeddings(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    corpus = clustered_embeddings(spark, sf_dir)
     # r12 (guide §2.4): assignment was a crossJoin(16-row cent) +
     # row_number window partitioned by vec_id — TWO full-corpus shuffles
     # just to rank 16 scores per row. _ivf_assign's zero-shuffle in-row
@@ -655,13 +653,11 @@ def clustered_tier_recall(
     recall ∝ scanned fraction), while here pruning and sign codes are
     honest: the rerank/nprobe dials should dominate. MEASURED.md carries
     the two-regime comparison."""
-    from pyspark import StorageLevel
-
     from pyspark.sql import Row
 
-    corpus = clustered_embeddings(spark, sf_dir, dim=EMB_DIM).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the truth and the IVF, BQ and PQ tiers all read the full-width
+    # corpus: a lazy localCheckpoint generates it once inside the query
+    corpus = clustered_embeddings(spark, sf_dir, dim=EMB_DIM).localCheckpoint(eager=False)
     queries = corpus.filter(F.col("vec_id") < n_queries)
     truth = _clustered_truth(corpus, n_queries, k)
 
@@ -669,7 +665,7 @@ def clustered_tier_recall(
     # are twin-computed driver-side (bit-equal, tests/test_extensions.py)
     # — the only pre-serve Spark job is one pruned id scan establishing
     # which panel ids exist in the table (was: three serial collect jobs
-    # each forcing generation work over the persisted corpus).
+    # each forcing generation work over the corpus).
     centers = [_clu_center_emb_py(c, EMB_DIM) for c in range(CLU_K)]
     ids = _present_ids(
         spark,
@@ -775,13 +771,11 @@ def clustered_residual_ivfpq_recall(
     candidates join on centroid_id (the probe pruning) and pay M lookups
     each. Per-query recall vs in-plan brute-force truth; deterministic
     end to end, fully value-hashed by the DuckDB oracle."""
-    from pyspark import StorageLevel
-
     from pyspark.sql import Row
 
-    corpus = clustered_embeddings(spark, sf_dir, dim=EMB_DIM).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the truth, the residual codes and the refine stage all read the
+    # full-width corpus: a lazy localCheckpoint generates it once
+    corpus = clustered_embeddings(spark, sf_dir, dim=EMB_DIM).localCheckpoint(eager=False)
     # r12 (guide §1.2): centers, probe assignments, residual codebooks and
     # the per-(query, list) distance tables are all K/Q-bounded pure
     # functions of the generator hashes — computed driver-side with the
@@ -1163,8 +1157,15 @@ def with_sq8(embeddings: DataFrame) -> DataFrame:
             F.lit(127.0) / F.expr("array_max(transform(emb, x -> abs(x)))"),
         ).otherwise(F.lit(1.0)),
     )
+    # zip_with over a repeated scale, not transform(emb, x -> x * scale):
+    # where `scale` is read once the optimizer inlines its expression, and
+    # inside a lambda that re-evaluates the O(dim) max per element
     return e.withColumn(
-        "q", F.expr("transform(emb, x -> cast(round(x * scale) as int))")
+        "q",
+        F.expr(
+            "zip_with(emb, array_repeat(scale, size(emb)),"
+            " (x, s) -> cast(round(x * s) as int))"
+        ),
     )
 
 
@@ -1841,60 +1842,55 @@ def _km_assign(e: DataFrame, cents: list[list[int]]) -> DataFrame:
     )
 
 
-def kmeans_train(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = KM_K,
-    iters: int = KM_ITERS,
-) -> tuple[list[list[int]], DataFrame]:
-    """Train the integer-lattice k-means model: `iters` Lloyd rounds from
-    the content-addressed md5 seeds. Returns (cents, q_table): cents is
-    the k×dim integer centroid list — the DEPLOYABLE model artifact the
-    batch stats and the streaming ingest gate both score against (the
-    lm_model_tables contract) — and q_table is the persisted (vec_id, q)
-    corpus it was trained on."""
+def kmeans_train(e: DataFrame, k: int = KM_K, iters: int = KM_ITERS) -> list[list[int]]:
+    """Train the integer-lattice k-means model over the SQ8 table `e`
+    (vec_id, q): `iters` Lloyd rounds from the content-addressed md5
+    seeds. Returns the k×dim integer centroid list — the DEPLOYABLE model
+    artifact the batch stats and the streaming ingest gate both score
+    against (the lm_model_tables contract). `e` is cached while the
+    rounds read it and released before returning, so the caller gets its
+    lazy frame back."""
     from pyspark import StorageLevel
 
     dim = EMB_DIM
-    e = (
-        with_sq8(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", "q")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    seed_rows = (
-        e.select("vec_id", "q", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .collect()
-    )
-    cents = [[int(v) for v in r.q] for r in seed_rows]  # k×dim model params
-    if not cents:
-        raise ValueError("kmeans_train: embeddings table is empty")
-    k = len(cents)  # a corpus smaller than k seeds fewer clusters (r9
-    # review: the update comprehension indexed cents[j] for j < k and
-    # crashed; the oracle's c0 simply has fewer rows — now both engines
-    # train the same seeded count)
-    for _ in range(iters):
-        sums = (
-            _km_assign(e, cents)
-            .groupBy("cid")
-            .agg(
-                F.count("*").alias("n"),
-                *[
-                    F.sum(F.element_at("q", i + 1)).alias(f"s{i}")
-                    for i in range(dim)
-                ],
-            )
+    e.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        seed_rows = (
+            e.select("vec_id", "q", F.md5(F.col("vec_id").cast("string")).alias("h"))
+            .orderBy("h", "vec_id")
+            .limit(k)
             .collect()
         )
-        got = {
-            int(r["cid"]): [
-                _km_fdiv(int(r[f"s{i}"]), int(r["n"])) for i in range(dim)
-            ]
-            for r in sums
-        }
-        cents = [got.get(j + 1, cents[j]) for j in range(k)]
-    return cents, e
+        cents = [[int(v) for v in r.q] for r in seed_rows]  # k×dim model params
+        if not cents:
+            raise ValueError("kmeans_train: embeddings table is empty")
+        k = len(cents)  # a corpus smaller than k seeds fewer clusters (r9
+        # review: the update comprehension indexed cents[j] for j < k and
+        # crashed; the oracle's c0 simply has fewer rows — now both engines
+        # train the same seeded count)
+        for _ in range(iters):
+            sums = (
+                _km_assign(e, cents)
+                .groupBy("cid")
+                .agg(
+                    F.count("*").alias("n"),
+                    *[
+                        F.sum(F.element_at("q", i + 1)).alias(f"s{i}")
+                        for i in range(dim)
+                    ],
+                )
+                .collect()
+            )
+            got = {
+                int(r["cid"]): [
+                    _km_fdiv(int(r[f"s{i}"]), int(r["n"])) for i in range(dim)
+                ]
+                for r in sums
+            }
+            cents = [got.get(j + 1, cents[j]) for j in range(k)]
+    finally:
+        e.unpersist()
+    return cents
 
 
 def kmeans_sq8_stats(
@@ -1926,7 +1922,8 @@ def kmeans_sq8_stats(
     (the spark.ml KMeans contract — its per-iteration collectAsMap of
     cluster sums is this exact pattern). The k-row per-round collects are
     scalar model parameters, the IVF-centroid justification."""
-    cents, e = kmeans_train(spark, sf_dir, k=k, iters=iters)
+    e = with_sq8(load_table(spark, sf_dir, "embeddings")).select("vec_id", "q")
+    cents = kmeans_train(e, k=k, iters=iters)
     final = _km_assign(e, cents)
     l1 = spark.createDataFrame(
         [(j + 1, sum(abs(v) for v in c)) for j, c in enumerate(cents)],
@@ -1938,7 +1935,10 @@ def kmeans_sq8_stats(
             F.count("*").alias("n_vectors"),
             F.sum("dist").alias("total_sq_dist"),
         )
-        .join(F.broadcast(l1), "cid")
+        # left, not inner: every cid is in l1, and an inner join would infer
+        # isnotnull(cid) and push it through the lazy SQ8 projection into
+        # the scan, inlining the whole argmin fold per row
+        .join(F.broadcast(l1), "cid", "left")
         .select(
             F.col("cid").alias("centroid_id"),
             "n_vectors",
@@ -2209,7 +2209,8 @@ def cluster_labels(
     over vocab×k rows."""
     from .text import tokens_col
 
-    cents, q = kmeans_train(spark, sf_dir)
+    q = with_sq8(load_table(spark, sf_dir, "embeddings")).select("vec_id", "q")
+    cents = kmeans_train(q)
     assign = _km_assign(q, cents).select(
         F.col("vec_id").alias("doc_id"), F.col("cid").alias("cluster_id")
     )

@@ -827,11 +827,12 @@ def heavy_hitter_tokens(
     total the guard needs is a side-output of the MG pass (each partition
     emits one sentinel row carrying its token count alongside its counter
     rows), and the tiny summary frame — ≤ partitions × (capacity+1) rows
-    by the sketch's state bound — is persisted so both its consumers
-    (candidate set, total) read the cache instead of re-scanning the
-    corpus. The total then rides into the guard as a broadcast 1-row
-    cross-join column rather than a driver-collected literal, so building
-    the DataFrame launches no eager job at all."""
+    by the sketch's state bound — is a lazy localCheckpoint, so both its
+    consumers (candidate set, total) read one materialization instead of
+    re-running the sketch over the corpus. The total then rides into the
+    guard as a broadcast 1-row cross-join column rather than a
+    driver-collected literal, so building the DataFrame launches no eager
+    job at all."""
     import pandas as pd
 
     d = load_table(spark, sf_dir, "documents")
@@ -852,7 +853,7 @@ def heavy_hitter_tokens(
             {"term": terms + [None], "part_n": [None] * len(terms) + [n]}
         )
 
-    summary = toks.mapInPandas(mg, "term string, part_n long").persist()
+    summary = toks.mapInPandas(mg, "term string, part_n long").localCheckpoint(eager=False)
     cands = summary.filter(F.col("term").isNotNull()).select("term").distinct()
     total_df = summary.groupBy().agg(
         F.sum("part_n").cast("long").alias("total")

@@ -21,7 +21,7 @@ dominate a bit prefix.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
@@ -51,26 +51,6 @@ def zvalue_expr(a: str, b: str, bits: int = Z_BITS) -> Column:
         terms.append(f"shiftleft(shiftright({a}, {i}) & 1, {2 * i})")
         terms.append(f"shiftleft(shiftright({b}, {i}) & 1, {2 * i + 1})")
     return F.expr(" | ".join(terms)).cast("long")
-
-
-def write_zordered(
-    df: DataFrame, path: str, a: str, b: str, n_files: int = 8, bits: int = Z_BITS
-) -> None:
-    """Write `df` as `n_files` parquet files clustered on z(a, b).
-
-    repartitionByRange samples z quantiles → balanced contiguous z ranges
-    per file; sortWithinPartitions orders rows inside each file so parquet
-    row-group stats are tight too. One shuffle — the same cost as any
-    re-layout write; it buys min/max skipping on BOTH dimensions for every
-    scan afterwards."""
-    z = df.withColumn("__z", zvalue_expr(a, b, bits))
-    (
-        z.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def zorder_events(spark: SparkSession, sf_dir: str, path: str, n_files: int = 8) -> None:

@@ -772,14 +772,12 @@ def kmeans_assign_ingest_append(
     broadcast-sized literal centroids (spark.ml's own serving shape) —
     no shuffle in the row path; the only cross-batch state is the sink's
     committed key set."""
+    from ..io import load_table
     from ..operators.similarity import _km_assign, kmeans_train, with_sq8
 
     if cents is None:
-        cents, q_table = kmeans_train(spark, sf_dir)
-        # the gate scores arriving batches, not the training corpus:
-        # release the trainer's corpus cache instead of pinning it for
-        # the session (r9 review)
-        q_table.unpersist(blocking=False)
+        train = with_sq8(load_table(spark, sf_dir, "embeddings")).select("vec_id", "q")
+        cents = kmeans_train(train)
     batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
     reader = spark.readStream.schema(batch_schema)
     if max_files_per_trigger is not None:

@@ -280,14 +280,15 @@ N_RUNS = 3  # r6: median-of-3 (VERDICT-r5 item 2 — make regressions
 # ambient noise that best-of-2 could not separate from a plan change).
 
 
-def _run_samples(fn, n: int = N_RUNS, spark=None, io_sink=None, io_key=None) -> list[float]:
+def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[float]:
     """Force FULL execution of every projected column with a noop write —
     count() lets Catalyst prune projected expressions (map-heavy queries
     were under-measured); noop runs the whole plan and discards rows
     executor-side (r2 re-baseline). Returns the sorted per-run times; the
     first run pays one-time Janino codegen, so the MEDIAN (not min, not
-    mean) is the headline statistic: robust to one slow outlier AND to one
-    lucky cache hit.
+    mean) is the headline statistic, robust to one slow outlier. Each run
+    starts with the SQL cache cleared and every persisted RDD released, so
+    no run reuses a cache an earlier run or query left.
 
     When `io_sink` is given, the LAST run is bracketed by REST stage-total
     snapshots (`_stage_totals`) and the delta recorded at io_sink[io_key] —
@@ -296,6 +297,9 @@ def _run_samples(fn, n: int = N_RUNS, spark=None, io_sink=None, io_key=None) -> 
     cost ~ms against multi-second runs."""
     times = []
     for i in range(n):
+        spark.catalog.clearCache()
+        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            rdd.unpersist(True)
         want_io = io_sink is not None and i == n - 1
         before = _stable_stage_totals(spark) if want_io else None
         t0 = time.time()
@@ -896,7 +900,7 @@ def main() -> None:
     for name in VERIFIER:
         if name not in queries:
             continue
-        runs = _run_samples(make_fn(name, SF_DIR))
+        runs = _run_samples(make_fn(name, SF_DIR), spark)
         dispersion[name] = runs
         verifier[name] = _median(runs)
         sys.stderr.write(f"[verifier] {name}: {verifier[name]}s (runs {runs})\n")
@@ -911,7 +915,7 @@ def main() -> None:
         for name in SCALING:
             if name not in timings:
                 continue
-            runs = _run_samples(make_fn(name, SCALE_DIR))
+            runs = _run_samples(make_fn(name, SCALE_DIR), spark)
             big = _median(runs)
             ratio = round(big / timings[name], 2) if timings[name] > 0 else None
             per_query[name] = {
@@ -935,7 +939,8 @@ def main() -> None:
             runs = _run_samples(
                 lambda: fuzzy_decontamination(
                     spark, SCALE_DIR, eval_mod=50 * SCALE_COPIES
-                )
+                ),
+                spark,
             )
             big = _median(runs)
             per_query[fd_name] = {

@@ -774,22 +774,23 @@ def test_misra_gries_bound_property():
 
 def test_heavy_hitters_two_scans_plan(spark):
     """VERDICT-r8 item: the operator reads the corpus exactly TWICE — the
-    MG pass (cached, its sentinel rows carry the partition token totals)
-    and the candidate recount. Pinned structurally: the persisted summary
-    serves BOTH side-consumers (candidate set + global total) via
-    InMemoryTableScan, so of the 3 FileScan strings in the plan text 2 are
-    the printed child of the SAME InMemoryRelation (executed once at cache
-    population) and only 1 is a live scan. The old third pass — a driver
-    .head() for the total — is gone: the total now rides in-plan as a
-    broadcast cross join, visible below."""
+    MG pass (a lazy localCheckpoint; its sentinel rows carry the partition
+    token totals) and the candidate recount. Pinned structurally on AQE's
+    final plan: the checkpointed summary serves BOTH side-consumers
+    (candidate set + global total) as `Scan ExistingRDD`, so the MG pass
+    runs once and the one FileScan left is the recount's. Nothing enters
+    the SQL cache. The old third pass — a driver .head() for the total —
+    is gone: the total now rides in-plan as a broadcast cross join,
+    visible below."""
     from airdatapipeline_spark.operators import text as t
 
     df = t.heavy_hitter_tokens(spark, SF_SMALL)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") == 2, plan
-    assert plan.count("InMemoryRelation") == 2, plan
-    assert plan.count("FileScan parquet") == 3, plan  # 1 live + 2 cache prints
-    assert plan.count("MapInPandas") == 2, plan  # both are the cached child
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert plan.count("Scan ExistingRDD") == 2, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "MapInPandas" not in plan, plan  # only in the checkpoint's lineage
+    assert "InMemoryTableScan" not in plan, plan
     # the guard total arrives as a broadcast 1-row cross join, not a literal
     assert "BroadcastNestedLoopJoin BuildRight, Cross" in plan
 

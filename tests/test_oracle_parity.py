@@ -78,7 +78,11 @@ def test_no_oracle_column_types_as_hugeint(duck):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
+    spark.catalog.clearCache()
     spark_pdf = QUERIES[name](spark, SF_SMALL).toPandas()
+    # no cache outlives the query: a plan left in the CacheManager would be
+    # substituted into any later equivalent plan, stale or not
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
     if name not in ORACLES:
         assert len(spark_pdf) >= 0  # rows-only check
         return

@@ -305,37 +305,36 @@ def test_table_profile_single_pass(spark):
         assert join not in plan
 
 
-def test_shard_manifest_single_scan_one_wide_shuffle(spark):
-    """The global shard layout claims a single-scan two-level prefix sum:
-    the parquet scan happens once (the narrow projection is persisted and
-    feeds both the bucket-total pass and the layout pass), the bucket-base
-    table arrives by broadcast, and the only wide Exchange partitions by
-    bucket for the per-bucket window."""
+def test_shard_manifest_one_wide_shuffle_no_cache(spark):
+    """The global shard layout is a two-level prefix sum with nothing
+    cached: the layout pass scans the documents and shuffles them once, by
+    bucket, for the per-bucket window; the bucket-total pass scans them
+    again for the token counts only; the bucket-base table arrives by
+    broadcast."""
     from airdatapipeline_spark.operators import corpus
 
     df = corpus.shard_manifest(spark, SF_SMALL)
-    plan = _plan(df)
-    # both passes must read the persisted projection. (No string-level
-    # scan-count ratio here: InMemoryTableScan prints its cached plan —
-    # scans included — and the CacheManager may substitute an EARLIER
-    # test's equivalent cache whose printed echo nests differently, so
-    # parquet-scan substrings are not 1:1 with real scans. The actual
-    # scan-once behavior is measured from SQLMetrics in MEASURED.md.)
-    assert plan.count("InMemoryTableScan") >= 2  # both passes hit the cache
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert "InMemoryTableScan" not in plan
+    assert plan.count("FileScan parquet") == 2, plan
     assert "BroadcastHashJoin" in plan  # 256-row bucket bases
     assert "CartesianProduct" not in plan
 
 
 def test_token_rarity_head_broadcast_tail_shuffle(spark):
     """The Zipf split: the head frequency table must arrive by broadcast
-    (hot tokens never shuffle), the per-(doc, token) profile must come from
-    the persisted materialization (one parquet scan total), and no
-    cartesian product anywhere."""
+    (hot tokens never shuffle), the head, tail and vocabulary branches must
+    read the per-(doc, token) profile's one exchange (one parquet scan
+    total, nothing cached), and no cartesian product anywhere."""
     from airdatapipeline_spark.operators import corpus
 
     df = corpus.token_rarity_scores(spark, SF_SMALL)
-    plan = _plan(df)
-    assert plan.count("InMemoryTableScan") >= 2  # head+tail read the cache
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert plan.count("FileScan parquet") == 1
+    assert "ReusedExchange" in plan
+    assert "InMemoryTableScan" not in plan
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -427,15 +426,10 @@ def test_fuzzy_decon_verification_is_candidate_bounded(spark):
             "rightHint=(strategy=broadcast)" in seg[:200]
             for seg in opt.split("Join LeftSemi")[1:]
         )
-        # each shingle explode is adjacent to a LeftSemi prune, asserted
-        # PER-EXPLODE on its own indented subtree (ADVICE-r12: a windowed
-        # OR let one unpruned explode hide behind a neighbor's semi):
-        # the prune is BELOW the Generate when the scan is raw (only
-        # candidate docs tokenized); when another session consumer has
-        # cached the shingle frame and Spark substituted the
-        # InMemoryRelation, the subtree is the cache leaf and the prune
-        # must sit ABOVE the Generate instead (the correct placement
-        # over an existing cache)
+        # every shingle explode has a LeftSemi prune in its own indented
+        # subtree (only candidate docs are tokenized), asserted PER-EXPLODE
+        # (ADVICE-r12: a windowed OR let one unpruned explode hide behind
+        # a neighbor's semi)
         lines = opt.splitlines()
 
         def _offset(ln: str) -> int:
@@ -454,15 +448,9 @@ def test_fuzzy_decon_verification_is_candidate_bounded(spark):
                     break
                 subtree.append(nxt)
             sub = "\n".join(subtree)
-            if "Join LeftSemi" in sub:
-                continue
-            above = "\n".join(lines[max(0, n - 40):n])
-            assert "InMemoryRelation" in sub or "InMemoryRelation" in above, (
-                f"raw explode at line {n} has no LeftSemi prune in its own "
+            assert "Join LeftSemi" in sub, (
+                f"explode at line {n} has no LeftSemi prune in its own "
                 f"subtree:\n{sub[:1500]}"
-            )
-            assert "Join LeftSemi" in above, (
-                f"cached explode at line {n} lacks a LeftSemi prune above it"
             )
     except AssertionError:
         with open("/tmp/fuzzy_decon_plan_fail.txt", "w") as fh:

@@ -1059,11 +1059,13 @@ def test_kmeans_assign_ingest_idempotent_under_redelivery(spark, tmp_path):
     the batch full-corpus assignment under the SAME trained centroids."""
     import shutil
 
-    from airdatapipeline_spark.operators.similarity import _km_assign, kmeans_train
+    from airdatapipeline_spark.io import load_table
+    from airdatapipeline_spark.operators.similarity import _km_assign, kmeans_train, with_sq8
     from airdatapipeline_spark.streaming import events as se
 
     sf = SF_SMALL
-    cents, q = kmeans_train(spark, sf)
+    q = with_sq8(load_table(spark, sf, "embeddings")).select("vec_id", "q")
+    cents = kmeans_train(q)
     want = _km_assign(q, cents).select("vec_id")
 
     landing = str(tmp_path / "landing")

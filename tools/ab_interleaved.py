@@ -6,9 +6,10 @@ rev-A / rev-B trials cancels it out of the A:B ratio — the same reason
 the writes tier interleaves base/big passes. Each trial is a FRESH
 subprocess + JVM running the query from a detached `git worktree` of that
 revision: 1 untimed warm lap, then median-of-3 timed runs (the bench's
-per-query statistic). The printed verdict is the median-of-pairs ratio
-with per-trial spreads, so a real plan regression separates from
-dispersion.
+per-query statistic). Every lap starts with the SQL cache cleared and
+every persisted RDD released, so no lap reuses an earlier lap's cache.
+The printed verdict is the median-of-pairs ratio with per-trial
+spreads, so a real plan regression separates from dispersion.
 
 Usage:
     python tools/ab_interleaved.py REV_A REV_B QUERY [SF_DIR] [N_PAIRS]
@@ -33,9 +34,17 @@ from airdatapipeline_spark.session import get_spark
 from airdatapipeline_spark.registry import QUERIES
 spark = get_spark("ab_trial")
 fn = QUERIES[{query!r}]
+
+def release():  # no lap may read a cache an earlier lap left behind
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+release()
 fn(spark, {sf!r}).collect()  # untimed warm lap (JIT/thread-pool ramp)
 ts = []
 for _ in range(3):
+    release()
     t = time.time(); fn(spark, {sf!r}).collect(); ts.append(time.time() - t)
 print("ABRESULT", sorted(ts)[1], min(ts), max(ts))
 """

@@ -104,9 +104,16 @@ class Renderer:
     def __init__(self) -> None:
         self.sections: list[tuple[str, list[str], list[list[str]], str | None]] = []
 
-    def add(self, title: str, df, limit: int = 12, order_by=None, desc: bool = False,
+    def add(self, title: str, df, limit: int = 12, order_by=(), desc: bool = False,
             chart: dict | None = None):
-        d = df.orderBy(order_by, ascending=not desc) if order_by else df
+        """`order_by` must be a total order on the rows, or the rows shown
+        (and their order) depend on the partitioning: `desc` applies to
+        its first column, the rest break ties ascending."""
+        if order_by:
+            first, *rest = order_by
+            d = df.orderBy(df[first].desc() if desc else df[first].asc(), *rest)
+        else:
+            d = df
         raw = [r.asDict() for r in d.limit(limit).collect()]
         cols = df.columns
         svg = _chart_svg(title, chart, raw) if chart and raw else None
@@ -173,7 +180,7 @@ def build_sections(spark, sf_dir: str, start: str | None, end: str | None) -> Re
     # --- tab 1: temporal evolution ---
     r.add(
         "Daily sentiment (temporal evolution)", gold_s, limit=10,
-        order_by="analysis_date", desc=True,
+        order_by=["analysis_date"], desc=True,
         chart={  # px.line temporal (dashboard.py:332-350)
             "kind": "line", "x": "analysis_date",
             "ys": ["positive_headlines", "negative_headlines",
@@ -182,13 +189,13 @@ def build_sections(spark, sf_dir: str, start: str | None, end: str | None) -> Re
     )
     r.add(
         "Sentiment distribution % (area chart data)",
-        analytics.sentiment_distribution_pct(silver), limit=6,
+        analytics.sentiment_distribution_pct(silver), limit=6, order_by=["sentiment"],
         chart={"kind": "bar", "x": "sentiment", "y": "pct"},
     )
     r.add(
         "Sentiment long format (melted, px.area input)",
         analytics.unpivot_sentiment_long(gold_s), limit=9,
-        order_by="analysis_date", desc=True,
+        order_by=["analysis_date", "sentiment_type"], desc=True,
         chart={  # px.area distribution (dashboard.py:353-371): stacked
             "kind": "area_by", "x": "analysis_date",
             "series": "sentiment_type", "y": "headline_count",
@@ -203,7 +210,7 @@ def build_sections(spark, sf_dir: str, start: str | None, end: str | None) -> Re
     r.add(
         "Top-5 categories over time (line chart data)",
         analytics.filter_to_top_categories(gold_c, 5), limit=10,
-        order_by="analysis_date", desc=True,
+        order_by=["analysis_date", "category"], desc=True,
         chart={  # px.line per category (dashboard.py:417-430)
             "kind": "line_by", "x": "analysis_date",
             "series": "category", "y": "category_count",
@@ -212,14 +219,14 @@ def build_sections(spark, sf_dir: str, start: str | None, end: str | None) -> Re
     r.add(
         "Date × category heatmap (px.imshow pivot)",
         analytics.pivot_date_category(gold_c), limit=8,
-        order_by="analysis_date", desc=True,
+        order_by=["analysis_date"], desc=True,
         chart={"kind": "heatmap", "row": "analysis_date"},
     )
     # --- tab 3: model confidence ---
     r.add(
         "Confidence by date & sentiment (line chart data)",
         gold.confidence_by_date_sentiment(silver), limit=9,
-        order_by="date", desc=True,
+        order_by=["date", "sentiment"], desc=True,
         chart={  # px.line confidence (dashboard.py:469-483)
             "kind": "line_by", "x": "date",
             "series": "sentiment", "y": "avg_confidence",
@@ -227,12 +234,12 @@ def build_sections(spark, sf_dir: str, start: str | None, end: str | None) -> Re
     )
     r.add(
         "Confidence histogram bins (go.Histogram data)",
-        analytics.histogram_bins(silver), limit=12, order_by="bin",
+        analytics.histogram_bins(silver), limit=12, order_by=["bin", "sentiment"],
         chart={"kind": "bar", "x": ["sentiment", "bin"], "y": "n"},
     )
     r.add(
         "Collected confidences per sentiment (box plot data)",
-        analytics.collect_confidences(silver), limit=4,
+        analytics.collect_confidences(silver), limit=4, order_by=["sentiment"],
     )
     # --- tab 4: recent headlines ---
     r.add("Most recent headlines", analytics.recent_headlines(silver, 8), limit=8)
