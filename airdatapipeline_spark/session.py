@@ -42,16 +42,9 @@ def get_spark(app_name: str = "airdatapipeline_spark", master: str | None = None
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow on: fast toPandas()/createDataFrame and Pandas-UDF transfer.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # UI off by default (tests spin many short sessions); bench.py sets
-        # SPARK_GRAFT_UI=1 to expose the status REST API it reads per-query
-        # shuffle/input volumes from. retainedStages is raised alongside so
-        # end-minus-start stage-total deltas never lose evicted stages
-        # mid-suite (only consulted when the UI is on).
-        .config(
-            "spark.ui.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_UI") == "1" else "false",
-        )
-        .config("spark.ui.retainedStages", "100000")
+        # UI off: nothing reads it. Per-query job and stage metrics come
+        # from the status tracker and status store, which run without it.
+        .config("spark.ui.enabled", "false")
         # events.parquet stores TIMESTAMP(NANOS) which the vectorized reader
         # rejects; read nanos as long and convert in io.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -4,17 +4,14 @@ The reference is purely scheduled batch (SURVEY.md §2.11) — its
 incremental-by-set-difference pattern is exactly what Structured Streaming's
 file source replaces. These operators replay the events parquet as a stream
 with `availableNow`-style synchronous processing (processAllAvailable), so
-each returns a plain DataFrame the driver/oracle can check:
-
-- tumbling_counts: watermark + 1-hour tumbling window aggregate,
-  `complete` output (all finalized windows; batch-equivalent, so the DuckDB
-  oracle is just date_trunc('hour')).
-- session_counts: session_window(gap) stateful aggregation — the streaming
-  twin of operators/tpch.sessionize_events.
+each returns a plain DataFrame the driver/oracle can check. The windowed
+aggregates (`tumbling_counts_append`, `sliding_counts_append`,
+`session_counts_append`) run in append mode with a watermark, so finalized
+windows are written once to a checkpointed parquet file sink and their
+state is evicted.
 
 On a real cluster the same code points readStream at an arriving-files
-directory (or Kafka) and swaps the memory sink for foreachBatch+MERGE; the
-plan and state management are identical.
+directory (or Kafka); the plan and state management are identical.
 """
 
 from __future__ import annotations
@@ -22,7 +19,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,32 +60,13 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _run_to_table(agg: DataFrame, mode: str) -> DataFrame:
-    """TEST-ONLY HARNESS — never a registered/scale path. Complete-mode
-    memory sink + driver collect: state grows with every window ever
-    seen and the result lives on the driver, both of which die at 100 TB.
-    Registered streaming queries use `_run_append_to_files` (watermark
-    eviction, distributed file sink). tests/test_pipeline.py statically
-    asserts no registry module reaches this harness (VERDICT-r11 #4)."""
-    name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    q = agg.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    spark = agg.sparkSession
-    # materialize before the in-memory sink table goes away
-    return spark.createDataFrame(spark.table(name).collect(), schema=spark.table(name).schema)
-
-
 def _run_append_to_files(flat: DataFrame) -> DataFrame:
     """Run an append-mode streaming plan to a parquet FILE sink (checkpointed,
     exactly-once) and read the committed output back as a batch DataFrame.
 
-    This is the 100 TB shape the memory-sink harness above is not: state is
-    bounded by the watermark (finalized windows are emitted once and
-    EVICTED), output goes to distributed storage, and nothing is collected
-    to the driver. The final no-data micro-batch flushes every window whose
+    This is the 100 TB shape: state is bounded by the watermark (finalized
+    windows are emitted once and EVICTED), output goes to distributed
+    storage, and nothing is collected to the driver. The final no-data micro-batch flushes every window whose
     end <= final watermark (max event time - delay) — verified empirically:
     the boundary is inclusive."""
     out = tempfile.mkdtemp(prefix="stream_sink_")
@@ -113,8 +90,7 @@ def _run_append_to_files(flat: DataFrame) -> DataFrame:
 def tumbling_counts_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows, APPEND output: only watermark-finalized
     windows (end <= max_ts - 10 min) are emitted, then their state is
-    dropped. This is the registered scale path; `tumbling_counts` below is
-    the complete-mode harness twin kept for batch-equivalence tests."""
+    dropped."""
     ev = _event_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
@@ -247,75 +223,6 @@ def clicks_errors_join_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("error_ts").cast("timestamp_ntz").alias("error_ts"),
     )
     return _run_append_to_files(flat)
-
-
-def tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST-ONLY teaching twin (complete-mode memory sink via
-    _run_to_table — unbounded state + driver collect; the registered
-    scale path is `tumbling_counts_append`). 1-hour tumbling-window
-    counts/sums per event_type with a 10-minute
-    watermark. Decimal-exact value sums (deterministic under any trigger
-    cadence / partitioning — the property that matters for exactly-once)."""
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,6)")).alias("dec_value"),
-        )
-    )
-    out = _run_to_table(agg, "complete")
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-        "event_type",
-        "n",
-        F.col("dec_value").cast("double").alias("total_value"),
-    )
-
-
-def session_counts(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -> DataFrame:
-    """TEST-ONLY teaching twin (complete-mode memory sink; registered
-    scale path: `session_counts_append`). Stateful session-window
-    aggregation per user (gap-merged sessions).
-    Streaming twin of the batch lag/cumsum sessionization."""
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-    )
-    out = _run_to_table(agg, "complete")
-    return out.select(
-        "user_id",
-        F.col("w.start").cast("timestamp_ntz").alias("session_start"),
-        "n_events",
-    )
-
-
-def sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST-ONLY teaching twin (complete-mode memory sink; registered
-    scale path: `sliding_counts_append`). 1-hour windows sliding every 30 minutes — each event contributes to
-    exactly 2 overlapping windows (Spark expands this JVM-side via the
-    window() table function, no Python boundary). Completes the window
-    family: tumbling / sliding / session."""
-    ev = _event_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(28,6)")).alias("dec_value"),
-        )
-    )
-    out = _run_to_table(agg, "complete")
-    return out.select(
-        F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-        F.col("w.end").cast("timestamp_ntz").alias("window_end"),
-        "event_type",
-        "n",
-        F.col("dec_value").cast("double").alias("total_value"),
-    )
 
 
 def streaming_enrichment_job(

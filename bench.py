@@ -13,16 +13,10 @@ regression. Sections:
 
 - queries/value — the HEADLINE tier: only plans whose shape survives a
   100x scale-up (equi-join candidate generation, pushed filters, partial
-  aggs). This is the number to compare across rounds. Self-healing under
-  ambient throttle (VERDICT-r11 #1): if the start->post-headline python
-  probe bracket drifts past 1.15, the tier re-runs ONCE in the same
-  invocation and the compact line reports the attempt whose OWN bracket
-  is clean (gate; the retry runs in a warmer process, so a bare
-  min-of-two would bias downward — ADVICE-r12), with the lower window
-  total as the tiebreaker when both or neither bracket is clean (both
-  attempts preserved in BENCH_DETAIL's headline_retry section;
-  `headline_retried`, `headline_attempt_totals` and `headline_reported`
-  mark the line — VERDICT-r12 #3).
+  aggs). This is the number to compare across rounds. It runs once; a
+  window whose start->post-headline python probe drifts past 1.15 is
+  reported as is, with `throttled: true`. Per-query claims are settled
+  by the interleaved A/B (tools/ab_interleaved.py), not by this line.
 - verifier — the quadratic-by-design audit tier (exact brute-force ANN:
   O(N*Q) full-precision scan). It exists to grade the approximate tiers'
   recall, never to run at corpus scale, so its time is reported separately
@@ -31,10 +25,11 @@ regression. Sections:
   compaction, IVF index build, r12: the versioned-table commit chain)
   timed at base and on the 10x replica
   (VERDICT-r5 item 6); detail-only, excluded from the headline total.
-- io — per-headline-query shuffle/input/output byte+record deltas from
-  the status REST API (r8): the measured form of the plan-shape claims
-  (broadcasts don't shuffle, compressed tiers shuffle codes not arrays,
-  filters reach the scan). Bench-only: the session runs with the UI on.
+- io — per-headline-query job, stage, task, input and shuffle counters of
+  the last timed run, read through its job group (perfbench/layers.py,
+  UI off): the measured form of the plan-shape claims (broadcasts don't
+  shuffle, compressed tiers shuffle codes not arrays, filters reach the
+  scan).
 - scaling — every scale-eligible headline query re-measured on a 10x
   replica warehouse (sources/scale.py): empirical time ratios next to the
   10x data ratio, catching any operator whose constant factors hide
@@ -53,6 +48,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench import layers  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCALE_COPIES = int(os.environ.get("SPARK_GRAFT_SCALE_COPIES", "10"))
@@ -280,6 +277,14 @@ N_RUNS = 3  # r6: median-of-3 (VERDICT-r5 item 2 — make regressions
 # ambient noise that best-of-2 could not separate from a plan change).
 
 
+def release(spark) -> None:
+    """Drop the SQL cache and unpersist every persisted RDD, so the next
+    timed run reads no cache an earlier run or query left behind."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+
 def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[float]:
     """Force FULL execution of every projected column with a noop write —
     count() lets Catalyst prune projected expressions (map-heavy queries
@@ -287,79 +292,26 @@ def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[
     executor-side (r2 re-baseline). Returns the sorted per-run times; the
     first run pays one-time Janino codegen, so the MEDIAN (not min, not
     mean) is the headline statistic, robust to one slow outlier. Each run
-    starts with the SQL cache cleared and every persisted RDD released, so
-    no run reuses a cache an earlier run or query left.
+    starts with `release(spark)`.
 
-    When `io_sink` is given, the LAST run is bracketed by REST stage-total
-    snapshots (`_stage_totals`) and the delta recorded at io_sink[io_key] —
-    per-query shuffle/input volumes for BENCH_DETAIL's io section. The
-    snapshots happen between runs, never inside a timed window's plan, and
-    cost ~ms against multi-second runs."""
+    When `io_sink` is given, the LAST run (build included) runs under its
+    own job group and io_sink[io_key] gets that group's counters
+    (`layers.group_counters`: jobs, stages, tasks, input and shuffle MB,
+    ...), read from the status store after the run, with the UI off."""
+    sc = spark.sparkContext
     times = []
     for i in range(n):
-        spark.catalog.clearCache()
-        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist(True)
-        want_io = io_sink is not None and i == n - 1
-        before = _stable_stage_totals(spark) if want_io else None
+        release(spark)
+        group = f"bench:{io_key}" if io_sink is not None and i == n - 1 else None
+        layers.set_group(sc, group)
         t0 = time.time()
-        df = fn()
-        df.write.format("noop").mode("overwrite").save()
+        fn().write.format("noop").mode("overwrite").save()
         times.append(round(time.time() - t0, 3))
-        if want_io and before is not None:
-            after = _stable_stage_totals(spark)
-            if after is not None:
-                io_sink[io_key] = {k: after[k] - before[k] for k in after}
+        layers.set_group(sc, None)
+        if group:
+            layers.drain(sc)
+            io_sink[io_key] = {k: round(v, 3) for k, v in layers.group_counters(sc, group).items()}
     return sorted(times)
-
-
-def _stage_totals(spark) -> dict[str, int] | None:
-    """Cumulative stage-metric totals from the status REST API (requires
-    the UI, which bench enables via SPARK_GRAFT_UI=1). Per-query deltas of
-    these totals turn the scale claims ("the candidate stage shuffles
-    8-byte codes, not arrays"; "filters reach the scan") into recorded
-    numbers: shuffle bytes vs input bytes, per headline query. Best-effort:
-    returns None (and the io section self-reports why) when the UI is off."""
-    try:
-        sc = spark.sparkContext
-        url = sc.uiWebUrl
-        if not url:
-            return None
-        import urllib.request
-
-        with urllib.request.urlopen(
-            f"{url}/api/v1/applications/{sc.applicationId}/stages?status=complete",
-            timeout=10,
-        ) as resp:
-            stages = json.load(resp)
-        keys = {
-            "input_bytes": "inputBytes",
-            "output_bytes": "outputBytes",
-            "shuffle_read_bytes": "shuffleReadBytes",
-            "shuffle_write_bytes": "shuffleWriteBytes",
-            "shuffle_write_records": "shuffleWriteRecords",
-        }
-        return {k: sum(int(s.get(v) or 0) for s in stages) for k, v in keys.items()}
-    except Exception:  # noqa: BLE001 - metrics must never fail the bench
-        return None
-
-
-def _stable_stage_totals(spark) -> dict[str, int] | None:
-    """The REST store drains Spark's ASYNC status-listener queue: totals
-    read immediately after an action can miss the run's final stages
-    (under-counting this query's delta AND misattributing the laggards to
-    the next one). Poll until two consecutive reads agree (~2s cap) so
-    each snapshot brackets a settled store."""
-    prev = _stage_totals(spark)
-    if prev is None:
-        return None
-    for _ in range(20):
-        time.sleep(0.1)
-        cur = _stage_totals(spark)
-        if cur == prev:
-            return cur
-        prev = cur
-    return prev
 
 
 def _median(samples: list[float]) -> float:
@@ -369,60 +321,14 @@ def _median(samples: list[float]) -> float:
     return samples[(len(samples) - 1) // 2]
 
 
-def _pick_retry_attempt(
-    drift1: float | None, drift2: float | None, total1: float, total2: float
-) -> tuple[bool, str]:
-    """Which headline attempt to report after a throttle-flagged retry
-    (ADVICE-r12): the probe bracket is the GATE — if exactly one attempt's
-    own bracket is clean (py_drift <= 1.15), report that attempt — and the
-    lower window total only the TIEBREAKER (both/neither clean). Returns
-    (report_attempt2, rule). Extracted so the rule is unit-testable
-    without running the tier."""
-    clean1 = bool(drift1 is not None and drift1 <= 1.15)
-    clean2 = bool(drift2 is not None and drift2 <= 1.15)
-    if clean1 != clean2:
-        return clean2, "bracket-gate"
-    return bool(total2 < total1), "total-tiebreak"
-
-
-def _calibrate(spark) -> dict[str, float]:
-    """Fixed-workload machine-speed probe on the warm session: a pure-Python
-    loop (driver/worker CPU) and a JVM whole-stage-codegen range-sum
-    (executor CPU). `id % 1000000` keeps the sum inside a long under ANSI
-    arithmetic (sum(id*id) over this range overflows).
-
-    The timed probe is preceded by UNTIMED ramp runs of the same workload:
-    measured on this host, a fresh session reads 5.2s -> 0.62s -> 0.41s ->
-    0.41s for consecutive probes — the first two carry JIT/thread-pool
-    ramp, not host speed — and bench's start-of-suite probe repeatedly
-    landed on a partially-ramped JVM (0.42-0.46 vs steady 0.31), tripping
-    a FALSE `throttled` flag (drift ~1.4) on runs whose query medians were
-    the fastest of the night. The end probe always ran hot, so the ramp
-    made start/end incomparable. Two FIXED ramp runs were not enough
-    either (r10: a start probe still read 0.382 vs 0.156 at suite end —
-    jvm_drift 2.45 on a py_drift-1.02 window), so the ramp now runs TO
-    CONVERGENCE: repeat untimed until two consecutive runs agree within
-    10% (1 initial + up to 9 convergence probes, then 1 timed run — at
-    most 11 executions), which is the operational definition of 'a WARM
-    session' the probe's contract states — for both brackets
-    symmetrically."""
+def _calibrate() -> dict[str, float]:
+    """Fixed-workload machine-speed probe: a pure-Python loop. It has no
+    JIT, so its value is stable within one process, and it shares the
+    host with the executors, so a start/end ratio away from 1 means the
+    host got slower or faster mid-run."""
     t0 = time.time()
     _ = sum(i * i for i in range(5_000_000))
-    py_cal = round(time.time() - t0, 3)
-
-    def jvm_once() -> float:
-        t = time.time()
-        spark.range(200_000_000).selectExpr("sum(id % 1000000)").collect()
-        return time.time() - t
-
-    prev = jvm_once()  # untimed ramp to convergence (see docstring)
-    for _ in range(9):
-        cur = jvm_once()
-        if abs(cur - prev) <= 0.1 * max(cur, prev):
-            break
-        prev = cur
-    jvm_cal = round(jvm_once(), 3)
-    return {"python_loop_s": py_cal, "jvm_range_sum_s": jvm_cal}
+    return {"python_loop_s": round(time.time() - t0, 3)}
 
 
 WRITE_RUNS = 3  # same median-of-3 + dispersion treatment as the headline
@@ -706,11 +612,6 @@ def _bpe_production_tier(spark) -> dict:
 
 
 def main() -> None:
-    # The bench session runs with the UI on: its status REST API is where
-    # the per-query io section (shuffle/input volumes) comes from. Tests
-    # and the driver's query sessions keep the default (off).
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
-
     import __spark_entry__ as entrymod
     from airdatapipeline_spark.session import get_spark
 
@@ -744,13 +645,11 @@ def main() -> None:
     # the r9 driver window showed the FIRST benched queries (flagship 1.57x,
     # tpch_q1 1.79x, a2_w1 1.51x, j1 1.45x normalized) taxed by residual
     # JIT ramp — their code had an empty diff and the rest of the suite sat
-    # at ~1.0x, while jvm_drift read 2.055 within the run. The generic
-    # range-sum/footer warm-up above matures the interpreter tiers but not
-    # the join/agg/window codegen paths the first real plans compile; one
-    # full untimed lap of the leading headline queries runs those exact
-    # shapes so the start probe AND the first timed queries read a warm JVM.
-    # TWO laps (r10: one lap still left the start jvm probe at 2.4x its
-    # suite-end value — C2 tiers need repetition, not just coverage).
+    # at ~1.0x. The generic range-sum/footer warm-up above matures the
+    # interpreter tiers but not the join/agg/window codegen paths the first
+    # real plans compile; untimed laps of the leading headline queries run
+    # those exact shapes so the first timed queries read a warm JVM. TWO
+    # laps (r10: C2 tiers need repetition, not just coverage).
     for _lap in range(2):
         for name in HEADLINE[:6]:
             if name != "flagship_pipeline" and name not in queries:
@@ -758,143 +657,35 @@ def main() -> None:
             make_fn(name, SF_DIR)().write.format("noop").mode("overwrite").save()
     sys.stderr.write("[warmup] front-of-suite laps done\n")
 
-    # Machine-speed calibration: two fixed workloads (one pure-Python, one
-    # JVM whole-stage-codegen) timed on the warm session. Query timings
-    # only compare fairly across runs/rounds when the HOST was equally
-    # fast — identical-HEAD runs have been observed to drift uniformly
-    # ~1.3x under ambient host throttling (r7) — so the bench carries its
-    # own reference IN THE COMPACT LINE (VERDICT-r7 item 1): probes at
-    # suite start AND end bracket the run, so a mid-run throttle window is
-    # visible, and a `throttled` flag (probe drift > 1.15 in either
-    # direction) marks the whole reading untrustworthy for cross-round
-    # comparison. Divide two runs' query medians by their jvm-probe ratio
-    # before attributing a delta to a plan.
-    def _py_drift(cal_a: dict, cal_b: dict) -> float | None:
-        pair = sorted((cal_a["python_loop_s"], cal_b["python_loop_s"]))
-        return round(pair[1] / pair[0], 3) if pair[0] > 0 else None
-
-    def run_headline_tier() -> tuple[dict, dict, dict]:
-        t: dict[str, float] = {}
-        d: dict[str, list[float]] = {}
-        io: dict[str, dict[str, int]] = {}
-        for name in HEADLINE:
-            if name != "flagship_pipeline" and name not in queries:
-                continue
-            runs = _run_samples(
-                make_fn(name, SF_DIR), spark=spark, io_sink=io, io_key=name
-            )
-            d[name] = runs
-            t[name] = _median(runs)
-            sys.stderr.write(f"{name}: {t[name]}s (runs {runs}) io {io.get(name)}\n")
-        return t, d, io
-
-    cal_start = _calibrate(spark)
+    # Machine-speed calibration (VERDICT-r7 item 1): identical-HEAD runs
+    # have drifted uniformly ~1.3x under ambient host throttling (r7), so
+    # the compact line carries a python-probe reading at suite start,
+    # after the headline tier and at suite end. `throttled` (probe drift >
+    # 1.15 in either direction) marks a reading as untrustworthy for
+    # cross-round comparison.
+    cal_start = _calibrate()
     sys.stderr.write(f"[calibration/start] {cal_start}\n")
 
-    timings, dispersion, io_by_query = run_headline_tier()
+    timings: dict[str, float] = {}
+    dispersion: dict[str, list[float]] = {}
+    io_by_query: dict[str, dict[str, float]] = {}
+    for name in HEADLINE:
+        if name != "flagship_pipeline" and name not in queries:
+            continue
+        runs = _run_samples(
+            make_fn(name, SF_DIR), spark=spark, io_sink=io_by_query, io_key=name
+        )
+        dispersion[name] = runs
+        timings[name] = _median(runs)
+        sys.stderr.write(f"{name}: {timings[name]}s (runs {runs}) io {io_by_query.get(name)}\n")
 
-    # post-headline probe (r11): the compact line's value/queries ARE the
-    # headline tier, but the end probe used to run after ~20 more minutes
-    # of replica/writes/stress churn in the SAME driver process — and read
-    # a stable ~1.18x on two otherwise-clean r11 windows (process-state
-    # tax: heap/GC pressure from the write tiers slows the pure-Python
-    # loop too, not just the jvm probe). The headline `throttled` flag now
-    # keys on the start -> post-headline bracket, which is the window the
-    # reported numbers actually ran in; the suite-end probe stays recorded
-    # so contamination of the LATER tiers remains visible (their own
-    # sections quote per-run spreads).
-    cal_headline = _calibrate(spark)
+    # post-headline probe (r11): the headline `throttled` flag keys on the
+    # start -> post-headline bracket, the window the reported numbers ran
+    # in. The suite-end probe ran after ~20 more minutes of replica/writes
+    # churn and read a stable ~1.18x process-state tax on clean windows;
+    # it stays recorded so contamination of the LATER tiers is visible.
+    cal_headline = _calibrate()
     sys.stderr.write(f"[calibration/post-headline] {cal_headline}\n")
-
-    # Self-healing under throttle (VERDICT-r11 item 1): BENCH_r11's
-    # official window ran inside an ambient-throttle bracket (py_drift
-    # 1.306) while the same code read 29% faster in a clean window — the
-    # flag worked, but the round's headline artifact still shipped
-    # noise-inflated numbers that a reader takes at face value. When the
-    # start -> post-headline bracket flags, re-run the headline tier ONCE
-    # in this same invocation, bracketed by its own probes, and report
-    # whichever attempt ran in the cleaner bracket; BOTH attempts stay
-    # recorded in BENCH_DETAIL's headline_retry section for honesty. One
-    # retry only: a host that is still throttled twice in a row is
-    # genuinely busy, and the flag (keyed on the chosen bracket) then
-    # correctly stays true.
-    headline_retry: dict | None = None
-    drift1 = _py_drift(cal_start, cal_headline)
-    # SPARK_GRAFT_FORCE_HEADLINE_RETRY=1 exercises the retry path on a
-    # clean host (there is no honest way to produce ambient throttle on
-    # demand); the recorded drifts stay the real measurements
-    force_retry = os.environ.get("SPARK_GRAFT_FORCE_HEADLINE_RETRY") == "1"
-    if (drift1 and drift1 > 1.15) or force_retry:
-        sys.stderr.write(
-            f"[headline-retry] start->post-headline py_drift {drift1} > 1.15; "
-            "re-running the headline tier once in a fresh probe bracket\n"
-        )
-        cal_start2 = _calibrate(spark)
-        sys.stderr.write(f"[calibration/retry-start] {cal_start2}\n")
-        timings2, dispersion2, io2 = run_headline_tier()
-        cal_headline2 = _calibrate(spark)
-        sys.stderr.write(f"[calibration/retry-post-headline] {cal_headline2}\n")
-        drift2 = _py_drift(cal_start2, cal_headline2)
-        attempt1 = {
-            "py_drift": drift1,
-            "start": cal_start,
-            "post_headline": cal_headline,
-            "total": round(sum(timings.values()), 3),
-            "queries": timings,
-            "runs": dispersion,
-        }
-        attempt2 = {
-            "py_drift": drift2,
-            "start": cal_start2,
-            "post_headline": cal_headline2,
-            "total": round(sum(timings2.values()), 3),
-            "queries": timings2,
-            "runs": dispersion2,
-        }
-        # Selection rule (r13, ADVICE-r12): the probe BRACKET is the gate,
-        # the window total only the tiebreaker. r12 picked min(total)
-        # outright, but attempt2 always runs in a warmer process (JIT
-        # tiers, OS page cache — the jvm probe improves 5.2s -> 0.073s
-        # over one session), so warm-up deflates attempt2 for reasons
-        # that are NOT ambient noise and min-of-two systematically biased
-        # the flagged-window headline downward. Now: if exactly one
-        # attempt's own bracket is clean (py_drift <= 1.15), report that
-        # attempt regardless of total; if both (or neither) bracket is
-        # clean, fall back to the lower total (ambient contention only
-        # adds time, and 3x46 samples beat a 2-point bracket at spotting
-        # a mid-window burst — the r12 observation). Both attempts stay
-        # recorded here, and the compact line carries both totals plus
-        # which was reported (VERDICT-r12 #3) so the drift is auditable
-        # without opening this file.
-        retry_chosen, rule = _pick_retry_attempt(
-            drift1, drift2, attempt1["total"], attempt2["total"]
-        )
-        headline_retry = {
-            "note": (
-                "the first headline pass ran inside a flagged probe "
-                "bracket (py_drift > 1.15), so the tier was re-run once "
-                "in this invocation; the compact line and the sections "
-                "above report the attempt whose OWN bracket is clean "
-                "(gate), falling back to the lower window total when "
-                "both or neither bracket is clean (tiebreak). The gate "
-                "exists because attempt2 runs in a warmer process (JIT/"
-                "page cache), so a bare min-of-two would bias the "
-                "flagged-window headline downward (ADVICE-r12); the "
-                "other attempt is preserved here and both totals ride "
-                "the compact line (VERDICT-r11 #1, VERDICT-r12 #3)"
-            ),
-            "rule": rule,
-            "attempt1": attempt1,
-            "attempt2": attempt2,
-            "reported": "attempt2" if retry_chosen else "attempt1",
-        }
-        if retry_chosen:
-            timings, dispersion, io_by_query = timings2, dispersion2, io2
-            cal_start, cal_headline = cal_start2, cal_headline2
-        sys.stderr.write(
-            f"[headline-retry] attempt1 py_drift {drift1}, attempt2 py_drift "
-            f"{drift2}; reporting {headline_retry['reported']}\n"
-        )
 
     verifier: dict[str, float] = {}
     for name in VERIFIER:
@@ -1000,25 +791,15 @@ def main() -> None:
     # end-of-suite probe: brackets the run so a mid-suite throttle window
     # is visible (a single start-of-run sample cannot attribute third-run
     # outliers in `dispersion` to host drift)
-    cal_end = _calibrate(spark)
+    cal_end = _calibrate()
     sys.stderr.write(f"[calibration/end] {cal_end}\n")
-    jvm_pair = sorted((cal_start["jvm_range_sum_s"], cal_headline["jvm_range_sum_s"]))
-    py_pair = sorted((cal_start["python_loop_s"], cal_headline["python_loop_s"]))
-    jvm_drift = round(jvm_pair[1] / jvm_pair[0], 3) if jvm_pair[0] > 0 else None
-    py_drift = round(py_pair[1] / py_pair[0], 3) if py_pair[0] > 0 else None
-    py_full = sorted((cal_start["python_loop_s"], cal_end["python_loop_s"]))
-    py_drift_full = round(py_full[1] / py_full[0], 3) if py_full[0] > 0 else None
-    # The flag keys on the PYTHON probe: measured across one session the
-    # JVM probe's value keeps improving with JVM age (5.2s -> 0.62 ->
-    # 0.41 -> ... -> 0.073 by suite end — deeper JIT tiers reached via
-    # accumulated executor activity), so its start/end ratio is a
-    # JVM-maturity meter, not a host meter, and it flagged the FASTEST
-    # runs of a night as throttled. The pure-Python loop is
-    # invocation-stable (no JIT) and shares the host/cgroup with the
-    # executors, and it is the probe that actually caught the one real
-    # mid-suite contamination window observed (py_drift 1.199 on a run
-    # whose tail queries read 3-7x slow while both jvm probes were fast).
-    # jvm_drift stays recorded as informational.
+
+    def drift(cal_a: dict, cal_b: dict) -> float | None:
+        lo, hi = sorted((cal_a["python_loop_s"], cal_b["python_loop_s"]))
+        return round(hi / lo, 3) if lo > 0 else None
+
+    py_drift = drift(cal_start, cal_headline)
+    py_drift_full = drift(cal_start, cal_end)
     throttled = bool(py_drift and py_drift > 1.15)
     # throttled_late (ADVICE-r11): ambient throttling that begins AFTER
     # the headline bracket — during the verifier/scaling/writes tiers —
@@ -1033,55 +814,28 @@ def main() -> None:
         "start": cal_start,
         "post_headline": cal_headline,
         "end": cal_end,
-        "jvm_drift": jvm_drift,
         "py_drift": py_drift,
         "py_drift_full": py_drift_full,
         "throttled": throttled,
         "throttled_late": throttled_late,
-        "headline_retried": headline_retry is not None,
     }
-    if headline_retry is not None:
-        # VERDICT-r12 #3: both window totals + the choice ride the compact
-        # line so the retry's drift is auditable without BENCH_DETAIL.
-        calibration_line["headline_attempt_totals"] = [
-            headline_retry["attempt1"]["total"],
-            headline_retry["attempt2"]["total"],
-        ]
-        calibration_line["headline_reported"] = headline_retry["reported"]
-        calibration_line["headline_retry_rule"] = headline_retry["rule"]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     detail = {
         "calibration": {
             "note": (
-                "fixed-workload machine-speed reference (pure-Python loop "
-                "+ JVM codegen range-sum on the warm session), probed at "
-                "suite START, POST-HEADLINE and END — same dict as the "
-                "compact line's `calibration` key. Compare two runs' query "
-                "medians only after dividing by their python-probe ratio: "
-                "identical-HEAD runs drift uniformly ~1.3x under ambient "
-                "host throttling (observed r7). throttled = start/"
-                "post-headline PYTHON-probe drift > 1.15 (either "
-                "direction) — the bracket the reported headline numbers "
-                "actually ran in (r11: the old full-suite bracket read a "
-                "stable ~1.18x process-state tax from the write/stress "
-                "tiers that run AFTER the headline tier, flagging two "
-                "clean headline windows; that full drift stays recorded "
-                "as py_drift_full, and throttled_late flags a run whose "
-                "LATER tiers drifted past 1.15 even though the headline "
-                "bracket was clean — ADVICE-r11). When the headline "
-                "bracket flags, the tier is re-run once in the same "
-                "invocation and the attempt whose own bracket is clean "
-                "is reported (total as tiebreaker when both or neither "
-                "is clean — the retry runs warmer, so min-of-two alone "
-                "would bias downward; ADVICE-r12) (headline_retried + "
-                "headline_attempt_totals on the compact line; "
-                "both attempts preserved in the headline_retry section — "
-                "VERDICT-r11 #1, VERDICT-r12 #3). The jvm probe "
-                "is recorded as informational only — its value improves "
-                "with JVM age across a session (measured 5.2s -> 0.073s "
-                "start to end), so its drift reflects JIT maturity, not "
-                "host speed."
+                "fixed-workload machine-speed reference (a pure-Python "
+                "loop), probed at suite START, POST-HEADLINE and END — same "
+                "dict as the compact line's `calibration` key. Compare two "
+                "runs' query medians only after dividing by their probe "
+                "ratio: identical-HEAD runs drift uniformly ~1.3x under "
+                "ambient host throttling (observed r7). throttled = start/"
+                "post-headline probe drift > 1.15 (either direction) — the "
+                "bracket the reported headline numbers ran in; the headline "
+                "tier runs once and a flagged window is reported as is. "
+                "py_drift_full is the start/end drift, and throttled_late "
+                "flags a run whose LATER tiers drifted past 1.15 even though "
+                "the headline bracket was clean (ADVICE-r11)."
             ),
             **calibration_line,
         },
@@ -1106,21 +860,19 @@ def main() -> None:
         },
         "io": {
             "note": (
-                "per-headline-query stage-metric deltas (status REST API, "
-                "bracketing the final timed run): input/output bytes at the "
-                "sources/sinks, shuffle read/write bytes and records moved "
-                "between stages. This is the measured form of the plan "
-                "claims — a query whose shuffle_write_bytes rivals its "
-                "input_bytes is reshuffling the input (candidate for "
+                "per-headline-query counters of the final timed run, build "
+                "included, summed over the stages of its job group "
+                "(perfbench/layers.py group_counters, read from the status "
+                "store with the UI off): jobs, stages, tasks, executor run/"
+                "CPU/GC seconds, input MB at the sources, shuffle write/read "
+                "MB between stages and spill MB. This is the measured form "
+                "of the plan claims — a query whose shuffle_write_mb rivals "
+                "its input_mb is reshuffling the input (candidate for "
                 "broadcast/bucketing/pre-aggregation); compressed-domain "
-                "tiers should shuffle codes, not arrays. Snapshots poll "
-                "the async status store to quiescence before bracketing, "
-                "so deltas are settled per-query totals; empty when the "
-                "UI/REST is unavailable."
+                "tiers should shuffle codes, not arrays."
             ),
             "queries": io_by_query,
         },
-        "headline_retry": headline_retry,
         "scaling": scaling,
         "writes": writes,
         "writes_distinct": writes_distinct,

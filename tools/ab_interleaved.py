@@ -5,9 +5,12 @@ page cache, background load) moves slower than minutes, so alternating
 rev-A / rev-B trials cancels it out of the A:B ratio — the same reason
 the writes tier interleaves base/big passes. Each trial is a FRESH
 subprocess + JVM running the query from a detached `git worktree` of that
-revision: 1 untimed warm lap, then median-of-3 timed runs (the bench's
-per-query statistic). Every lap starts with the SQL cache cleared and
-every persisted RDD released, so no lap reuses an earlier lap's cache.
+revision: 1 untimed warm lap, then median-of-3 timed runs, each forced
+with a noop write (the bench's per-query statistic and forcing, so the
+ratio times the plan bench reports). Every lap starts with the SQL cache
+cleared and every persisted RDD released, so no lap reuses an earlier
+lap's cache. The trial script repeats these few lines of bench.py
+instead of importing it, because it runs against other revisions' trees.
 The printed verdict is the median-of-pairs ratio with per-trial
 spreads, so a real plan regression separates from dispersion.
 
@@ -40,12 +43,15 @@ def release():  # no lap may read a cache an earlier lap left behind
     for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
         rdd.unpersist(True)
 
+def force():  # bench.py's forcing: a noop write runs every projected column
+    fn(spark, {sf!r}).write.format("noop").mode("overwrite").save()
+
 release()
-fn(spark, {sf!r}).collect()  # untimed warm lap (JIT/thread-pool ramp)
+force()  # untimed warm lap (JIT/thread-pool ramp)
 ts = []
 for _ in range(3):
     release()
-    t = time.time(); fn(spark, {sf!r}).collect(); ts.append(time.time() - t)
+    t = time.time(); force(); ts.append(time.time() - t)
 print("ABRESULT", sorted(ts)[1], min(ts), max(ts))
 """
 

@@ -13,6 +13,9 @@ For each query name (or --all-heavy for the round's shortlist):
   exec1_s    first noop-forced run (pays Janino codegen for this plan)
   exec2_s    second noop-forced run (steady state; codegen cache warm)
 
+Both runs start with `bench.release` (SQL cache and persisted RDDs
+dropped), so run 2 reads nothing run 1 cached.
+
 Usage: python tools/phase_profile.py [sf_dir] q1 q2 ...
 """
 
@@ -52,6 +55,7 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
     from airdatapipeline_spark.session import get_spark
+    from bench import release
 
     spark = get_spark("phase_profile")
     queries = entrymod.queries()
@@ -72,6 +76,7 @@ def main() -> None:
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"profile:{name}")
+        release(spark)
         t0 = time.time()
         df = fn(name)()
         t1 = time.time()
@@ -80,6 +85,8 @@ def main() -> None:
         t2 = time.time()
         df.write.format("noop").mode("overwrite").save()
         t3 = time.time()
+        release(spark)
+        t3r = time.time()
         df2 = fn(name)()  # rebuild so run 2 matches bench methodology
         t4 = time.time()
         df2.write.format("noop").mode("overwrite").save()
@@ -88,7 +95,7 @@ def main() -> None:
             "build_s": round(t1 - t0, 3),
             "plan_s": round(t2 - t1, 3),
             "exec1_s": round(t3 - t2, 3),
-            "rebuild_s": round(t4 - t3, 3),
+            "rebuild_s": round(t4 - t3r, 3),
             "exec2_s": round(t5 - t4, 3),
         }
         sys.stderr.write(f"{name}: {out[name]}\n")

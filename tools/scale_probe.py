@@ -14,8 +14,9 @@ two shapes VERDICT-r11 named riskiest:
 
 Only the tables the probed queries scan are replicated (events,
 documents), so the 100x build does not pay for 60M unused lineitem rows.
-Timing protocol matches bench.py: noop-forced, median of 3, ascending
-tiers in one warm session, calibration probes bracketing the run.
+Timing protocol is bench.py's own (`_run_samples` + `_median`):
+noop-forced, caches released before every run, median of 3, ascending
+tiers in one warm session.
 
 Usage: python tools/scale_probe.py [--copies 10,30,100] [query ...]
 Writes one JSON line to stdout; paste the table into MEASURED.md.
@@ -26,23 +27,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PROBE_TABLES = ("events", "documents")
 DEFAULT_QUERIES = ("ev_range_errors_near_clicks", "text_snapshot_drift_by_source")
-
-
-def _median3(fn) -> tuple[float, list[float]]:
-    runs = []
-    for _ in range(3):
-        t0 = time.time()
-        fn().write.format("noop").mode("overwrite").save()
-        runs.append(round(time.time() - t0, 3))
-    runs.sort()
-    return runs[1], runs
 
 
 def main() -> None:
@@ -56,6 +46,7 @@ def main() -> None:
     from airdatapipeline_spark.registry import QUERIES
     from airdatapipeline_spark.session import get_spark
     from airdatapipeline_spark.sources.scale import build_replica_warehouse
+    from bench import _median, _run_samples
 
     spark = get_spark("scale_probe")
     base_dir = os.path.join(
@@ -78,7 +69,8 @@ def main() -> None:
     for q in queries:
         rows = {}
         for c, d in sorted(tiers.items()):
-            med, runs = _median3(lambda: QUERIES[q](spark, d))
+            runs = _run_samples(lambda: QUERIES[q](spark, d), spark)
+            med = _median(runs)
             rows[str(c)] = {"median_s": med, "runs": runs}
             sys.stderr.write(f"{q} x{c}: {med}s (runs {runs})\n")
         base = rows["1"]["median_s"]
