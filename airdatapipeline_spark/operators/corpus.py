@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .text import tokens_col
+from .text import hash56, tokens_col
 
 # Shard layout: documents are laid end-to-end in seeded-hash order and cut
 # into SHARD_TOKENS-budget windows. 2048 tokens ≈ a handful of shards at the
@@ -57,14 +57,11 @@ VOCAB_HEAD_K = 256  # Zipf head broadcast size for the frequency join-back
 
 
 def _shard_hkey() -> F.Column:
-    """56-bit seeded shuffle key: conv(md5('shard:'||doc_id)[0:14], 16, 10).
-    Content-addressed like every selection hash in this repo (text.py
-    `_hash_bucket`), so shard membership is engine/partitioning-invariant;
-    the 'shard:' salt decorrelates it from the train/val and mix hashes."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))), 1, 14), 16, 10)
-        .cast("long")
-    )
+    """56-bit seeded shuffle key: hash56('shard:'||doc_id). Content-
+    addressed like every selection hash in this repo (text.py `hash56`),
+    so shard membership is engine/partitioning-invariant; the 'shard:'
+    salt decorrelates it from the train/val and mix hashes."""
+    return hash56(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
 
 
 def shard_assignments(
@@ -1233,9 +1230,8 @@ def content_hash_sum(text_col: str = "text") -> F.Column:
     int64 sum silently wrapped past ~256 docs/group; ADVICE-r5). The DuckDB
     twin is `CAST(SUM(chash) % {HASH_SUM_MOD} AS BIGINT)` (HUGEINT sum is
     exact there)."""
-    chash = F.conv(F.substring(F.md5(text_col), 1, 14), 16, 10).cast("long")
     return F.pmod(
-        F.sum(chash.cast("decimal(38,0)")), F.lit(HASH_SUM_MOD).cast("decimal(38,0)")
+        F.sum(hash56(text_col).cast("decimal(38,0)")), F.lit(HASH_SUM_MOD).cast("decimal(38,0)")
     ).cast("long")
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..io import load_table
-from .text import tokens_col
+from .text import hash56, tokens_col
 
 N_MINHASH = 8  # minhash functions; banded 2 per band → 4 LSH buckets
 
@@ -112,9 +112,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _signatures(docs: DataFrame) -> DataFrame:
     """minhash_signatures over a documents frame."""
     sh = _shingles(docs)
-    h = F.conv(F.substring(F.md5("shingle"), 1, 14), 16, 10).cast("long") % F.lit(
-        1073741824
-    )
+    h = hash56("shingle") % F.lit(1073741824)
     aggs = [
         F.min((F.lit(MINHASH_A[j]) * h + F.lit(MINHASH_B[j])) % F.lit(MINHASH_P)).alias(
             f"h{j}"

@@ -16,16 +16,15 @@ Two surfaces:
   z-order blocks vs a d1-only linear sort — with STATIC key-range file
   assignment (``z div blockwidth``): a pure map-side integer expression,
   no global window / single-partition sort anywhere (the assignment is
-  what ``repartitionByRange`` + ``sortWithinPartitions`` produce
-  physically, expressed deterministically so DuckDB replays it
+  what the physical write below produces, expressed so DuckDB replays it
   bit-for-bit). Emits per-file min/max spans of both dimensions and the
   layout-level expected fraction of files a uniform point filter touches
   on each dimension — the pruning economics, value-hashed.
-- the PHYSICAL proof lives in tests/test_layout.py: the same z expression
-  drives a real ``repartitionByRange(z).sortWithinPartitions(z)`` parquet
-  write, and SQLMetrics show a two-dimensional filter's post-pushdown
-  ``scan_rows`` collapsing on the z-layout while the d1-sorted layout
-  reads ~everything for a d2 filter.
+- the PHYSICAL proof lives in tests/test_layout.py: the same static file
+  assignment drives a real ``repartitionById(z div block)``
+  + ``sortWithinPartitions(z)`` parquet write, and SQLMetrics show a
+  two-dimensional filter's post-pushdown ``scan_rows`` collapsing on the
+  z-layout while the d1-sorted layout reads ~everything for a d2 filter.
 
 Bit interleaving is pure integer arithmetic (div/mod/multiply — the
 engines' shared portable subset; no engine-specific bit intrinsics), so
@@ -149,24 +148,31 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def write_zorder_layout(
-    lineitem_df: DataFrame, path: str, n_files: int = N_FILES
-) -> None:
-    """The PHYSICAL z-order write: range-partition on z (sampled
-    boundaries — the cluster-scale path; the simulation above uses static
-    boundaries only so the oracle can replay assignment exactly), sort
-    within partitions, one parquet file per partition whose footer
-    min/max stats are narrow in BOTH dimensions."""
-    d1, d2 = zorder_dims()
+def _write_blocked(df: DataFrame, path: str, file_id: str, key: str, n_files: int) -> None:
+    """One parquet file per STATIC key-range block (`file_id`, an integer
+    SQL expression in [0, n_files)), sorted on `key` within it: the file
+    assignment `zorder_layout_stats` simulates, written physically.
+    repartitionById routes each block to its own partition with no
+    sampling, so the files (and their footer stats) are the same on
+    every run; repartitionByRange seeds its boundary sample from the RDD
+    id, so its files depend on how many RDDs the session made before."""
     (
-        lineitem_df.withColumn("d1", d1)
-        .withColumn("d2", d2)
-        .withColumn("z", z_value())
-        .repartitionByRange(n_files, "z")
-        .sortWithinPartitions("z")
+        df.repartitionById(n_files, F.expr(file_id).cast("int"))
+        .sortWithinPartitions(key)
         .write.mode("overwrite")
         .parquet(path)
     )
+
+
+def write_zorder_layout(
+    lineitem_df: DataFrame, path: str, n_files: int = N_FILES
+) -> None:
+    """The PHYSICAL z-order write: z-range blocks sorted on z, one parquet
+    file per block whose footer min/max stats are narrow in BOTH
+    dimensions."""
+    d1, d2 = zorder_dims()
+    z = lineitem_df.withColumn("d1", d1).withColumn("d2", d2).withColumn("z", z_value())
+    _write_blocked(z, path, f"z div {Z_SPACE // n_files}", "z", n_files)
 
 
 def write_linear_layout(
@@ -174,11 +180,5 @@ def write_linear_layout(
 ) -> None:
     """The single-column baseline: identical write, clustered on d1 only."""
     d1, d2 = zorder_dims()
-    (
-        lineitem_df.withColumn("d1", d1)
-        .withColumn("d2", d2)
-        .repartitionByRange(n_files, "d1")
-        .sortWithinPartitions("d1")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    lin = lineitem_df.withColumn("d1", d1).withColumn("d2", d2)
+    _write_blocked(lin, path, f"d1 div {D1_RANGE // n_files}", "d1", n_files)

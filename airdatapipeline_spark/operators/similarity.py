@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..streaming.events import _drain
 
 N_PLANES = 6  # 2^6 = 64 buckets
 
@@ -1122,15 +1123,7 @@ def streaming_index_ingest(
         finally:
             assigned.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(ingest), checkpoint_dir)
 
 
 # --- SQ8 scalar quantization tier --------------------------------------------

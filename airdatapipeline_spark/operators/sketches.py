@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .text import tokens_col
+from .text import hash56, tokens_col
 
 # --- HyperLogLog configuration ----------------------------------------------
 # p=6 -> m=64 registers (std error 1.04/sqrt(64) ~ 13%): small enough that
@@ -79,11 +79,6 @@ KMV_HASH_SPACE = 1 << HLL_HASH_BITS  # 2^56
 # (6 significant bits), so the numerator literal is identical in all
 # engines.
 KMV_EST_NUM = float((KMV_K - 1) * KMV_HASH_SPACE)
-
-
-def _hash56(col: str = "shingle") -> F.Column:
-    """The repo's 56-bit content hash (text._hash_bucket idiom, unmodded)."""
-    return F.conv(F.substring(F.md5(col), 1, 14), 16, 10).cast("long")
 
 
 def _source_shingles_df(docs: DataFrame) -> DataFrame:
@@ -207,7 +202,7 @@ def hll_shingle_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate serial driver job; lineage still truncates at first
     # materialization.
     ssets = sh.distinct().localCheckpoint(eager=False)
-    hashed = ssets.select("source", _hash56().alias("h"))
+    hashed = ssets.select("source", hash56("shingle").alias("h"))
     # The register table (<= sources x 64 rows) is read twice (its own
     # rows + the merged __ALL__ branch), but both branches now re-derive
     # it from the checkpointed distinct set — two tiny in-plan groupBys,
@@ -334,7 +329,7 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the FINAL job instead of two serial driver jobs; lineage still
     # truncates at first materialization.
     ssets = sh.distinct().localCheckpoint(eager=False)
-    hashed = ssets.select("source", _hash56().alias("h"))
+    hashed = ssets.select("source", hash56("shingle").alias("h"))
     # The sketches (<= sources x k rows) are cached before the three reads
     # below (source dim + both sides of the pair-merge) — otherwise each
     # read re-runs the ranked scan of the distinct set.

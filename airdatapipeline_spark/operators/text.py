@@ -36,19 +36,25 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
+def hash56(key: Column | str) -> Column:
+    """THE repo's content hash: conv(md5(key)[0:14], 16, 10), a 56-bit
+    non-negative long, identical in Spark and DuckDB (unlike engine-native
+    hash()). Every reproducible selection/fingerprint builds on it (train/
+    val split, mix sampling, pack bucketing, shard keys, minhash shingles,
+    sketch hashes, content-hash sums). One definition so the formula and
+    its SQL oracle twins can never drift apart; changing it means changing
+    every oracle in lockstep."""
+    return F.conv(F.substring(F.md5(key), 1, 14), 16, 10).cast("long")
+
+
 def _hash_bucket(mod: int, salt: str = "", key: Column | None = None) -> Column:
-    """Content-addressed bucket: conv(md5(salt + key)[0:14], 16, 10) mod
-    `mod` — THE hash idiom for every reproducible selection/fingerprint
-    (train/val split, mix sampling, pack bucketing, the build's doc-level
-    split, the format-roundtrip content fingerprint). `key` defaults to
-    doc_id; pass a Column for compound keys. One definition so the
-    formula and its SQL oracle twins can never drift apart; changing it
-    means changing every oracle in lockstep."""
+    """Content-addressed bucket: hash56(salt + key) mod `mod`. `key`
+    defaults to doc_id; pass a Column for compound keys."""
     if key is None:
         key = F.col("doc_id").cast("string")
     if salt:
         key = F.concat(F.lit(salt), key)
-    return F.conv(F.substring(F.md5(key), 1, 14), 16, 10).cast("long") % mod
+    return hash56(key) % mod
 
 
 def _stop_hits(tokens: Column, words: list[str]) -> Column:

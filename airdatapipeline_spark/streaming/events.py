@@ -1,14 +1,18 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming over the file sources (events, documents,
+embeddings).
 
 The reference is purely scheduled batch (SURVEY.md §2.11) — its
 incremental-by-set-difference pattern is exactly what Structured Streaming's
-file source replaces. These operators replay the events parquet as a stream
-with `availableNow`-style synchronous processing (processAllAvailable), so
-each returns a plain DataFrame the driver/oracle can check. The windowed
-aggregates (`tumbling_counts_append`, `sliding_counts_append`,
-`session_counts_append`) run in append mode with a watermark, so finalized
-windows are written once to a checkpointed parquet file sink and their
-state is evicted.
+file source replaces. Every stream here is staged, read and run the same
+way: `_landing_dir` stages a table as a landing zone, `_file_stream` reads
+it with the batch schema pinned, and `_drain` runs the query with the
+production drain, `trigger(availableNow=True)` (process every file there
+now, then stop), so each operator returns a plain DataFrame the
+driver/oracle can check. The windowed aggregates (`tumbling_counts_append`,
+`sliding_counts_append`, `session_counts_append`) run in append mode with a
+watermark, so finalized windows are written once to a checkpointed parquet
+file sink and their state is evicted. No checkpoint outlives its query
+unless the caller passed its own `checkpoint_dir`.
 
 On a real cluster the same code points readStream at an arriving-files
 directory (or Kafka); the plan and state management are identical.
@@ -20,34 +24,83 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
-_STAGED: dict[str, str] = {}
+_STAGED: dict[tuple[str, str], str] = {}
 
 
-def _landing_dir(sf_dir: str) -> str:
+def _landing_dir(sf_dir: str, table: str) -> str:
     """The file stream source consumes a DIRECTORY of arriving files; stage
-    the events parquet into one (cached per sf_dir). In production this is
-    the landing zone new files drop into."""
-    if sf_dir not in _STAGED:
-        d = tempfile.mkdtemp(prefix="events_stream_")
-        shutil.copy(os.path.join(sf_dir, "events.parquet"), d)
-        _STAGED[sf_dir] = d
-    return _STAGED[sf_dir]
+    `<table>.parquet` into one (cached per (sf_dir, table)). In production
+    this is the landing zone new files drop into (the event collector's,
+    crawler's or encoder's drop directory)."""
+    key = (sf_dir, table)
+    if key not in _STAGED:
+        d = tempfile.mkdtemp(prefix=f"{table}_stream_")
+        shutil.copy(os.path.join(sf_dir, f"{table}.parquet"), d)
+        _STAGED[key] = d
+    return _STAGED[key]
+
+
+def _file_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    landing_dir: str | None = None,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """`table` as a file stream over `landing_dir` (default: its staged
+    landing zone), schema pinned to the batch reader's (readStream needs
+    it). `max_files_per_trigger` gives per-file micro-batches: lets tests
+    prove state carries ACROSS batches (one big batch would hide a
+    missing state store)."""
+    reader = spark.readStream.schema(spark.read.parquet(f"{sf_dir}/{table}.parquet").schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(landing_dir or _landing_dir(sf_dir, table))
+
+
+def _drain(writer: DataStreamWriter, checkpoint_dir: str | None = None) -> None:
+    """Start the configured stream with availableNow (drain every file in
+    the landing zone, honouring maxFilesPerTrigger, then stop) and block
+    until it ends. availableNow still runs the final no-data micro-batch,
+    so an append-mode aggregate flushes every window whose end <= the
+    final watermark. A checkpoint made here is deleted once the query
+    stops; a caller's `checkpoint_dir` is kept (cross-run redelivery
+    resumes from it)."""
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_ckpt_")
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _content_fp(*cols: str) -> Column:
+    """Order-free content fingerprint of a group of rows over `cols` (an
+    aggregate): the XOR of per-row xxhash64, the SUM of each row hash mod
+    2^20 and the row count, mixed through one final xxhash64. XOR alone
+    cancels pairwise-duplicated rows (two identical rows XOR to 0), so the
+    bounded SUM rides along (bounded terms keep the ANSI sum overflow-free
+    below 2^43 rows); distinct groups collide only if XOR, bounded SUM and
+    count all collide at once. Path- and order-independent, so a
+    redelivered file fingerprints identically under any path/batch."""
+    h = f"xxhash64({', '.join(cols)})"
+    return F.expr(f"xxhash64(bit_xor({h}), sum(pmod({h}, 1048576)), count(*))")
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # schema must be pinned for readStream; reuse the batch reader's schema
-    # (ts arrives as epoch-nanos long under the nanosAsLong conf — convert
-    # exactly like io.load_table does). Pin the two correctness confs here
-    # rather than relying on an earlier load_table call having set them on
-    # this session (the driver runs queries on a session built without our
-    # factory; registration order must not matter).
+    # Pin the two correctness confs here rather than relying on an earlier
+    # load_table call having set them on this session (the driver runs
+    # queries on a session built without our factory; registration order
+    # must not matter): ts arrives as epoch-nanos long under nanosAsLong.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(batch.schema).parquet(_landing_dir(sf_dir))
+    stream = _file_stream(spark, sf_dir, "events")
     # watermarks require TIMESTAMP (not NTZ); under the UTC session the wall
     # times are identical — outputs are cast back to NTZ after aggregation.
     # The TIMESTAMP(NANOS) column arrives either as epoch-nanos long (under
@@ -55,7 +108,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reader) — branch exactly like io.load_table does.
     from pyspark.sql import types as T
 
-    if isinstance(batch.schema["ts"].dataType, T.LongType):
+    if isinstance(stream.schema["ts"].dataType, T.LongType):
         return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
@@ -66,22 +119,12 @@ def _run_append_to_files(flat: DataFrame) -> DataFrame:
 
     This is the 100 TB shape: state is bounded by the watermark (finalized
     windows are emitted once and EVICTED), output goes to distributed
-    storage, and nothing is collected to the driver. The final no-data micro-batch flushes every window whose
-    end <= final watermark (max event time - delay) — verified empirically:
-    the boundary is inclusive."""
+    storage, and nothing is collected to the driver. The final no-data
+    micro-batch flushes every window whose end <= final watermark (max
+    event time - delay) — verified empirically: the boundary is
+    inclusive."""
     out = tempfile.mkdtemp(prefix="stream_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    q = (
-        flat.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(flat.writeStream.outputMode("append").format("parquet").option("path", out))
     # explicit schema: a watermark that finalizes zero windows leaves no data
     # files, and schema inference would fail on the empty sink directory
     return flat.sparkSession.read.schema(flat.schema).parquet(out)
@@ -271,13 +314,7 @@ def streaming_enrichment_job(
         )
         rows.write.mode("append").parquet(silver_path)
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(process_batch), checkpoint_dir)
 
 
 def stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,21 +347,11 @@ def stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no memory sink, no driver collect); the read-back keeps the max
     # emission per user — the running counter is monotone, so max = final.
     sink_dir = tempfile.mkdtemp(prefix="stream_state_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stream_state_ckpt_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink_dir)
 
-    q = (
-        out_stream.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(out_stream.writeStream.outputMode("update").foreachBatch(sink))
     snap = spark.read.schema("user_id long, n_events long").parquet(sink_dir)
     return snap.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
@@ -381,19 +408,6 @@ def clicks_errors_left_join_append(spark: SparkSession, sf_dir: str) -> DataFram
 
 # --- streaming corpus ingest (curation gate as a stream) ---------------------
 
-_DOC_STAGED: dict[str, str] = {}
-
-
-def _doc_landing_dir(sf_dir: str) -> str:
-    """Landing zone for arriving document files (same staging idiom as the
-    events stream above — in production this is the crawler's drop
-    directory)."""
-    if sf_dir not in _DOC_STAGED:
-        d = tempfile.mkdtemp(prefix="docs_stream_")
-        shutil.copy(os.path.join(sf_dir, "documents.parquet"), d)
-        _DOC_STAGED[sf_dir] = d
-    return _DOC_STAGED[sf_dir]
-
 
 def curated_ingest_append(
     spark: SparkSession,
@@ -426,13 +440,7 @@ def curated_ingest_append(
     its banded self-join needs the full corpus side."""
     from ..operators.text import LANG_STOPWORDS, _predicted_lang, _stop_hits, tokens_col
 
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    reader = spark.readStream.schema(batch.schema)
-    if max_files_per_trigger is not None:
-        # per-file micro-batches: lets tests prove the dedup state carries
-        # ACROSS batches (one big batch would hide a missing state store)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _doc_landing_dir(sf_dir))
+    stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
 
     t = tokens_col()
     wc = F.size(t).cast("long")
@@ -512,31 +520,19 @@ def shard_ingest_append(
         shutil.rmtree(tmp, ignore_errors=True)
 
     out = out_path or os.path.join(tempfile.mkdtemp(prefix="shard_layout_"), "layout")
-    ckpt = tempfile.mkdtemp(prefix="shard_ckpt_")
+
+    def ingest(bdf: DataFrame, _bid: int) -> None:
+        corpus.append_docs(spark, bdf, out)
+
     try:
-        stream = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-
-        def ingest(bdf: DataFrame, _bid: int) -> None:
-            corpus.append_docs(spark, bdf, out)
-
-        q = (
-            stream.writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        stream = _file_stream(spark, sf_dir, "documents", landing, 1)
+        _drain(stream.writeStream.foreachBatch(ingest))
     finally:
         # the layout must outlive this call (the returned audit reads it
-        # lazily), but the landing zone holds a full corpus copy and the
-        # checkpoint is dead after availableNow terminates — repeated
-        # registry sweeps/bench runs must not accumulate them (ADVICE-r6)
+        # lazily), but the landing zone holds a full corpus copy —
+        # repeated registry sweeps/bench runs must not accumulate it
+        # (ADVICE-r6)
         shutil.rmtree(landing, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return shard_layout_audit(spark, out)
 
 
@@ -604,14 +600,8 @@ def lm_gated_ingest_append(
     # for the stream's life so no micro-batch recounts the corpus, and
     # release it when the stream stops
     table = model["bigrams"].persist()
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _doc_landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
     out = out_dir or tempfile.mkdtemp(prefix="lm_gate_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="lm_gate_ckpt_")
     out_schema = (
         "doc_id long, source string, n_bigrams long, hapax_bigrams long,"
         " cross_entropy double"
@@ -628,30 +618,11 @@ def lm_gated_ingest_append(
         kept = kept.join(committed.select("doc_id"), "doc_id", "left_anti")
         kept.write.mode("append").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     try:
-        q.processAllAvailable()
+        _drain(stream.writeStream.foreachBatch(gate), checkpoint_dir)
     finally:
-        q.stop()
         table.unpersist()
     return spark.read.schema(out_schema).parquet(out)
-
-
-_EMB_STAGED: dict[str, str] = {}
-
-
-def _emb_landing_dir(sf_dir: str) -> str:
-    """Landing zone for arriving embedding files (the encoder's drop
-    directory in production — same staging idiom as _doc_landing_dir)."""
-    if sf_dir not in _EMB_STAGED:
-        d = tempfile.mkdtemp(prefix="emb_stream_")
-        shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), d)
-        _EMB_STAGED[sf_dir] = d
-    return _EMB_STAGED[sf_dir]
 
 
 def kmeans_assign_ingest_append(
@@ -685,14 +656,8 @@ def kmeans_assign_ingest_append(
     if cents is None:
         train = with_sq8(load_table(spark, sf_dir, "embeddings")).select("vec_id", "q")
         cents = kmeans_train(train)
-    batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _emb_landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "embeddings", landing_dir, max_files_per_trigger)
     out = out_dir or tempfile.mkdtemp(prefix="km_assign_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="km_assign_ckpt_")
     out_schema = "vec_id long, centroid_id int, sq_dist long"
 
     def assign(bdf: DataFrame, _bid: int) -> None:
@@ -708,15 +673,7 @@ def kmeans_assign_ingest_append(
         a = a.join(committed.select("vec_id"), "vec_id", "left_anti")
         a.write.mode("append").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(assign)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(assign), checkpoint_dir)
     return spark.read.schema(out_schema).parquet(out)
 
 
@@ -749,33 +706,20 @@ def hll_register_ingest_append(
     The committed estimate after draining the landing dir equals the batch
     query's estimate over the same corpus — what the DuckDB oracle
     replays."""
-    from ..operators.sketches import _hash56, _source_shingles_df, hll_registers, hll_scope_estimates
+    from ..operators.sketches import _source_shingles_df, hll_registers, hll_scope_estimates
+    from ..operators.text import hash56
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _doc_landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
     out = out_dir or tempfile.mkdtemp(prefix="hll_regs_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="hll_regs_ckpt_")
     out_schema = "source string, j long, m int"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
-        hashed = _source_shingles_df(bdf).select("source", _hash56().alias("h"))
+        hashed = _source_shingles_df(bdf).select("source", hash56("shingle").alias("h"))
         # partial registers of THIS batch only — no read-modify-write and
         # no committed-set anti-join: max-merge absorbs duplicates
         hll_registers(hashed).write.mode("append").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(contribute)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(contribute), checkpoint_dir)
     merged = (
         spark.read.schema(out_schema)
         .parquet(out)
@@ -838,14 +782,8 @@ def quantile_ingest_append(
     format change)."""
     from ..operators.sketches import hq_bin_expr, hq_histogram, hq_quantile_estimates
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "events", landing_dir, max_files_per_trigger)
     out = out_dir or tempfile.mkdtemp(prefix="hq_regs_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="hq_regs_ckpt_")
     out_schema = "file_fp long, event_type string, bin int, cnt long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
@@ -853,21 +791,9 @@ def quantile_ingest_append(
             F.input_file_name().alias("fpath"), "event_id", "event_type", "value"
         )
         # content fingerprint per source file over exactly the columns the
-        # sketch consumes (+ event_id for row identity), so a redelivered
-        # file fingerprints identically under any path/batch. Order-free
-        # XOR alone cancels pairwise-duplicated rows (two identical rows
-        # XOR to 0 — ADVICE-r10), so a second order-free combinator rides
-        # along: the SUM of each row hash mod 2^20 (bounded terms keep the
-        # ANSI sum overflow-free below 2^43 rows/file, far past any real
-        # file), mixed with the count through one final xxhash64. Distinct
-        # files now collide only if XOR, bounded SUM, and row count all
-        # collide at once.
+        # sketch consumes (+ event_id for row identity)
         fps = rows.groupBy("fpath").agg(
-            F.expr(
-                "xxhash64(bit_xor(xxhash64(event_id, event_type, value)),"
-                " sum(pmod(xxhash64(event_id, event_type, value), 1048576)),"
-                " count(*))"
-            ).alias("file_fp")
+            _content_fp("event_id", "event_type", "value").alias("file_fp")
         )
         part = (
             # the batch sketch's pinned NULL policy (hq_histogram): NULL
@@ -881,15 +807,7 @@ def quantile_ingest_append(
         )
         part.write.mode("append").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(contribute)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(contribute), checkpoint_dir)
     merged = (
         spark.read.schema(out_schema)
         .parquet(out)
@@ -943,30 +861,16 @@ def drift_gate_ingest_append(
     fingerprint-format upgrade rather than mixing formats (ADVICE-r11)."""
     from ..operators.drift import drift_binned, drift_histogram, drift_scores
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _doc_landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
     out = out_dir or tempfile.mkdtemp(prefix="drift_regs_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="drift_regs_ckpt_")
     out_schema = "file_fp long, metric string, bin int, cnt long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
         rows = bdf.select(
             F.input_file_name().alias("fpath"), "doc_id", "text"
         )
-        # content fingerprint per source file (the quantile twin's idiom:
-        # XOR + bounded-SUM + count mixed through one xxhash64 — XOR alone
-        # cancels pairwise-duplicated rows, ADVICE-r10; path-independent,
-        # overflow-free under ANSI)
-        fps = rows.groupBy("fpath").agg(
-            F.expr(
-                "xxhash64(bit_xor(xxhash64(doc_id, text)),"
-                " sum(pmod(xxhash64(doc_id, text), 1048576)), count(*))"
-            ).alias("file_fp")
-        )
+        # content fingerprint per source file (the quantile twin's idiom)
+        fps = rows.groupBy("fpath").agg(_content_fp("doc_id", "text").alias("file_fp"))
         # NULL policy pinned to the batch query: a NULL doc_id makes is_a
         # NULL there, and the counter's otherwise(0) books the row on the
         # ARRIVING side — so the gate must keep NULL-doc_id rows too
@@ -983,15 +887,7 @@ def drift_gate_ingest_append(
         )
         counters.write.mode("append").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(contribute)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(contribute), checkpoint_dir)
 
     arrived = (
         spark.read.schema(out_schema)
@@ -1052,38 +948,20 @@ def kmv_register_ingest_append(
     drained estimates equal the batch query's sketch columns — what the
     DuckDB oracle replays (the exact-Jaccard verifier columns stay with
     the batch query; sketch state cannot reproduce them, by design)."""
-    from ..operators.sketches import (
-        _hash56,
-        _source_shingles_df,
-        kmv_bottom_k,
-        kmv_pair_estimates,
-    )
+    from ..operators.sketches import _source_shingles_df, kmv_bottom_k, kmv_pair_estimates
+    from ..operators.text import hash56
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _doc_landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
     out = out_dir or tempfile.mkdtemp(prefix="kmv_regs_sink_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="kmv_regs_ckpt_")
     out_schema = "source string, h long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
-        hashed = _source_shingles_df(bdf).select("source", _hash56().alias("h"))
+        hashed = _source_shingles_df(bdf).select("source", hash56("shingle").alias("h"))
         # partial bottom-k of THIS batch only — union + re-cut on read
         # absorbs duplicates, so no committed-key bookkeeping
         kmv_bottom_k(hashed).write.mode("append").parquet(out)
 
-    q = (
-        stream.writeStream.foreachBatch(contribute)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(contribute), checkpoint_dir)
     merged = kmv_bottom_k(
         spark.read.schema(out_schema).parquet(out)
     ).localCheckpoint(eager=True)
@@ -1120,41 +998,21 @@ def versioned_ingest_append(
     read (batch DataFrame) for the oracle."""
     from ..sources import versioned
 
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    reader = spark.readStream.schema(batch_schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir or _doc_landing_dir(sf_dir))
-
+    stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
     tdir = table_dir or tempfile.mkdtemp(prefix="vt_ingest_")
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="vt_ingest_ckpt_")
     try:
         t = versioned.VersionedTable(spark, tdir)
         t.latest_version()
     except FileNotFoundError:
-        t = versioned.create_table(
-            spark, tdir, spark.createDataFrame([], batch_schema)
-        )
+        t = versioned.create_table(spark, tdir, spark.createDataFrame([], stream.schema))
 
     def ingest(bdf: DataFrame, _bid: int) -> None:
         row = bdf.agg(
-            F.expr(
-                "xxhash64(bit_xor(xxhash64(doc_id, text)),"
-                " sum(pmod(xxhash64(doc_id, text), 1048576)), count(*))"
-            ).alias("fp"),
-            F.count("*").alias("n"),
+            _content_fp("doc_id", "text").alias("fp"), F.count("*").alias("n")
         ).collect()[0]
         if row.n == 0 or row.fp in t.committed_extras("ingest_fp"):
             return  # redelivered (or empty) batch: no new version
         t.append(bdf, extra={"ingest_fp": row.fp})
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(stream.writeStream.foreachBatch(ingest), checkpoint_dir)
     return t.read()

@@ -3,6 +3,7 @@ speed; the driver runs the same comparison at sf0.01)."""
 
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -79,10 +80,14 @@ def test_no_oracle_column_types_as_hugeint(duck):
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
     spark.catalog.clearCache()
+    before = set(os.listdir(tempfile.gettempdir()))
     spark_pdf = QUERIES[name](spark, SF_SMALL).toPandas()
     # no cache outlives the query: a plan left in the CacheManager would be
     # substituted into any later equivalent plan, stale or not
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+    # no checkpoint outlives it either: a drained stream's checkpoint is dead
+    leaked = [d for d in set(os.listdir(tempfile.gettempdir())) - before if "ckpt" in d]
+    assert not leaked, (name, leaked)
     if name not in ORACLES:
         assert len(spark_pdf) >= 0  # rows-only check
         return

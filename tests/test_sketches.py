@@ -17,9 +17,9 @@ from airdatapipeline_spark.operators import similarity, sketches
 from airdatapipeline_spark.operators.sketches import (
     HLL_M,
     KMV_K,
-    _hash56,
     _source_shingles,
 )
+from airdatapipeline_spark.operators.text import hash56
 
 from conftest import SF_SMALL
 
@@ -36,7 +36,7 @@ def test_hll_register_build_partial_aggregates(spark):
     the exchange): the shuffle carries <= 64 register rows per source per
     task, never the hash stream — the property that makes the sketch a
     bounded-state COUNT(DISTINCT) at 100 TB."""
-    hashed = _source_shingles(spark, SF_SMALL).select("source", _hash56().alias("h"))
+    hashed = _source_shingles(spark, SF_SMALL).select("source", hash56("shingle").alias("h"))
     regs = sketches.hll_registers(hashed)
     plan = _plan(regs)
     assert "partial_max" in plan
@@ -48,7 +48,7 @@ def test_kmv_bottom_k_uses_window_group_limit(spark):
     """The bottom-k cut must compile to WindowGroupLimit (rank pushdown:
     map tasks keep <= k rows per source BEFORE the exchange) — the
     stratified sampler's pushdown, here bounding the sketch build."""
-    hashed = _source_shingles(spark, SF_SMALL).select("source", _hash56().alias("h"))
+    hashed = _source_shingles(spark, SF_SMALL).select("source", hash56("shingle").alias("h"))
     bk = sketches.kmv_bottom_k(hashed)
     plan = _plan(bk)
     assert "WindowGroupLimit" in plan
@@ -74,7 +74,7 @@ def test_hll_registers_merge_and_partitioning_invariance(spark):
     (b) the register table is identical under different partitionings
     (max is order-free and the rest is integer arithmetic)."""
     hashed = _source_shingles(spark, SF_SMALL).select(
-        "source", _hash56().alias("h")
+        "source", hash56("shingle").alias("h")
     )
     full = {
         (r["source"], r["j"]): r["m"]
@@ -262,7 +262,7 @@ def test_hll_registers_match_pure_python_reference(spark):
         rho = sketches.HLL_RHO_MAX if w == 0 else sketches.HLL_RHO_MAX - w.bit_length()
         key = (source, j)
         ref[key] = max(ref.get(key, 0), rho)
-    hashed = _source_shingles(spark, SF_SMALL).select("source", _hash56().alias("h"))
+    hashed = _source_shingles(spark, SF_SMALL).select("source", hash56("shingle").alias("h"))
     got = {
         (r["source"], r["j"]): r["m"]
         for r in sketches.hll_registers(hashed).collect()
@@ -285,7 +285,7 @@ def test_kmv_bottom_k_matches_pure_python_reference(spark):
     ref = {
         src: set(sorted(hs)[: sketches.KMV_K]) for src, hs in per_src.items()
     }
-    hashed = _source_shingles(spark, SF_SMALL).select("source", _hash56().alias("h"))
+    hashed = _source_shingles(spark, SF_SMALL).select("source", hash56("shingle").alias("h"))
     got: dict = {}
     for r in sketches.kmv_bottom_k(hashed).collect():
         got.setdefault(r["source"], set()).add(r["h"])

@@ -1,8 +1,8 @@
 """Dump the FULL `.explain("formatted")` output of named registered queries
-to plans/r12/<query>_<tag>.txt — the before/after plan evidence the
-optimization round commits alongside each change.
+to OUTDIR/<query>_<tag>.txt — the before/after plan evidence committed
+alongside a change that must (or must not) move a plan.
 
-Usage: python tools/capture_plans.py TAG QUERY [QUERY ...] [--sf SF_DIR]
+Usage: python tools/capture_plans.py OUTDIR TAG QUERY [QUERY ...] [--sf SF_DIR]
   TAG is `before` or `after` (or any suffix).
 """
 
@@ -21,14 +21,13 @@ def main() -> None:
         i = args.index("--sf")
         sf_dir = args[i + 1]
         del args[i : i + 2]
-    tag, names = args[0], args[1:]
+    outdir, tag, names = args[0], args[1], args[2:]
 
     import __spark_entry__ as e
     from airdatapipeline_spark.session import get_spark
 
     spark = get_spark("capture-plans")
     qs = e.queries()
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
