@@ -54,23 +54,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         else:
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive map parallelism for COMPUTE-HEAVY derivations
-    (guide §2.5's unsplittable-input case): the sandbox's test tables are
-    single-row-group parquet files, so a scan is ONE task and every
-    per-row derivation chained onto it (64-dim dot products, md5 coord
-    generation, sign packs) runs on one core of a 32-core cluster. When
-    the source's split count is below the cluster's default parallelism,
-    round-robin repartition first — the shuffle moves the raw scan rows
-    once (tiny next to the derivation it parallelizes; guide §8: shuffle
-    small rows, then compute the heavy columns). On a production table
-    the scan already yields >= cores splits and this is a no-op — the
-    decision adapts to the input, it is not a local-mode constant."""
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        return df.repartition(cores)
-    return df
-

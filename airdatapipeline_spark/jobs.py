@@ -147,11 +147,17 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
-    from . import model, pipeline
-    from .operators import gold as gold_ops
-    from .session import get_spark
+    from .session import get_spark, query_scope
 
     spark = get_spark(f"job-{args.job}")
+    with query_scope(spark):
+        return _run(p, args, spark)
+
+
+def _run(p: argparse.ArgumentParser, args: argparse.Namespace, spark) -> int:
+    """Run the parsed job; its exit code."""
+    from . import model, pipeline
+    from .operators import gold as gold_ops
 
     if args.job == "scrape":
         from .sources import scrape as scrape_mod

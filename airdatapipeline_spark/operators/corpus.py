@@ -406,9 +406,9 @@ def write_shards(
     else:
         n_shards = int(stats["max_shard"]) + 1
         n_docs = int(stats["n_docs"])
+        laid = assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
         (
-            assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-            .repartitionByRange(n_shards, "shard_id")
+            laid.repartitionByRange(n_shards, "shard_id")
             .sortWithinPartitions("shard_id", "hkey", "doc_id")
             .write.mode("overwrite")
             .partitionBy("shard_id")
@@ -417,7 +417,8 @@ def write_shards(
     if n_shards > 0:
         if not os.path.exists(os.path.join(staging, "_SUCCESS")):
             raise RuntimeError(f"shard write to {staging} did not commit")
-        staged_rows = spark.read.parquet(staging).count()  # footer-only scan
+        # footer-only scan; the declared schema skips the inference job
+        staged_rows = spark.read.schema(laid.schema).parquet(staging).count()
         if staged_rows != n_docs:
             shutil.rmtree(staging, ignore_errors=True)
             raise RuntimeError(
@@ -749,9 +750,9 @@ def append_docs(
         }
     n_new_docs = int(stats["n_docs"])
     n_new_shards = int(stats["max_shard"]) - last_shard
+    laid = assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
     (
-        assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-        .repartitionByRange(n_new_shards, "shard_id")
+        laid.repartitionByRange(n_new_shards, "shard_id")
         .sortWithinPartitions("shard_id", "hkey", "doc_id")
         .write.mode("overwrite")
         .partitionBy("shard_id")
@@ -759,7 +760,7 @@ def append_docs(
     )
     if not os.path.exists(os.path.join(staging, "_SUCCESS")):
         raise RuntimeError(f"shard append to {staging} did not commit")
-    staged_rows = spark.read.parquet(staging).count()  # footer-only scan
+    staged_rows = spark.read.schema(laid.schema).parquet(staging).count()
     if staged_rows != n_new_docs:
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
@@ -889,9 +890,9 @@ def compact_shards(
         F.max("shard_id").alias("max_shard"), F.count("*").alias("n_moved")
     ).first()
     n_moved, n_new = int(stats["n_moved"]), int(stats["max_shard"]) - next_id + 1
+    laid = assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
     (
-        assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-        .repartitionByRange(n_new, "shard_id")
+        laid.repartitionByRange(n_new, "shard_id")
         .sortWithinPartitions("shard_id", "hkey", "doc_id")
         .write.mode("overwrite")
         .partitionBy("shard_id")
@@ -903,7 +904,7 @@ def compact_shards(
     shutil.rmtree(tmp_delta, ignore_errors=True)
 
     # verify BEFORE any mutation of the live root (write_shards contract)
-    staged_docs = spark.read.parquet(staging).count()
+    staged_docs = spark.read.schema(laid.schema).parquet(staging).count()
     if staged_docs != total_docs:
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
@@ -1045,11 +1046,11 @@ def delete_from_shards(
         F.broadcast(affected_df), "shard_id", "left_semi"
     ).join(ids, "doc_id", "left_anti")
     tmp_delta = staging + ".__rewrite__"
+    laid = survivors.select(
+        "doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id"
+    )
     (
-        survivors.select(
-            "doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id"
-        )
-        .repartitionByRange(max(len(affected), 1), "shard_id")
+        laid.repartitionByRange(max(len(affected), 1), "shard_id")
         .sortWithinPartitions("shard_id", "hkey", "doc_id")
         .write.mode("overwrite")
         .partitionBy("shard_id")
@@ -1063,8 +1064,8 @@ def delete_from_shards(
     shutil.rmtree(tmp_delta, ignore_errors=True)
 
     expected = total_docs - n_deleted
-    # a fully-emptied layout has no files left to infer a schema from
-    staged_docs = spark.read.parquet(staging).count() if expected > 0 else 0
+    # declared schema: a fully-emptied layout has no file to infer one from
+    staged_docs = spark.read.schema(laid.schema).parquet(staging).count()
     if staged_docs != expected:
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
@@ -1114,10 +1115,9 @@ def vacuum_tombstones(spark: SparkSession, doc_ids: DataFrame, out_path: str) ->
     shutil.rmtree(staging, ignore_errors=True)
     # the write below fully materializes the read of the old files before
     # any of them is touched; the writer lock excludes concurrent deletes
-    tombs.distinct().join(ids, "doc_id", "left_anti").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(staging)
-    n_remaining = spark.read.parquet(staging).count()  # footer-only
+    kept = tombs.distinct().join(ids, "doc_id", "left_anti")
+    kept.coalesce(1).write.mode("overwrite").parquet(staging)
+    n_remaining = spark.read.schema(kept.schema).parquet(staging).count()  # footer-only
     if n_remaining:
         for f in os.listdir(staging):
             if f.endswith(".parquet"):  # job-UUID names never collide

@@ -71,6 +71,9 @@ GOLD_COLS = [
     "neutral_headlines",
     "total_headlines",
 ]
+# what _gold_rows writes (the partition column comes back last); declared,
+# so the read-back launches no footer-reading schema-inference job
+_GOLD_SCHEMA = ", ".join(f"{c} bigint" for c in GOLD_COLS[1:]) + ", analysis_date date"
 
 
 def initial_build(stg: DataFrame, gold_dir: str) -> None:
@@ -111,11 +114,7 @@ def apply_batch(
 
 
 def read_gold(spark: SparkSession, gold_dir: str) -> DataFrame:
-    back = spark.read.parquet(gold_dir)
-    return back.select(
-        F.col("analysis_date").cast("date").alias("analysis_date"),
-        *GOLD_COLS[1:],
-    )
+    return spark.read.schema(_GOLD_SCHEMA).parquet(gold_dir).select(*GOLD_COLS)
 
 
 def maintained_daily_sentiment(

@@ -768,7 +768,7 @@ def clustered_residual_ivfpq_recall(
     which the same 16 sampled-row codebook entries can now actually
     resolve. Serving shape: probe CLU_N_PROBE lists; the query builds one
     ADC distance table PER PROBED LIST over its list-specific residual
-    q − centroid_c (Q×nprobe tables, driver-side like _pq_query_dtabs);
+    q − centroid_c (Q×nprobe tables, driver-side like _pq_dtab_py);
     candidates join on centroid_id (the probe pruning) and pay M lookups
     each. Per-query recall vs in-plan brute-force truth; deterministic
     end to end, fully value-hashed by the DuckDB oracle."""
@@ -1515,23 +1515,6 @@ def _pq_codebooks(corpus) -> list[list[list[float]]]:
         [[float(v) for v in r.emb[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]] for r in rows]
         for m in range(PQ_M)
     ]
-
-
-def _pq_query_dtabs(spark: SparkSession, e: DataFrame, n_queries: int, codebooks: list) -> DataFrame:
-    """Per-query ADC distance tables computed DRIVER-side (the query panel
-    is small by definition — same posture as the collected IVF centroids)
-    and shipped as plain nested-array DATA: (query_id, dtab[M][K]). Each
-    subdistance is the python-float left-fold `(‖x‖² − 2·x·c) + ‖c‖²` —
-    IEEE-identical to the oracle's expression — so no M×K expression tree
-    ever enters the plan (tree analysis + interpreted eval of ~25k nodes
-    cost more than the whole query at bench scale)."""
-    rows = sorted(
-        e.filter(F.col("vec_id") < n_queries).select("vec_id", "emb").collect(),
-        key=lambda r: r.vec_id,
-    )
-    return _pq_dtabs_from_rows(
-        spark, [(int(r.vec_id), [float(v) for v in r.emb]) for r in rows], codebooks
-    )
 
 
 def _pq_dtab_py(x: list, codebooks: list) -> list:

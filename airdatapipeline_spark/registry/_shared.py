@@ -109,7 +109,7 @@ _IVF_ASSIGN_SQL = """
 
 # dot-form subdistance (‖x‖² − 2·x·c) + ‖c‖², every fold left-to-right —
 # mirrors similarity.pq_encode's numpy per-dimension accumulation and
-# _pq_query_dtabs' python fold exactly (the (x−c)² unroll is equal
+# _pq_dtab_py's python fold exactly (the (x−c)² unroll is equal
 # mathematically but NOT bit-wise; all engines must share one form)
 _PQ_X2 = "CAST(0.0 AS DOUBLE) + " + " + ".join(
     f"list_extract({{v}}.emb, g.m*{similarity.PQ_SUBDIM}+{i + 1})"

@@ -5,7 +5,6 @@ compaction roundtrip."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-import tempfile
 from .. import model
 from ..model import TODAY, URL_PREFIX, with_model_ctes
 from ..operators import relational
@@ -15,6 +14,7 @@ from ..operators import corpus
 from ..sources import maintenance
 from ..sources import csv_io
 from ..sources import scrape
+from ..session import scratch_dir
 from .core import register
 from ._shared import GOLD_S_CTE
 
@@ -75,7 +75,7 @@ def src_csv(spark, sf_dir):
     NTZ format) → schema-pinned read-back → aggregate. The oracle aggregates
     the pre-roundtrip frame, so a match proves no type/precision loss."""
     bronze_clean = relational.clean_headlines(model.bronze_headlines(spark, sf_dir))
-    land = tempfile.mkdtemp(prefix="csv_landing_")
+    land = scratch_dir("csv_landing_")
     csv_io.write_headlines_csv(bronze_clean, land, "bench")
     back = csv_io.read_headlines_csv(spark, csv_io.latest_run_dir(land))
     return back.groupBy("source").agg(
@@ -117,7 +117,7 @@ def src_formats(spark, sf_dir):
     from ..io import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="fmt_roundtrip_")
+    root = scratch_dir("fmt_roundtrip_")
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
     backs = []
     from ..operators.text import _hash_bucket
@@ -167,7 +167,7 @@ def snk_silver(spark, sf_dir):
     hits the partition column, so the scan prunes to one directory (the
     Spark replacement for the reference's processed_at index)."""
     silver = model.silver_enriched(spark, sf_dir)
-    wh = tempfile.mkdtemp(prefix="warehouse_")
+    wh = scratch_dir("warehouse_")
     path = csv_io.write_silver_partitioned(silver, wh)
     back = spark.read.parquet(path)
     return (
@@ -250,9 +250,7 @@ def q_incremental_gold(spark, sf_dir):
     partition overwrite of ONLY the affected date partitions. The oracle is
     the from-scratch full recompute — the maintained table must be
     indistinguishable from it."""
-    import tempfile
-
-    gold_dir = tempfile.mkdtemp(prefix="gold_incr_")
+    gold_dir = scratch_dir("gold_incr_")
     return incremental.maintained_daily_sentiment(spark, sf_dir, gold_dir)
 
 
@@ -281,7 +279,7 @@ def q_compaction(spark, sf_dir):
     tests/test_sources.py."""
     from ..io import load_table
 
-    frag = tempfile.mkdtemp(prefix="frag_")
+    frag = scratch_dir("frag_")
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
     maintenance.compact_parquet(spark, frag)
@@ -534,7 +532,7 @@ def q_targeted_delete(spark, sf_dir):
     tests). Oracle = the table minus those users."""
     from ..io import load_table
 
-    staged = tempfile.mkdtemp(prefix="gdpr_")
+    staged = scratch_dir("gdpr_")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", (F.col("user_id") % 8).alias("bucket")
     )
@@ -634,7 +632,7 @@ def _vt_build_chain(spark, sf_dir):
         F.col("c_acctbal").alias("bal"),
     )
     t = versioned.create_table(
-        spark, tempfile.mkdtemp(prefix="vt_"), base.repartition(8)
+        spark, scratch_dir("vt_"), base.repartition(8)
     )
     mod7 = F.col("k") % 7
     src = (

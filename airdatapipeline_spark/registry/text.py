@@ -4,10 +4,10 @@ decontamination, mixes, shard layout/write/append lifecycle, rarity scores."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-import tempfile
 from ..operators import dedup
 from ..operators import text
 from ..operators import corpus
+from ..session import scratch_dir
 from .core import register
 from ._shared import _BAND_SELECTS, _MINHASH_AGGS, _SHINGLES_CTE, _SQL_LIST, _TOKS, _langid_case
 
@@ -220,7 +220,7 @@ def t_decontam_bloom(spark, sf_dir):
     plan-asserted in tests."""
     from ..operators.tpch import bloom_runtime_filter_scope
 
-    out_dir = tempfile.mkdtemp(prefix="decon_bloom_")
+    out_dir = scratch_dir("decon_bloom_")
     with bloom_runtime_filter_scope(spark):
         dedup.decontamination_report(spark, sf_dir).write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir)
@@ -764,7 +764,7 @@ def t_shard_write(spark, sf_dir):
     plan→persisted-artifact lifecycle the way build_ivf_index did for ANN
     (trainer-facing: a data loader consumes these dirs one shard at a
     time, pruned to one directory per read)."""
-    out = tempfile.mkdtemp(prefix="shards_")
+    out = scratch_dir("shards_")
     corpus.write_shards(spark, sf_dir, out)
     return corpus.shard_readback_audit(spark, out)
 
@@ -827,7 +827,7 @@ def t_shard_append(spark, sf_dir):
 
     from ..io import load_table
 
-    root = tempfile.mkdtemp(prefix="shards_append_")
+    root = scratch_dir("shards_append_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     docs = load_table(spark, sf_dir, "documents")
@@ -973,7 +973,7 @@ def t_shard_compact(spark, sf_dir):
     row. Hard-link inode identity and the no-op gate are pytest-asserted."""
     import os
 
-    root = tempfile.mkdtemp(prefix="shards_compact_")
+    root = scratch_dir("shards_compact_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     from ..io import load_table
@@ -1048,7 +1048,7 @@ def t_shard_delete(spark, sf_dir):
 
     from ..io import load_table
 
-    root = tempfile.mkdtemp(prefix="shards_delete_")
+    root = scratch_dir("shards_delete_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     docs = load_table(spark, sf_dir, "documents")
@@ -1110,7 +1110,7 @@ def t_shard_delete_tombstone(spark, sf_dir):
     from ..io import load_table
     from ..operators.text import tokens_col
 
-    root = tempfile.mkdtemp(prefix="shards_tomb_")
+    root = scratch_dir("shards_tomb_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     docs = load_table(spark, sf_dir, "documents")
@@ -1185,7 +1185,7 @@ def t_shard_vacuum_readmit(spark, sf_dir):
     from ..io import load_table
     from ..operators.text import tokens_col
 
-    root = tempfile.mkdtemp(prefix="shards_vacuum_")
+    root = scratch_dir("shards_vacuum_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     docs = load_table(spark, sf_dir, "documents")
@@ -1275,7 +1275,7 @@ def t_shard_verify(spark, sf_dir):
 
     from ..io import load_table
 
-    root = tempfile.mkdtemp(prefix="shards_verify_")
+    root = scratch_dir("shards_verify_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     docs = load_table(spark, sf_dir, "documents")
@@ -1450,7 +1450,7 @@ def t_curated_append(spark, sf_dir):
 
     from ..io import load_table
 
-    root = tempfile.mkdtemp(prefix="curated_append_")
+    root = scratch_dir("curated_append_")
     base_sf = os.path.join(root, "base_sf")
     out = os.path.join(root, "layout")
     docs = load_table(spark, sf_dir, "documents")

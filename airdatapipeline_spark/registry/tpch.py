@@ -5,11 +5,11 @@ and bloom-pruned joins, bucketed facts)."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-import tempfile
 from ..operators import relational
 from ..operators import tpch
 from ..operators import grouped
 from ..operators import bucketed
+from ..session import scratch_dir
 from .core import register
 from ._shared import _DECSUM
 
@@ -687,7 +687,7 @@ def q_bloom_pruned(spark, sf_dir):
     in tests/test_plans-adjacent extension tests."""
     from ..operators.tpch import bloom_runtime_filter_scope, urgent_revenue_bloom_join
 
-    out_dir = tempfile.mkdtemp(prefix="bloom_out_")
+    out_dir = scratch_dir("bloom_out_")
     with bloom_runtime_filter_scope(spark):
         urgent_revenue_bloom_join(spark, sf_dir).write.mode("overwrite").parquet(out_dir)
     return spark.read.parquet(out_dir)

@@ -9,11 +9,48 @@ date semantics are engine-independent (the DuckDB oracle is UTC-naive).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Root of the open query scope's scratch directories (None: no scope open).
+# Process-wide on purpose, like the persisted-RDD registry the scope diffs:
+# operator threads (`concurrency.parallel_checkpoints`) share it.
+_scope_root: str | None = None
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession) -> Iterator[None]:
+    """Own what one query leaves behind. A runner builds AND forces the
+    query inside the scope; on exit every RDD persisted inside it (lazy
+    `localCheckpoint`s included) is unpersisted, blocking, and every
+    `scratch_dir` made inside it (stream sinks, checkpoints, staged
+    layouts the returned frame reads lazily) is deleted. RDDs persisted
+    before the scope opened are left alone."""
+    global _scope_root
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    outer, _scope_root = _scope_root, scratch_dir("query_scope_")
+    try:
+        yield
+    finally:
+        root, _scope_root = _scope_root, outer
+        for rdd_id, rdd in list(jsc.getPersistentRDDs().items()):
+            if rdd_id not in before:
+                rdd.unpersist(True)
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh scratch directory, under the open query scope's root (deleted
+    when the scope closes) or, with no scope open, in the temp dir."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scope_root)
 
 
 def get_spark(app_name: str = "airdatapipeline_spark", master: str | None = None) -> SparkSession:

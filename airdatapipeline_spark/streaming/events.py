@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..session import scratch_dir
+
 _STAGED: dict[tuple[str, str], str] = {}
 
 
@@ -70,7 +72,7 @@ def _drain(writer: DataStreamWriter, checkpoint_dir: str | None = None) -> None:
     final watermark. A checkpoint made here is deleted once the query
     stops; a caller's `checkpoint_dir` is kept (cross-run redelivery
     resumes from it)."""
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="stream_ckpt_")
+    ckpt = checkpoint_dir or scratch_dir("stream_ckpt_")
     q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     try:
         q.awaitTermination()
@@ -123,7 +125,7 @@ def _run_append_to_files(flat: DataFrame) -> DataFrame:
     micro-batch flushes every window whose end <= final watermark (max
     event time - delay) — verified empirically: the boundary is
     inclusive."""
-    out = tempfile.mkdtemp(prefix="stream_sink_")
+    out = scratch_dir("stream_sink_")
     _drain(flat.writeStream.outputMode("append").format("parquet").option("path", out))
     # explicit schema: a watermark that finalizes zero windows leaves no data
     # files, and schema inference would fail on the empty sink directory
@@ -346,7 +348,7 @@ def stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # update-mode emissions land in distributed storage via foreachBatch
     # (no memory sink, no driver collect); the read-back keeps the max
     # emission per user — the running counter is monotone, so max = final.
-    sink_dir = tempfile.mkdtemp(prefix="stream_state_sink_")
+    sink_dir = scratch_dir("stream_state_sink_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink_dir)
@@ -505,9 +507,9 @@ def shard_ingest_append(
     from ..operators import corpus
 
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    landing = tempfile.mkdtemp(prefix="shard_landing_")
+    landing = scratch_dir("shard_landing_")
     for r in range(3):
-        tmp = tempfile.mkdtemp(prefix="shard_delta_")
+        tmp = scratch_dir("shard_delta_")
         batch.filter(F.col("doc_id") % 3 == r).coalesce(1).write.mode(
             "overwrite"
         ).parquet(tmp)
@@ -519,7 +521,7 @@ def shard_ingest_append(
         )
         shutil.rmtree(tmp, ignore_errors=True)
 
-    out = out_path or os.path.join(tempfile.mkdtemp(prefix="shard_layout_"), "layout")
+    out = out_path or os.path.join(scratch_dir("shard_layout_"), "layout")
 
     def ingest(bdf: DataFrame, _bid: int) -> None:
         corpus.append_docs(spark, bdf, out)
@@ -601,7 +603,7 @@ def lm_gated_ingest_append(
     # release it when the stream stops
     table = model["bigrams"].persist()
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
-    out = out_dir or tempfile.mkdtemp(prefix="lm_gate_sink_")
+    out = out_dir or scratch_dir("lm_gate_sink_")
     out_schema = (
         "doc_id long, source string, n_bigrams long, hapax_bigrams long,"
         " cross_entropy double"
@@ -657,7 +659,7 @@ def kmeans_assign_ingest_append(
         train = with_sq8(load_table(spark, sf_dir, "embeddings")).select("vec_id", "q")
         cents = kmeans_train(train)
     stream = _file_stream(spark, sf_dir, "embeddings", landing_dir, max_files_per_trigger)
-    out = out_dir or tempfile.mkdtemp(prefix="km_assign_sink_")
+    out = out_dir or scratch_dir("km_assign_sink_")
     out_schema = "vec_id long, centroid_id int, sq_dist long"
 
     def assign(bdf: DataFrame, _bid: int) -> None:
@@ -710,7 +712,7 @@ def hll_register_ingest_append(
     from ..operators.text import hash56
 
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
-    out = out_dir or tempfile.mkdtemp(prefix="hll_regs_sink_")
+    out = out_dir or scratch_dir("hll_regs_sink_")
     out_schema = "source string, j long, m int"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
@@ -783,7 +785,7 @@ def quantile_ingest_append(
     from ..operators.sketches import hq_bin_expr, hq_histogram, hq_quantile_estimates
 
     stream = _file_stream(spark, sf_dir, "events", landing_dir, max_files_per_trigger)
-    out = out_dir or tempfile.mkdtemp(prefix="hq_regs_sink_")
+    out = out_dir or scratch_dir("hq_regs_sink_")
     out_schema = "file_fp long, event_type string, bin int, cnt long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
@@ -862,7 +864,7 @@ def drift_gate_ingest_append(
     from ..operators.drift import drift_binned, drift_histogram, drift_scores
 
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
-    out = out_dir or tempfile.mkdtemp(prefix="drift_regs_sink_")
+    out = out_dir or scratch_dir("drift_regs_sink_")
     out_schema = "file_fp long, metric string, bin int, cnt long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
@@ -952,7 +954,7 @@ def kmv_register_ingest_append(
     from ..operators.text import hash56
 
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
-    out = out_dir or tempfile.mkdtemp(prefix="kmv_regs_sink_")
+    out = out_dir or scratch_dir("kmv_regs_sink_")
     out_schema = "source string, h long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
@@ -999,7 +1001,7 @@ def versioned_ingest_append(
     from ..sources import versioned
 
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
-    tdir = table_dir or tempfile.mkdtemp(prefix="vt_ingest_")
+    tdir = table_dir or scratch_dir("vt_ingest_")
     try:
         t = versioned.VersionedTable(spark, tdir)
         t.latest_version()

@@ -49,6 +49,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from airdatapipeline_spark.session import query_scope  # noqa: E402
 from perfbench import layers  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -277,14 +278,6 @@ N_RUNS = 3  # r6: median-of-3 (VERDICT-r5 item 2 — make regressions
 # ambient noise that best-of-2 could not separate from a plan change).
 
 
-def release(spark) -> None:
-    """Drop the SQL cache and unpersist every persisted RDD, so the next
-    timed run reads no cache an earlier run or query left behind."""
-    spark.catalog.clearCache()
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
-
-
 def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[float]:
     """Force FULL execution of every projected column with a noop write —
     count() lets Catalyst prune projected expressions (map-heavy queries
@@ -292,7 +285,8 @@ def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[
     executor-side (r2 re-baseline). Returns the sorted per-run times; the
     first run pays one-time Janino codegen, so the MEDIAN (not min, not
     mean) is the headline statistic, robust to one slow outlier. Each run
-    starts with `release(spark)`.
+    builds and forces the query in its own `query_scope`, so the next run
+    reads nothing this one persisted.
 
     When `io_sink` is given, the LAST run (build included) runs under its
     own job group and io_sink[io_key] gets that group's counters
@@ -301,12 +295,12 @@ def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[
     sc = spark.sparkContext
     times = []
     for i in range(n):
-        release(spark)
         group = f"bench:{io_key}" if io_sink is not None and i == n - 1 else None
         layers.set_group(sc, group)
-        t0 = time.time()
-        fn().write.format("noop").mode("overwrite").save()
-        times.append(round(time.time() - t0, 3))
+        with query_scope(spark):
+            t0 = time.time()
+            fn().write.format("noop").mode("overwrite").save()
+            times.append(round(time.time() - t0, 3))
         layers.set_group(sc, None)
         if group:
             layers.drain(sc)
@@ -627,7 +621,8 @@ def main() -> None:
     spark.range(64).mapInPandas(
         lambda it: (pdf for pdf in it), schema="id long"
     ).count()
-    entrymod.entry(spark).count()  # full pipeline shape at sf0.001
+    with query_scope(spark):
+        entrymod.entry(spark).count()  # full pipeline shape at sf0.001
     # bucketed facts are written once at ingest and queried many times —
     # creating them is warm-up (amortized), timing the join is the bench
     from airdatapipeline_spark.operators.bucketed import ensure_bucketed_facts
@@ -654,7 +649,8 @@ def main() -> None:
         for name in HEADLINE[:6]:
             if name != "flagship_pipeline" and name not in queries:
                 continue
-            make_fn(name, SF_DIR)().write.format("noop").mode("overwrite").save()
+            with query_scope(spark):
+                make_fn(name, SF_DIR)().write.format("noop").mode("overwrite").save()
     sys.stderr.write("[warmup] front-of-suite laps done\n")
 
     # Machine-speed calibration (VERDICT-r7 item 1): identical-HEAD runs

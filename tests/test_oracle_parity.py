@@ -9,7 +9,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from check_oracle import compare  # noqa: E402
+from check_oracle import compare, footprint, leaks  # noqa: E402
 
 from conftest import SF_SMALL  # noqa: E402
 
@@ -77,17 +77,58 @@ def test_no_oracle_column_types_as_hugeint(duck):
     assert not bad, f"oracles with HUGEINT-typed result columns (wrap in CAST(... AS BIGINT)): {bad}"
 
 
+def test_query_scope_releases_only_what_it_made(spark):
+    """The scope's boundary: an RDD persisted before the scope opened stays
+    persisted; a lazy localCheckpoint made inside it is unpersisted and its
+    scratch dir deleted; with no scope open, scratch_dir is a plain
+    surviving temp dir."""
+    from airdatapipeline_spark.session import query_scope, scratch_dir
+
+    jsc = spark.sparkContext._jsc
+    outer = spark.sparkContext.range(8).persist()
+    try:
+        with query_scope(spark):
+            before = set(jsc.getPersistentRDDs().keys())
+            spark.range(8).localCheckpoint(eager=False)
+            made = set(jsc.getPersistentRDDs().keys()) - before
+            inner_dir = scratch_dir("scope_probe_")
+            assert made and os.path.isdir(inner_dir)
+        persisted = set(jsc.getPersistentRDDs().keys())
+        assert outer.id() in persisted
+        assert not made & persisted
+        assert not os.path.exists(inner_dir)
+    finally:
+        outer.unpersist(True)
+    loose = scratch_dir("scope_probe_")
+    try:
+        assert os.path.isdir(loose)
+        assert os.path.dirname(loose) == tempfile.gettempdir()
+    finally:
+        os.rmdir(loose)
+
+
+@pytest.fixture(scope="module")
+def own_tempdir():
+    """Python's temp dir, where every scratch dir goes, pointed at a fresh
+    directory for this module: the leak listing then sees neither other
+    processes' entries nor the JVM's (it writes to java.io.tmpdir)."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(tempfile, "tempdir", tempfile.mkdtemp(prefix="oracle_parity_"))
+        yield
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck):
-    spark.catalog.clearCache()
-    before = set(os.listdir(tempfile.gettempdir()))
-    spark_pdf = QUERIES[name](spark, SF_SMALL).toPandas()
-    # no cache outlives the query: a plan left in the CacheManager would be
-    # substituted into any later equivalent plan, stale or not
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
-    # no checkpoint outlives it either: a drained stream's checkpoint is dead
-    leaked = [d for d in set(os.listdir(tempfile.gettempdir())) - before if "ckpt" in d]
-    assert not leaked, (name, leaked)
+def test_query_matches_oracle(name, spark, duck, own_tempdir):
+    from airdatapipeline_spark.session import query_scope
+
+    before = footprint(spark)
+    with query_scope(spark):
+        spark_pdf = QUERIES[name](spark, SF_SMALL).toPandas()
+    # nothing outlives the query's scope: no persisted RDD, no temp-dir
+    # entry, and no plan in the CacheManager (it would be substituted into
+    # any later equivalent plan, stale or not)
+    left = leaks(spark, before)
+    assert not left, (name, left)
     if name not in ORACLES:
         assert len(spark_pdf) >= 0  # rows-only check
         return

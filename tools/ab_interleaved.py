@@ -7,10 +7,11 @@ the writes tier interleaves base/big passes. Each trial is a FRESH
 subprocess + JVM running the query from a detached `git worktree` of that
 revision: 1 untimed warm lap, then median-of-3 timed runs, each forced
 with a noop write (the bench's per-query statistic and forcing, so the
-ratio times the plan bench reports). Every lap starts with the SQL cache
-cleared and every persisted RDD released, so no lap reuses an earlier
-lap's cache. The trial script repeats these few lines of bench.py
-instead of importing it, because it runs against other revisions' trees.
+ratio times the plan bench reports). Every lap runs in its own
+`session.query_scope`, so no lap reuses what an earlier lap persisted;
+both revisions must therefore have `query_scope`. The trial script
+repeats these few lines of bench.py instead of importing it, because it
+runs against other revisions' trees.
 The printed verdict is the median-of-pairs ratio with per-trial
 spreads, so a real plan regression separates from dispersion.
 
@@ -33,25 +34,20 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _TRIAL = r"""
 import sys, time
 sys.path.insert(0, {root!r})
-from airdatapipeline_spark.session import get_spark
+from airdatapipeline_spark.session import get_spark, query_scope
 from airdatapipeline_spark.registry import QUERIES
 spark = get_spark("ab_trial")
 fn = QUERIES[{query!r}]
 
-def release():  # no lap may read a cache an earlier lap left behind
-    spark.catalog.clearCache()
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
-
 def force():  # bench.py's forcing: a noop write runs every projected column
     fn(spark, {sf!r}).write.format("noop").mode("overwrite").save()
 
-release()
-force()  # untimed warm lap (JIT/thread-pool ramp)
+with query_scope(spark):
+    force()  # untimed warm lap (JIT/thread-pool ramp)
 ts = []
 for _ in range(3):
-    release()
-    t = time.time(); force(); ts.append(time.time() - t)
+    with query_scope(spark):
+        t = time.time(); force(); ts.append(time.time() - t)
 print("ABRESULT", sorted(ts)[1], min(ts), max(ts))
 """
 

@@ -2,7 +2,10 @@
 
 Runs every __spark_entry__.queries() entry on Spark and its oracle_sql() twin
 on DuckDB over the same parquet dir, then compares row count, column names,
-and (order-insensitively) values. Usage:
+and (order-insensitively) values. Each query runs in its own `query_scope`;
+a query that leaves anything behind once its scope has closed (a persisted
+RDD, a cached plan, a new temp-dir entry) is reported as a leak and fails
+the run like a value mismatch. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -11,6 +14,7 @@ from __future__ import annotations
 
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -95,6 +99,28 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> lis
     return problems
 
 
+def footprint(spark) -> tuple[set, set]:
+    """What a query could leave behind: persisted RDD ids and temp-dir entries."""
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    return rdds, set(os.listdir(tempfile.gettempdir()))
+
+
+def leaks(spark, before: tuple[set, set]) -> list[str]:
+    """What was left behind since `before = footprint(spark)`, apart from the
+    landing-zone copies `_landing_dir` keeps for the life of the process.
+    The temp-dir listing is exact only in a temp dir that neither another
+    process nor the JVM (it writes to java.io.tmpdir) writes to."""
+    from airdatapipeline_spark.streaming.events import _STAGED
+
+    rdds, tmp = footprint(spark)
+    staged = {os.path.basename(d) for d in _STAGED.values()}
+    out = [f"persisted rdd {i}" for i in sorted(rdds - before[0])]
+    out += [f"temp entry {d}" for d in sorted(tmp - before[1] - staged)]
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        out.append("cached plan in the CacheManager")
+    return out
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -127,19 +153,29 @@ def main() -> int:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
+    from airdatapipeline_spark.session import query_scope
+
+    # scratch goes to a temp dir of this run's own (see `leaks`)
+    tempfile.tempdir = tempfile.mkdtemp(prefix="check_oracle_")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failed = []
+    failed, leaky = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        before = footprint(spark)
         try:
-            spark_pdf = fn(spark, sf_dir).toPandas()
+            with query_scope(spark):
+                spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failed.append(name)
             print(f"FAIL  {name}: spark error: {e}")
             continue
+        left = leaks(spark, before)
+        if left:
+            leaky.append(name)
+            print(f"LEAK  {name}: {left}")
         if name not in oracles:
             print(f"skip  {name}: no oracle (rows-only, {len(spark_pdf)} rows, {time.time()-t0:.1f}s)")
             continue
@@ -158,7 +194,8 @@ def main() -> int:
         else:
             print(f"ok    {name} ({len(spark_pdf)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
-    return 1 if failed else 0
+    print(f"{len(leaky)} leaks" + (f": {leaky}" if leaky else ""))
+    return 1 if failed or leaky else 0
 
 
 if __name__ == "__main__":

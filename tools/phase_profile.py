@@ -13,8 +13,8 @@ For each query name (or --all-heavy for the round's shortlist):
   exec1_s    first noop-forced run (pays Janino codegen for this plan)
   exec2_s    second noop-forced run (steady state; codegen cache warm)
 
-Both runs start with `bench.release` (SQL cache and persisted RDDs
-dropped), so run 2 reads nothing run 1 cached.
+Each run builds and forces the query in its own `query_scope`, so run 2
+reads nothing run 1 persisted.
 
 Usage: python tools/phase_profile.py [sf_dir] q1 q2 ...
 """
@@ -54,8 +54,7 @@ def main() -> None:
     names = sys.argv[2:] or HEAVY
 
     import __spark_entry__ as entrymod
-    from airdatapipeline_spark.session import get_spark
-    from bench import release
+    from airdatapipeline_spark.session import get_spark, query_scope
 
     spark = get_spark("phase_profile")
     queries = entrymod.queries()
@@ -76,21 +75,21 @@ def main() -> None:
     out = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        release(spark)
-        t0 = time.time()
-        df = fn(name)()
-        t1 = time.time()
-        with redirect_stdout(io.StringIO()):
-            df.explain("formatted")
-        t2 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        t3 = time.time()
-        release(spark)
-        t3r = time.time()
-        df2 = fn(name)()  # rebuild so run 2 matches bench methodology
-        t4 = time.time()
-        df2.write.format("noop").mode("overwrite").save()
-        t5 = time.time()
+        with query_scope(spark):
+            t0 = time.time()
+            df = fn(name)()
+            t1 = time.time()
+            with redirect_stdout(io.StringIO()):
+                df.explain("formatted")
+            t2 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            t3 = time.time()
+        with query_scope(spark):
+            t3r = time.time()
+            df2 = fn(name)()  # rebuild so run 2 matches bench methodology
+            t4 = time.time()
+            df2.write.format("noop").mode("overwrite").save()
+            t5 = time.time()
         out[name] = {
             "build_s": round(t1 - t0, 3),
             "plan_s": round(t2 - t1, 3),

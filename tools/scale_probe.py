@@ -15,7 +15,7 @@ two shapes VERDICT-r11 named riskiest:
 Only the tables the probed queries scan are replicated (events,
 documents), so the 100x build does not pay for 60M unused lineitem rows.
 Timing protocol is bench.py's own (`_run_samples` + `_median`):
-noop-forced, caches released before every run, median of 3, ascending
+noop-forced, each run in its own query scope, median of 3, ascending
 tiers in one warm session.
 
 Usage: python tools/scale_probe.py [--copies 10,30,100] [query ...]
