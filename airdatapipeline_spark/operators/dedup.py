@@ -54,18 +54,18 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) — distinct word n-grams per document."""
-    toks = df.select("doc_id", tokens_col().alias("t"))
+def _shingles(df: DataFrame, key: str) -> DataFrame:
+    """(key, shingle): the distinct word 3-grams of each document in a
+    documents frame, carrying the `key` column (doc_id, or source for the
+    sketches)."""
+    toks = df.select(key, tokens_col().alias("t"))
     sh = F.when(
-        F.size("t") >= n,
+        F.size("t") >= 3,
         F.expr(
             "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return (
-        toks.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
-    )
+    return toks.select(key, F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
@@ -78,7 +78,7 @@ def ngram_jaccard_pairs(
     buckets, never globally. (Top-N rather than a fixed threshold so the
     operator is informative on corpora with no true near-dups.)"""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % sample_mod == 0)
-    sh = _shingles(d)
+    sh = _shingles(d, "doc_id")
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -111,7 +111,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _signatures(docs: DataFrame) -> DataFrame:
     """minhash_signatures over a documents frame."""
-    sh = _shingles(docs)
+    sh = _shingles(docs, "doc_id")
     h = hash56("shingle") % F.lit(1073741824)
     aggs = [
         F.min((F.lit(MINHASH_A[j]) * h + F.lit(MINHASH_B[j])) % F.lit(MINHASH_P)).alias(
@@ -217,7 +217,8 @@ def decontamination_report(
     count and the gram join both read it, and as a plan leaf it gives the
     runtime Bloom filter (text_decontamination_bloom) a filter over a scan
     on the eval side to build from."""
-    grams = _shingles(load_table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
+    docs = load_table(spark, sf_dir, "documents")
+    grams = _shingles(docs, "doc_id").localCheckpoint(eager=False)
     rare = (
         grams.groupBy("shingle")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -352,18 +353,11 @@ def semantic_dedup_decisions(
 
     Returns one decision row per vector: (vec_id, centroid_id, is_kept).
     """
-    from .similarity import CENTROID_ID_LO, N_CENTROIDS, _ivf_assign, cosine_expr, with_norm
+    from .similarity import _ivf_assign, _slice_centroids, cosine_expr, with_norm
 
     corpus = with_norm(load_table(spark, sf_dir, "embeddings")).select("vec_id", "emb", "norm")
-    cent_rows = (
-        corpus.filter(
-            (F.col("vec_id") >= CENTROID_ID_LO)
-            & (F.col("vec_id") < CENTROID_ID_LO + N_CENTROIDS)
-        )
-        .select(F.col("vec_id").alias("centroid_id"), "emb")
-        .collect()  # K rows, once — the same driver-side centroid table IVF uses
-    )
-    assigned = _ivf_assign(corpus, cent_rows, 1)
+    # the same K-row centroid table IVF uses, collected once by _ivf_assign
+    assigned = _ivf_assign(corpus, _slice_centroids(corpus), 1)
     a = assigned.alias("a")
     b = assigned.alias("b")
     pruned = (
@@ -1041,7 +1035,7 @@ def fuzzy_decontamination(
     # band stream — release the cache instead of leaking it for the
     # session lifetime (ADVICE-r9)
     bands.unpersist(blocking=False)
-    sh = _shingles(load_table(spark, sf_dir, "documents"))
+    sh = _shingles(load_table(spark, sf_dir, "documents"), "doc_id")
     # Every consumer below is an inner join keyed by cand's ids, so pruning
     # each corpus-side branch to those ids with a broadcast (semi-)join is
     # bit-identical while making every shuffle/broadcast candidate-bounded

@@ -1,6 +1,6 @@
 """Similarity search over the embeddings table (array<float> column).
 
-Two tiers:
+The first two tiers:
 
 - brute_force_topk: exact cosine top-k. The corpus-side scan is linear and
   the small query set is broadcast, so the plan is a broadcast
@@ -12,6 +12,11 @@ Two tiers:
   candidate search is an EQUI-join on the bucket key — the shape that
   scales to 100 TB (shuffle by bucket, no cross join). Recall < 1 by
   construction; the brute-force tier is the ground truth to measure it.
+
+Every tier (also IVF, SQ8, BQ, PQ/IVFPQ and random projection) serves the
+same way: candidates, a score, then `_topk`, the one per-query ranking
+rule; two-stage tiers re-rank through `_rerank`, and the recall panels
+grade through `_recall` against `_brute_force_over`, the one exact truth.
 
 All vector math is done in double after an explicit float→double cast, with
 a left-fold accumulation order mirrored by DuckDB's list_dot_product —
@@ -79,6 +84,84 @@ def cosine_expr(a_alias: str, b_alias: str) -> Column:
     return dot / (F.col(f"{a_alias}.norm") * F.col(f"{b_alias}.norm"))
 
 
+# --- the ANN serve skeleton (module docstring) --------------------------------
+
+
+def _query_cols(*extra) -> list:
+    """The query-side projection of a (vec_id, emb, norm) frame:
+    (query_id, q_emb, q_norm) plus `extra` columns."""
+    return [
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+        *extra,
+    ]
+
+
+def _cosine(dim: int = EMB_DIM) -> Column:
+    """Exact cosine of a query row (q_emb, q_norm) against a corpus row
+    (emb, norm)."""
+    return _dot("q_emb", "emb", dim) / (F.col("q_norm") * F.col("norm"))
+
+
+def _topk(scored: DataFrame, score: str, k: int, desc: bool = True) -> DataFrame:
+    """The one ANN ranking rule: within each query_id, the k best rows by
+    `score` (descending for similarities, ascending for distances), ties
+    to the lower neighbor_id. The DuckDB oracles replay this order. Keeps
+    the carried columns and adds an int `rank`."""
+    order = F.desc(score) if desc else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .withColumn("rank", F.col("rank").cast("int"))
+    )
+
+
+def _rerank(corpus: DataFrame, cand: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """Full-precision stage 2 of a two-stage serve: join the (query_id,
+    neighbor_id, ...) candidates back to both vectors of the (vec_id, emb,
+    norm) corpus and keep the exact-cosine top-k. Both join-backs broadcast
+    the O(Q·rerank) side, so the stage is corpus-size-independent."""
+    n = corpus.select(F.col("vec_id").alias("neighbor_id"), "emb", "norm")
+    q = corpus.filter(F.col("vec_id") < n_queries).select(*_query_cols())
+    pairs = n.join(F.broadcast(cand), "neighbor_id").join(F.broadcast(q), "query_id")
+    return _topk(pairs.select(*cand.columns, _cosine().alias("cosine")), "cosine", k)
+
+
+def _ivf_serve(lists: DataFrame, probes: DataFrame, k: int, dim: int = EMB_DIM) -> DataFrame:
+    """IVF candidates and exact re-rank: the (centroid_id, vec_id, emb,
+    norm) inverted lists equi-join the broadcast (query_id, q_emb, q_norm,
+    centroid_id) probes, self excluded, and the exact-cosine top-k is kept."""
+    cand = lists.join(F.broadcast(probes), "centroid_id").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    scored = cand.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), _cosine(dim).alias("cosine")
+    )
+    return _topk(scored, "cosine", k)
+
+
+def _recall(truth: DataFrame, k: int, **tiers: DataFrame) -> DataFrame:
+    """Per-query `<tier>_hits` and `<tier>_recall` (recall@k) of each
+    (query_id, neighbor_id) tier against the exact `truth`, one row per
+    truth query (0 hits where a tier found none). Every side is at most
+    Q·k rows, so each hit join and count is broadcast."""
+    out = truth.select("query_id").distinct()
+    cols = ["query_id"]
+    for name, ann in tiers.items():
+        pairs = ann.select("query_id", "neighbor_id")
+        hits = (
+            truth.join(F.broadcast(pairs), ["query_id", "neighbor_id"])
+            .groupBy("query_id")
+            .agg(F.count("*").alias(f"{name}_hits"))
+        )
+        out = out.join(F.broadcast(hits), "query_id", "left")
+        h = F.coalesce(F.col(f"{name}_hits"), F.lit(0)).cast("long")
+        cols += [h.alias(f"{name}_hits"), (h / F.lit(float(k))).alias(f"{name}_recall")]
+    return out.select(*cols)
+
+
 def brute_force_topk(
     spark: SparkSession, sf_dir: str, n_queries: int = 10, k: int = 10
 ) -> DataFrame:
@@ -88,27 +171,18 @@ def brute_force_topk(
     return _brute_force_over(corpus, n_queries, k)
 
 
-def _brute_force_over(corpus: DataFrame, n_queries: int, k: int) -> DataFrame:
-    """The exact serve over any (vec_id, emb, norm) corpus — shared by
-    brute_force_topk (parquet embeddings) and the r11 differential fuzz
-    (adversarial generated corpora: duplicates, ties, zero-norm rows)."""
-    queries = corpus.filter(F.col("vec_id") < n_queries)
-    q = F.broadcast(queries).alias("q")
-    c = corpus.alias("c")
-    scored = (
-        c.join(q, F.col("c.vec_id") != F.col("q.vec_id"))
-        .select(
-            F.col("q.vec_id").alias("query_id"),
-            F.col("c.vec_id").alias("neighbor_id"),
-            cosine_expr("q", "c").alias("cosine"),
-        )
+def _brute_force_over(
+    corpus: DataFrame, n_queries: int, k: int, dim: int = EMB_DIM
+) -> DataFrame:
+    """The exact serve over any (vec_id, emb, norm) corpus of width `dim`
+    — the one exact truth: brute_force_topk (parquet embeddings), the
+    clustered recall panels and the r11 differential fuzz (adversarial
+    generated corpora: duplicates, ties, zero-norm rows)."""
+    q = F.broadcast(corpus.filter(F.col("vec_id") < n_queries).select(*_query_cols()))
+    scored = corpus.join(q, F.col("vec_id") != F.col("query_id")).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), _cosine(dim).alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk(scored, "cosine", k)
 
 
 def _bucket_col() -> Column:
@@ -163,30 +237,18 @@ def lsh_bucketed_topk(
     corpus = with_norm(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "emb", "norm", _bucket_col().alias("bucket")
     )
-    queries = corpus.filter(F.col("vec_id") < n_queries)
     q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-            F.explode(_probe_buckets()).alias("bucket"),
+        corpus.filter(F.col("vec_id") < n_queries).select(
+            *_query_cols(F.explode(_probe_buckets()).alias("bucket"))
         )
     )
     cand = corpus.join(q, on="bucket", how="inner").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    dot = _dot("q_emb", "emb")
     scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
+        "query_id", F.col("vec_id").alias("neighbor_id"), _cosine().alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk(scored, "cosine", k)
 
 
 # Trained (pyspark.ml k-means) IVF serving configuration. The synthetic
@@ -394,6 +456,14 @@ def _clu_center_emb_py(c: int, dim: int) -> list:
     return [(_h56_py(f"cctr:{c}:{j}") % 2001 - 1000) / 1e3 for j in range(dim)]
 
 
+def _clu_cent_rows(dim: int) -> list:
+    """The CLU_K true generating centers as (centroid_id, emb) rows: the
+    driver-side centroid table of the clustered IVF panels."""
+    from pyspark.sql import Row
+
+    return [Row(centroid_id=c, emb=_clu_center_emb_py(c, dim)) for c in range(CLU_K)]
+
+
 def _clu_emb_py(vid: int, centers: list, dim: int) -> list:
     """Python twin of one clustered_embeddings row:
     center[cluster(id)][j] + noise(id, j), same IEEE order per
@@ -497,8 +567,6 @@ def clustered_recall_panel(
     aggregate for the scanned-rows accounting. Output columns (hits,
     recall, scanned_rows, scanned_frac) are all exact integer / single-
     division arithmetic — full value-hash oracle."""
-    from pyspark.sql import Row
-
     corpus = clustered_embeddings(spark, sf_dir)
     # r12 (guide §2.4): assignment was a crossJoin(16-row cent) +
     # row_number window partitioned by vec_id — TWO full-corpus shuffles
@@ -507,51 +575,13 @@ def clustered_recall_panel(
     # (desc cos, asc centroid_id) order; centers twin-computed bit-equal
     # to clu_centroids — tests/test_extensions.py), so both assignment
     # passes are now shuffle-free map projections.
-    centers = [_clu_center_emb_py(c, CLU_DIM) for c in range(CLU_K)]
-    cent_rows = [Row(centroid_id=c, emb=centers[c]) for c in range(CLU_K)]
+    cent_rows = _clu_cent_rows(CLU_DIM)
 
     assigned = _ivf_assign(corpus, cent_rows, 1)
     queries = corpus.filter(F.col("vec_id") < n_queries)
-    probes = _ivf_assign(queries, cent_rows, CLU_N_PROBE).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        "centroid_id",
-    )
-
-    # IVF candidates: equi-join on centroid_id, exact re-rank to top-k
-    cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc((_dot("q_emb", "emb", CLU_DIM) / (F.col("q_norm") * F.col("norm")))),
-        F.asc("vec_id"),
-    )
-    ivfk = (
-        cand.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-
-    # exact truth over the same generated corpus
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
-    )
-    scored = corpus.join(q, F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot("q_emb", "emb", CLU_DIM) / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
-    )
-    wt = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    truth = (
-        scored.withColumn("rank", F.row_number().over(wt))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
-    )
+    probes = _ivf_assign(queries, cent_rows, CLU_N_PROBE).select(*_query_cols("centroid_id"))
+    ivfk = _ivf_serve(assigned, probes, k, CLU_DIM).select("query_id", "neighbor_id")
+    truth = _brute_force_over(corpus, n_queries, k, CLU_DIM).select("query_id", "neighbor_id")
 
     hits = (
         truth.join(ivfk, ["query_id", "neighbor_id"])
@@ -605,33 +635,26 @@ def _clustered_truth(corpus: DataFrame, n_queries: int, k: int) -> DataFrame:
     driver job before the serve job; lazy, the truth branch runs as
     independent stages of the final job (computed once, block-level
     get-or-compute) concurrently with the candidate branches."""
-    return _clustered_truth_plan(corpus, n_queries, k).localCheckpoint(eager=False)
+    truth = _brute_force_over(corpus, n_queries, k).select("query_id", "neighbor_id")
+    return truth.localCheckpoint(eager=False)
 
 
-def _clustered_truth_plan(corpus: DataFrame, n_queries: int, k: int) -> DataFrame:
-    """The UN-materialized brute-force truth plan behind _clustered_truth
-    — exposed so callers can overlap its materialization with another
-    independent subtree (concurrency.parallel_checkpoints, guide §2.6)."""
-    q = F.broadcast(
-        corpus.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
+def _clustered_panel(spark: SparkSession, sf_dir: str, n_queries: int) -> tuple:
+    """Driver-side inputs of the full-width clustered panels (r12, guide
+    §1.2): the CLU_K true generating centers as (centroid_id, emb) rows,
+    and {vec_id: emb} for the query panel and the PQ codebook rows
+    [PQ_CB_LO, +PQ_K) present in the table, twin-computed (bit-equal,
+    tests/test_extensions.py) in vec_id order. Its one Spark job is the
+    pruned id scan that finds which panel ids exist (was: three serial
+    collect jobs, each generating over the corpus)."""
+    cent_rows = _clu_cent_rows(EMB_DIM)
+    centers = [r.emb for r in cent_rows]
+    ids = _present_ids(
+        spark,
+        sf_dir,
+        f"vec_id < {n_queries} OR (vec_id >= {PQ_CB_LO} AND vec_id < {PQ_CB_LO + PQ_K})",
     )
-    wt = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    truth = (
-        corpus.join(q, F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (_dot("q_emb", "emb") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(wt))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    return truth
+    return cent_rows, {i: _clu_emb_py(i, centers, EMB_DIM) for i in ids}
 
 
 def clustered_tier_recall(
@@ -654,99 +677,39 @@ def clustered_tier_recall(
     recall ∝ scanned fraction), while here pruning and sign codes are
     honest: the rerank/nprobe dials should dominate. MEASURED.md carries
     the two-regime comparison."""
-    from pyspark.sql import Row
-
     # the truth and the IVF, BQ and PQ tiers all read the full-width
     # corpus: a lazy localCheckpoint generates it once inside the query
     corpus = clustered_embeddings(spark, sf_dir, dim=EMB_DIM).localCheckpoint(eager=False)
     queries = corpus.filter(F.col("vec_id") < n_queries)
     truth = _clustered_truth(corpus, n_queries, k)
-
-    # r12 (guide §1.2): centers, PQ codebooks and query distance tables
-    # are twin-computed driver-side (bit-equal, tests/test_extensions.py)
-    # — the only pre-serve Spark job is one pruned id scan establishing
-    # which panel ids exist in the table (was: three serial collect jobs
-    # each forcing generation work over the corpus).
-    centers = [_clu_center_emb_py(c, EMB_DIM) for c in range(CLU_K)]
-    ids = _present_ids(
-        spark,
-        sf_dir,
-        f"vec_id < {n_queries}"
-        f" OR (vec_id >= {PQ_CB_LO} AND vec_id < {PQ_CB_LO + PQ_K})",
-    )
-    emb_of = {i: _clu_emb_py(i, centers, EMB_DIM) for i in ids}
+    cent_rows, emb_of = _clustered_panel(spark, sf_dir, n_queries)
 
     # IVF tier: true generating centers, zero-shuffle inline assignment
-    cent_rows = [Row(centroid_id=c, emb=centers[c]) for c in range(CLU_K)]
-    assigned = _ivf_assign(corpus, cent_rows, 1)
-    probes = F.broadcast(
-        _ivf_assign(queries, cent_rows, CLU_N_PROBE).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-            "centroid_id",
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc(_dot("q_emb", "emb") / (F.col("q_norm") * F.col("norm"))),
-        F.asc("vec_id"),
-    )
-    ivfk = (
-        assigned.join(probes, "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
+    probes = _ivf_assign(queries, cent_rows, CLU_N_PROBE).select(*_query_cols("centroid_id"))
+    ivfk = _ivf_serve(_ivf_assign(corpus, cent_rows, 1), probes, k)
 
     # BQ tier: identical serve to bq_topk, over the clustered corpus
     bqk = _bq_topk_over(
         with_bq(corpus).select("vec_id", "emb", "norm", "code_lo", "code_hi"),
         n_queries,
         k,
-    ).select("query_id", "neighbor_id")
+    )
 
     # PQ-ADC tier: codebooks from the same deterministic corpus rows
     # (twin-computed from the present ids — identical python floats)
-    cb_rows = [emb_of[i] for i in ids if i >= PQ_CB_LO]
-    cbs = [
-        [r[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM] for r in cb_rows]
-        for m in range(PQ_M)
-    ]
+    cbs = _pq_split([e for i, e in emb_of.items() if i >= PQ_CB_LO])
     codes = pq_encode(corpus.select("vec_id", "emb"), cbs)
-    qrows = [(i, emb_of[i]) for i in ids if i < n_queries]
+    qrows = [(i, e) for i, e in emb_of.items() if i < n_queries]
     dtabs = F.broadcast(_pq_dtabs_from_rows(spark, qrows, cbs))
-    wp = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    pqk = (
-        codes.join(dtabs, F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), _pq_adc_dist().alias("adc_dist"))
-        .withColumn("rank", F.row_number().over(wp))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
+    pqk = _topk(
+        codes.join(dtabs, F.col("vec_id") != F.col("query_id")).select(
+            "query_id", F.col("vec_id").alias("neighbor_id"), _pq_adc_dist().alias("adc_dist")
+        ),
+        "adc_dist",
+        k,
+        desc=False,
     )
-
-    def hits(ann: DataFrame, name: str) -> DataFrame:
-        # every side here is <= Q*k rows (the panel) — broadcast so the
-        # static plan never SMJs a 50-row join
-        return F.broadcast(
-            truth.join(F.broadcast(ann), ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count("*").alias(name))
-        )
-
-    out = (
-        truth.select("query_id")
-        .distinct()
-        .join(hits(ivfk, "ivf_hits"), "query_id", "left")
-        .join(hits(bqk, "bq_hits"), "query_id", "left")
-        .join(hits(pqk, "pq_hits"), "query_id", "left")
-    )
-    cols = ["query_id"]
-    for t in ("ivf", "bq", "pq"):
-        h = F.coalesce(F.col(f"{t}_hits"), F.lit(0)).cast("long")
-        cols.append(h.alias(f"{t}_hits"))
-        cols.append((h / F.lit(float(k))).alias(f"{t}_recall"))
-    return out.select(*cols)
+    return _recall(truth, k, ivf=ivfk, bq=bqk, pq=pqk)
 
 
 def clustered_residual_ivfpq_recall(
@@ -772,19 +735,14 @@ def clustered_residual_ivfpq_recall(
     candidates join on centroid_id (the probe pruning) and pay M lookups
     each. Per-query recall vs in-plan brute-force truth; deterministic
     end to end, fully value-hashed by the DuckDB oracle."""
-    from pyspark.sql import Row
-
     # the truth, the residual codes and the refine stage all read the
     # full-width corpus: a lazy localCheckpoint generates it once
     corpus = clustered_embeddings(spark, sf_dir, dim=EMB_DIM).localCheckpoint(eager=False)
-    # r12 (guide §1.2): centers, probe assignments, residual codebooks and
-    # the per-(query, list) distance tables are all K/Q-bounded pure
-    # functions of the generator hashes — computed driver-side with the
-    # python twins (bit-equal, tests/test_extensions.py) instead of three
-    # serial Spark jobs. The only remaining pre-serve job is one pruned
-    # id scan establishing WHICH panel ids exist in the table.
-    centers = [_clu_center_emb_py(c, EMB_DIM) for c in range(CLU_K)]
-    cent_rows = [Row(centroid_id=c, emb=centers[c]) for c in range(CLU_K)]
+    # r12 (guide §1.2): probe assignments, residual codebooks and the
+    # per-(query, list) distance tables are K/Q-bounded pure functions of
+    # the generator hashes, computed driver-side from the panel's twins.
+    cent_rows, emb_of = _clustered_panel(spark, sf_dir, n_queries)
+    centers = [r.emb for r in cent_rows]
     assigned = _ivf_assign(corpus, cent_rows, 1)
     cdf = F.broadcast(
         spark.createDataFrame(
@@ -797,14 +755,7 @@ def clustered_residual_ivfpq_recall(
         "centroid_id",
         F.expr("zip_with(emb, c_emb, (a, b) -> a - b)").alias("emb"),
     )
-    ids = _present_ids(
-        spark,
-        sf_dir,
-        f"vec_id < {n_queries}"
-        f" OR (vec_id >= {PQ_CB_LO} AND vec_id < {PQ_CB_LO + PQ_K})",
-    )
-    emb_of = {i: _clu_emb_py(i, centers, EMB_DIM) for i in ids}
-    norm_of = {i: _fold_norm_py(emb_of[i]) for i in ids}
+    norm_of = {i: _fold_norm_py(e) for i, e in emb_of.items()}
     if codebooks is None:
         # default: deterministic sampled-row residual codebooks via the
         # SAME derivation as the plain PQ tier (_pq_codebooks' rows
@@ -813,21 +764,17 @@ def clustered_residual_ivfpq_recall(
         # residual codebooks here to measure how much training closes
         # the gap
         cb_rows = []
-        for i in ids:
+        for i, e in emb_of.items():
             if i >= PQ_CB_LO:
-                c = _assign_top_py(emb_of[i], norm_of[i], cent_rows, 1)[0]
-                ce = centers[c]
-                cb_rows.append([a - b for a, b in zip(emb_of[i], ce)])
-        codebooks = [
-            [r[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM] for r in cb_rows]
-            for m in range(PQ_M)
-        ]
+                c = _assign_top_py(e, norm_of[i], cent_rows, 1)[0]
+                cb_rows.append([a - b for a, b in zip(e, centers[c])])
+        codebooks = _pq_split(cb_rows)
     cbs = codebooks
     codes = pq_encode(resid, cbs, keep=("centroid_id",))
 
     # per-(query, probed-list) residual distance tables, driver-side
     data = []
-    for vid in (i for i in ids if i < n_queries):
+    for vid in (i for i in emb_of if i < n_queries):
         for cid in _assign_top_py(emb_of[vid], norm_of[vid], cent_rows, CLU_N_PROBE):
             c = centers[cid]
             rq = [float(a) - c[i2] for i2, a in enumerate(emb_of[vid])]
@@ -841,60 +788,18 @@ def clustered_residual_ivfpq_recall(
     cand = codes.join(dtabs, "centroid_id").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    wp = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
     scored = cand.select(
         "query_id", F.col("vec_id").alias("neighbor_id"), _pq_adc_dist().alias("adc_dist")
-    ).withColumn("crank", F.row_number().over(wp))
-    if rerank is None:
-        pqk = scored.filter(F.col("crank") <= k).select("query_id", "neighbor_id")
-    else:
-        # FAISS's refine stage: ADC proposes `rerank` candidates, the
-        # full-precision vectors re-rank ONLY those ids (O(Q·rerank),
-        # broadcast join-backs — the BQ stage-2 shape). Measured on this
-        # corpus: recall@5 0.52 (pure ADC) → 0.98 at rerank=20 → 1.00 at
-        # rerank=40, because ADC's quantization-ranking noise only needs
-        # the true neighbor INSIDE the candidate window, not at its top.
-        stage1 = scored.filter(F.col("crank") <= rerank).select(
-            "query_id", "neighbor_id"
-        )
-        nfull = corpus.select(
-            F.col("vec_id").alias("n_id"),
-            F.col("emb").alias("n_emb"),
-            F.col("norm").alias("n_norm"),
-        )
-        qfull = corpus.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("emb").alias("q_emb2"),
-            F.col("norm").alias("q_norm2"),
-        )
-        rcos = _dot("q_emb2", "n_emb") / (F.col("q_norm2") * F.col("n_norm"))
-        wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        pqk = (
-            nfull.join(F.broadcast(stage1), F.col("n_id") == F.col("neighbor_id"))
-            .join(F.broadcast(qfull), F.col("q_id") == F.col("query_id"))
-            .select("query_id", "neighbor_id", rcos.alias("cosine"))
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id")
-        )
-
-    truth = _clustered_truth(corpus, n_queries, k)
-    hits = F.broadcast(
-        truth.join(F.broadcast(pqk), ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("h"))
     )
-    h = F.coalesce(F.col("h"), F.lit(0)).cast("long")
-    return (
-        truth.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            h.alias("rpq_hits"),
-            (h / F.lit(float(k))).alias("rpq_recall"),
-        )
-    )
+    # FAISS's refine stage: ADC proposes `rerank` candidates, the
+    # full-precision vectors re-rank ONLY those ids (the BQ stage-2 shape).
+    # Measured on this corpus: recall@5 0.52 (pure ADC) → 0.98 at rerank=20
+    # → 1.00 at rerank=40, because ADC's quantization-ranking noise only
+    # needs the true neighbor INSIDE the candidate window, not at its top.
+    pqk = _topk(scored, "adc_dist", k if rerank is None else rerank, desc=False)
+    if rerank is not None:
+        pqk = _rerank(corpus, pqk.select("query_id", "neighbor_id"), n_queries, k)
+    return _recall(_clustered_truth(corpus, n_queries, k), k, rpq=pqk)
 
 
 def train_residual_codebooks(
@@ -964,9 +869,7 @@ def build_ivf_index(
     (plan-asserted in tests/test_plans.py)."""
     corpus = with_norm(load_table(spark, sf_dir, "embeddings")).select("vec_id", "emb", "norm")
     if centroids is None:
-        centroids = corpus.filter(
-            (F.col("vec_id") >= CENTROID_ID_LO) & (F.col("vec_id") < CENTROID_ID_LO + N_CENTROIDS)
-        ).select(F.col("vec_id").alias("centroid_id"), "emb", "norm")
+        centroids = _slice_centroids(corpus)
     assigned = _ivf_assign(corpus, centroids, 1)
     (
         assigned.select("centroid_id", "vec_id", "emb", "norm")
@@ -1025,34 +928,16 @@ def ivf_topk_from_index(
     Same output contract as `ivf_topk`."""
     corpus = with_norm(load_table(spark, sf_dir, "embeddings")).select("vec_id", "emb", "norm")
     if centroids is None:
-        centroids = corpus.filter(
-            (F.col("vec_id") >= CENTROID_ID_LO) & (F.col("vec_id") < CENTROID_ID_LO + N_CENTROIDS)
-        ).select(F.col("vec_id").alias("centroid_id"), "emb", "norm")
+        centroids = _slice_centroids(corpus)
     probes = _ivf_assign(corpus.filter(F.col("vec_id") < n_queries), centroids, N_PROBE).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        "centroid_id",
+        *_query_cols("centroid_id")
     )
     # the probed list ids are a tiny driver-side set (n_queries * nprobe);
     # inlining them as a literal IN-filter is what turns the scan into a
     # partition-pruned read of nprobe/K of the index
     probe_ids = sorted({r.centroid_id for r in probes.select("centroid_id").distinct().collect()})
     index = spark.read.parquet(index_dir).filter(F.col("centroid_id").isin(probe_ids))
-    cand = index.join(F.broadcast(probes), on="centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot("q_emb", "emb") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ivf_serve(index, probes, k)
 
 
 def _index_exists(spark: SparkSession, index_dir: str) -> bool:
@@ -1222,12 +1107,7 @@ def _sq8_topk_over(base: DataFrame, n_queries: int, k: int) -> DataFrame:
             ).alias("q_cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("q_cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "q_cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk(scored, "q_cosine", k)
 
 
 # --- BQ (1-bit binary quantization) tier -------------------------------------
@@ -1314,34 +1194,13 @@ def _bq_topk_over(
     a = F.broadcast(codes.filter(F.col("vec_id") < n_queries)).alias("a")
     b = codes.alias("b")
     ham = F.expr("bit_count(a.code_lo ^ b.code_lo) + bit_count(a.code_hi ^ b.code_hi)")
-    wc = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    cand = (
-        b.join(a, F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("query_id"),
-            F.col("b.vec_id").alias("neighbor_id"),
-            ham.cast("int").alias("hamming"),
-        )
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= rerank)
-        .drop("crank")
+    scored = b.join(a, F.col("a.vec_id") != F.col("b.vec_id")).select(
+        F.col("a.vec_id").alias("query_id"),
+        F.col("b.vec_id").alias("neighbor_id"),
+        ham.cast("int").alias("hamming"),
     )
-    qe = base.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb"), F.col("norm").alias("q_norm")
-    )
-    n = base.select(
-        F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb"), F.col("norm").alias("n_norm")
-    )
-    cosine = _dot("q_emb", "n_emb") / (F.col("q_norm") * F.col("n_norm"))
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        n.join(F.broadcast(cand), F.col("n_id") == F.col("neighbor_id"))
-        .join(F.broadcast(qe), F.col("q_id") == F.col("query_id"))
-        .select("query_id", "neighbor_id", "hamming", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "hamming", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    cand = _topk(scored, "hamming", rerank, desc=False).drop("rank")
+    return _rerank(base, cand, n_queries, k)
 
 
 # --- IVF (inverted-file) tier -------------------------------------------------
@@ -1353,6 +1212,15 @@ CENTROID_ID_LO = 100  # deterministic coarse centroids: vec_ids [100, 108)
 # the hard case: recall costs candidates; clustered real embeddings give far
 # more recall per probed list)
 N_PROBE = 3
+
+
+def _slice_centroids(corpus: DataFrame) -> DataFrame:
+    """The deterministic coarse centroids, (centroid_id, emb, norm): the
+    (vec_id, emb, norm) corpus rows [CENTROID_ID_LO, +N_CENTROIDS), which
+    the DuckDB oracles derive the same way."""
+    return corpus.filter(
+        (F.col("vec_id") >= CENTROID_ID_LO) & (F.col("vec_id") < CENTROID_ID_LO + N_CENTROIDS)
+    ).select(F.col("vec_id").alias("centroid_id"), "emb", "norm")
 
 
 def _ivf_assign(corpus: DataFrame, centroids: DataFrame | list, n_keep: int) -> DataFrame:
@@ -1460,32 +1328,13 @@ def ivf_topk(
     lists — only the centroid table changes, not this plan."""
     corpus = with_norm(load_table(spark, sf_dir, "embeddings")).select("vec_id", "emb", "norm")
     if centroids is None:
-        centroids = corpus.filter(
-            (F.col("vec_id") >= CENTROID_ID_LO) & (F.col("vec_id") < CENTROID_ID_LO + N_CENTROIDS)
-        ).select(F.col("vec_id").alias("centroid_id"), "emb", "norm")
+        centroids = _slice_centroids(corpus)
 
     cent_rows = centroids.select("centroid_id", "emb").collect()  # K rows, once
-    assigned = _ivf_assign(corpus, cent_rows, 1)
     probes = _ivf_assign(corpus.filter(F.col("vec_id") < n_queries), cent_rows, n_probe).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-        "centroid_id",
+        *_query_cols("centroid_id")
     )
-    cand = assigned.join(F.broadcast(probes), on="centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot("q_emb", "emb") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ivf_serve(_ivf_assign(corpus, cent_rows, 1), probes, k)
 
 
 # --- Product Quantization (PQ) tier ------------------------------------------
@@ -1511,8 +1360,14 @@ def _pq_codebooks(corpus) -> list[list[list[float]]]:
         .collect(),
         key=lambda r: r.vec_id,
     )
+    return _pq_split([r.emb for r in rows])
+
+
+def _pq_split(rows: list) -> list[list[list[float]]]:
+    """codebooks[m][k] = the m-th PQ_SUBDIM-wide subvector of codebook
+    vector rows[k]."""
     return [
-        [[float(v) for v in r.emb[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]] for r in rows]
+        [[float(v) for v in r[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]] for r in rows]
         for m in range(PQ_M)
     ]
 
@@ -1641,11 +1496,7 @@ def pq_adc_topk(
         .collect(),
         key=lambda r: r.vec_id,
     )
-    cb_rows = [r for r in panel if PQ_CB_LO <= r.vec_id < PQ_CB_LO + PQ_K]
-    cbs = [
-        [[float(v) for v in r.emb[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]] for r in cb_rows]
-        for m in range(PQ_M)
-    ]
+    cbs = _pq_split([r.emb for r in panel if PQ_CB_LO <= r.vec_id < PQ_CB_LO + PQ_K])
     codes = pq_encode(e, cbs)
     # The distance TABLE is materialized per QUERY before the join (PQ's
     # defining trick) — as driver-computed DATA, not an expression tree:
@@ -1661,12 +1512,7 @@ def pq_adc_topk(
         F.col("vec_id").alias("neighbor_id"),
         _pq_adc_dist().alias("adc_dist"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk(scored, "adc_dist", k, desc=False)
 
 
 def ivfpq_topk(
@@ -1704,11 +1550,7 @@ def ivfpq_topk(
         .collect(),
         key=lambda r: r.vec_id,
     )
-    cb_rows = [r for r in panel if PQ_CB_LO <= r.vec_id < PQ_CB_LO + PQ_K]
-    cbs = [
-        [[float(v) for v in r.emb[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]] for r in cb_rows]
-        for m in range(PQ_M)
-    ]
+    cbs = _pq_split([r.emb for r in panel if PQ_CB_LO <= r.vec_id < PQ_CB_LO + PQ_K])
     cent_rows = [
         Row(centroid_id=int(r.vec_id), emb=r.emb)
         for r in panel
@@ -1733,14 +1575,7 @@ def ivfpq_topk(
         F.col("vec_id").alias("neighbor_id"),
         _pq_adc_dist().alias("adc_dist"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "adc_dist", F.col("rank").cast("int").alias("rank")
-        )
-    )
+    return _topk(scored, "adc_dist", k, desc=False)
 
 
 # --- exact distributed k-means over the SQ8 lattice (Lloyd's, late r9) --------
@@ -1976,34 +1811,16 @@ def with_rp(embeddings: DataFrame) -> DataFrame:
 def rp_topk(
     spark: SparkSession, sf_dir: str, n_queries: int = 10, k: int = 5
 ) -> DataFrame:
-    """Brute-force cosine top-k in the PROJECTED 16-dim space — the
-    brute_force_topk plan with 4x narrower vectors and a 16-term score
+    """Brute-force cosine top-k in the PROJECTED 16-dim space (`cosine`
+    is the projected-space cosine) — the brute_force_topk plan with 4x
+    narrower vectors and a 16-term score
     fold instead of 64 (at 100 TB: 4x less scan/shuffle volume and 4x
     less score arithmetic for stage 1; re-rank survivors at full
     precision exactly like the BQ tier if exactness matters)."""
     corpus = with_rp(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "rp", "rp_norm"
+        "vec_id", F.col("rp").alias("emb"), F.col("rp_norm").alias("norm")
     )
-    q = F.broadcast(
-        corpus.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("rp").alias("q_rp"),
-            F.col("rp_norm").alias("q_rp_norm"),
-        )
-    )
-    scored = corpus.join(q, F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (_dot("q_rp", "rp", dim=RP_OUT_DIM) / (F.col("q_rp_norm") * F.col("rp_norm"))).alias(
-            "rp_cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("rp_cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rp_cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _brute_force_over(corpus, n_queries, k, RP_OUT_DIM)
 
 
 RP_RERANK = 40  # stage-1 candidate depth for the full-precision rerank
@@ -2041,31 +1858,15 @@ def rp_rerank_topk(
         else rp_topk(spark, sf_dir, n_queries, RP_RERANK)
     ).select("query_id", "neighbor_id")
     raw = load_table(spark, sf_dir, "embeddings")
-    qside = with_norm(raw.filter(F.col("vec_id") < n_queries)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    scored = (
-        with_norm(
-            raw.select(F.col("vec_id").alias("neighbor_id"), "embedding").join(
-                F.broadcast(cand.join(qside, on="query_id", how="inner")),
-                on="neighbor_id",
-                how="inner",
-            )
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot("q_emb", "emb") / (F.col("q_norm") * F.col("norm"))).alias("cosine"),
+    qside = with_norm(raw.filter(F.col("vec_id") < n_queries)).select(*_query_cols())
+    pairs = with_norm(
+        raw.select(F.col("vec_id").alias("neighbor_id"), "embedding").join(
+            F.broadcast(cand.join(qside, on="query_id", how="inner")),
+            on="neighbor_id",
+            how="inner",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _topk(pairs.select("query_id", "neighbor_id", _cosine().alias("cosine")), "cosine", k)
 
 
 def rp_recall(

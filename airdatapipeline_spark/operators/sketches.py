@@ -46,7 +46,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .text import hash56, tokens_col
+from .dedup import _shingles
+from .text import hash56
 
 # --- HyperLogLog configuration ----------------------------------------------
 # p=6 -> m=64 registers (std error 1.04/sqrt(64) ~ 13%): small enough that
@@ -81,23 +82,11 @@ KMV_HASH_SPACE = 1 << HLL_HASH_BITS  # 2^56
 KMV_EST_NUM = float((KMV_K - 1) * KMV_HASH_SPACE)
 
 
-def _source_shingles_df(docs: DataFrame) -> DataFrame:
-    """(source, shingle) from a documents frame: word 3-grams, distinct
-    within each document (dedup._shingles with the source key carried
-    instead of doc_id). Frame-level so the streaming ingest twin can run
-    the IDENTICAL shingle pipeline on each micro-batch."""
-    toks = docs.select("source", tokens_col().alias("t"))
-    sh = F.when(
-        F.size("t") >= 3,
-        F.expr(
-            "transform(sequence(0, size(t) - 3), i -> concat_ws(' ', t[i], t[i+1], t[i+2]))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return toks.select("source", F.explode(F.array_distinct(sh)).alias("shingle"))
-
-
 def _source_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _source_shingles_df(load_table(spark, sf_dir, "documents"))
+    """(source, shingle) over the documents table: word 3-grams, distinct
+    within each document. The streaming ingest twins run the same
+    `dedup._shingles(batch, "source")` on each micro-batch."""
+    return _shingles(load_table(spark, sf_dir, "documents"), "source")
 
 
 def hll_registers(hashed: DataFrame) -> DataFrame:

@@ -576,11 +576,7 @@ def q_ivf_list_stats(spark, sf_dir):
     corpus = similarity.with_norm(
         load_table(spark, sf_dir, "embeddings")
     ).select("vec_id", "emb", "norm")
-    centroids = corpus.filter(
-        (F.col("vec_id") >= similarity.CENTROID_ID_LO)
-        & (F.col("vec_id") < similarity.CENTROID_ID_LO + similarity.N_CENTROIDS)
-    ).select(F.col("vec_id").alias("centroid_id"), "emb", "norm")
-    assigned = similarity._ivf_assign(corpus, centroids, 1)
+    assigned = similarity._ivf_assign(corpus, similarity._slice_centroids(corpus), 1)
     total = assigned.count()
     return assigned.groupBy(
         F.col("centroid_id").cast("long").alias("centroid_id")

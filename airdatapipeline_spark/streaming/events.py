@@ -708,7 +708,8 @@ def hll_register_ingest_append(
     The committed estimate after draining the landing dir equals the batch
     query's estimate over the same corpus — what the DuckDB oracle
     replays."""
-    from ..operators.sketches import _source_shingles_df, hll_registers, hll_scope_estimates
+    from ..operators.dedup import _shingles
+    from ..operators.sketches import hll_registers, hll_scope_estimates
     from ..operators.text import hash56
 
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
@@ -716,7 +717,7 @@ def hll_register_ingest_append(
     out_schema = "source string, j long, m int"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
-        hashed = _source_shingles_df(bdf).select("source", hash56("shingle").alias("h"))
+        hashed = _shingles(bdf, "source").select("source", hash56("shingle").alias("h"))
         # partial registers of THIS batch only — no read-modify-write and
         # no committed-set anti-join: max-merge absorbs duplicates
         hll_registers(hashed).write.mode("append").parquet(out)
@@ -950,7 +951,8 @@ def kmv_register_ingest_append(
     drained estimates equal the batch query's sketch columns — what the
     DuckDB oracle replays (the exact-Jaccard verifier columns stay with
     the batch query; sketch state cannot reproduce them, by design)."""
-    from ..operators.sketches import _source_shingles_df, kmv_bottom_k, kmv_pair_estimates
+    from ..operators.dedup import _shingles
+    from ..operators.sketches import kmv_bottom_k, kmv_pair_estimates
     from ..operators.text import hash56
 
     stream = _file_stream(spark, sf_dir, "documents", landing_dir, max_files_per_trigger)
@@ -958,7 +960,7 @@ def kmv_register_ingest_append(
     out_schema = "source string, h long"
 
     def contribute(bdf: DataFrame, _bid: int) -> None:
-        hashed = _source_shingles_df(bdf).select("source", hash56("shingle").alias("h"))
+        hashed = _shingles(bdf, "source").select("source", hash56("shingle").alias("h"))
         # partial bottom-k of THIS batch only — union + re-cut on read
         # absorbs duplicates, so no committed-key bookkeeping
         kmv_bottom_k(hashed).write.mode("append").parquet(out)

@@ -71,6 +71,33 @@ def test_llm_operator_build_job_budget(spark, query):
     assert len(jobs) <= BUILD_JOB_BUDGETS[query], (query, len(jobs))
 
 
+def test_query_entry_frees_proxies_of_earlier_queries(spark):
+    """A frame's `_jdf` proxy sits in a cycle with the method proxies py4j
+    caches on it. Promoted to the oldest generation while its query runs,
+    it keeps the JVM Dataset, plan and broadcasts after the frame is
+    dropped, until a full collection; the next registered query runs one
+    before it builds."""
+    import gc
+    import weakref
+
+    from airdatapipeline_spark.registry import QUERIES
+
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        df = QUERIES["text_train_val_split"](spark, SF_SMALL)
+        df.collect()
+        jdf = weakref.ref(df._jdf)
+        gc.collect()  # the frame is alive: its proxy moves to the oldest generation
+        del df
+        assert jdf() is not None
+        QUERIES["text_train_val_split"](spark, SF_SMALL)
+        assert jdf() is None
+    finally:
+        if enabled:
+            gc.enable()
+
+
 def _union_find_min_labels(pairs):
     parent: dict[int, int] = {}
 

@@ -712,6 +712,36 @@ def test_bq_rerank_joins_are_broadcast_hash(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_topk_and_recall_share_one_ranking_rule(spark):
+    """_topk ranks by (score, neighbor_id asc) in both directions and keeps
+    the carried columns; _recall grades only truth queries, with 0 hits
+    and 0.0 recall where a tier matched nothing."""
+    scored = spark.createDataFrame(
+        [(1, 7, 0.5, "a"), (1, 3, 0.5, "b"), (1, 5, 0.9, "c"), (1, 4, 0.1, "d"),
+         (2, 9, 0.2, "e"), (2, 8, 0.2, "f")],
+        "query_id long, neighbor_id long, score double, tag string",
+    )
+    best = similarity._topk(scored, "score", 2).orderBy("query_id", "rank").collect()
+    assert [(r.query_id, r.neighbor_id, r.rank, r.tag) for r in best] == [
+        (1, 5, 1, "c"), (1, 3, 2, "b"), (2, 8, 1, "f"), (2, 9, 2, "e"),
+    ]
+    assert dict(similarity._topk(scored, "score", 2).dtypes)["rank"] == "int"
+    low = similarity._topk(scored, "score", 3, desc=False).orderBy("query_id", "rank")
+    assert [(r.query_id, r.neighbor_id) for r in low.collect()] == [
+        (1, 4), (1, 3), (1, 7), (2, 8), (2, 9),
+    ]
+
+    truth = spark.createDataFrame(
+        [(1, 5), (1, 3), (2, 8), (2, 9)], "query_id long, neighbor_id long"
+    )
+    tier = spark.createDataFrame(
+        [(1, 5), (1, 6), (3, 1)], "query_id long, neighbor_id long"
+    )
+    got = similarity._recall(truth, 2, t=tier).orderBy("query_id").collect()
+    assert [tuple(r) for r in got] == [(1, 1, 0.5), (2, 0, 0.0)]
+    assert got[0].__fields__ == ["query_id", "t_hits", "t_recall"]
+
+
 # --- heavy hitters (Misra-Gries prefilter + exact recount) -------------------
 
 

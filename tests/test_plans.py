@@ -22,6 +22,31 @@ def _explain(df) -> str:
     )
 
 
+def test_plan_dump_masking_hides_only_global_counters():
+    """capture_plans' masking: two dumps of one plan that differ only in
+    Spark's process-global counters compare equal; a changed operator
+    still shows."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from capture_plans import mask_counters
+
+    def plan(expr_id, plan_id, rdd_id, lam, op="BroadcastHashJoin"):
+        return (
+            f"(1) {op}\nLeft keys [1]: [query_id#{expr_id}L]\n"
+            f"Arguments: hashpartitioning(query_id#{expr_id}L, 32), [plan_id={plan_id}]\n"
+            f"Scan ExistingRDD MapPartitionsRDD[{rdd_id}]\n"
+            f"array_sort(x, lambdafunction(f(lambda x_{lam}#{expr_id + 1}, "
+            f"lambda y_{lam + 1}#{expr_id + 2}), lambda x_{lam}#{expr_id + 1}, "
+            f"lambda y_{lam + 1}#{expr_id + 2}, false))\n"
+        )
+
+    a = mask_counters(plan(3, 1019, 16, 1))
+    assert a == mask_counters(plan(64, 1035, 18, 9))
+    assert a != mask_counters(plan(64, 1035, 18, 9, op="SortMergeJoin"))
+
+
 def test_q1_filter_pushdown_and_column_pruning(spark):
     ex = _explain(tpch.q1_pricing_summary(spark, SF_SMALL))
     assert "PushedFilters" in ex and "l_shipdate" in ex.split("PushedFilters")[1][:200]

@@ -6,9 +6,10 @@ Usage: python tools/capture_plans.py OUTDIR TAG QUERY [QUERY ...] [--sf SF_DIR]
   TAG is `before` or `after` (or any suffix).
 
 Spark's process-global counters (expression ids `#N`, exchange
-`plan_id=N`, RDD ids `RDD[N]`) depend on everything the process planned
-before, so each dump renumbers them in order of first appearance: two
-dumps of the same plan compare byte-equal (`cmp`), whatever ran before.
+`plan_id=N`, RDD ids `RDD[N]`, the suffix of a Python lambda's variables
+`lambda x_N`) depend on everything the process planned before, so each
+dump renumbers them in order of first appearance: two dumps of the same
+plan compare byte-equal (`cmp`), whatever ran before.
 """
 
 from __future__ import annotations
@@ -22,7 +23,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def mask_counters(plan: str) -> str:
     """`plan` with each global counter renumbered by first appearance."""
-    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"):
+    for pattern in (
+        r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)", r"(lambda \w+_)(\d+)"
+    ):
         ids: dict[str, int] = {}
         plan = re.sub(
             pattern, lambda m: f"{m[1]}{ids.setdefault(m[2], len(ids))}", plan
