@@ -234,18 +234,14 @@ _between_swap_renames = None
 class LocalLayoutIO:
     """The layout lifecycle's durability primitives behind one seam
     (VERDICT-r7 item 7): every filesystem mutation the snapshot mechanics
-    depend on goes through these five methods, with local-POSIX semantics
+    depend on goes through these four methods, with local-POSIX semantics
     here and DESIGN.md §6's object-storage mapping as the drop-in
-    replacement — `link_file`/`link_dir` → manifest data-file reuse,
-    `atomic_swap` → snapshot-manifest commit, `writer_lock` → optimistic
-    CAS commit, `recover` → orphaned-manifest GC. The lifecycle operators
-    themselves (write/append/compact/delete) stay storage-agnostic: they
-    stage, verify, then ask the seam to publish."""
-
-    def link_file(self, src: str, dst: str) -> None:
-        import os
-
-        os.link(src, dst)
+    replacement — `link_dir` → manifest data-file reuse, `atomic_swap` →
+    snapshot-manifest commit, `writer_lock` → optimistic CAS commit,
+    `recover` → orphaned-manifest GC. The operators that rewrite parquet
+    (the shard lifecycle here, compaction and keyed deletes in
+    sources/maintenance.py) stay storage-agnostic: they stage, verify
+    (`_verify_staged`), then ask the seam to publish."""
 
     def link_dir(self, src: str, dst: str) -> None:
         """Hard-link every regular file of `src` into a (created) `dst` —
@@ -323,6 +319,48 @@ class LocalLayoutIO:
 
 LAYOUT_IO = LocalLayoutIO()
 
+_LAYOUT_COLS = ("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
+
+
+def _write_layout(laid: DataFrame, n_shards: int, dest: str):
+    """The one shard write: the layout columns of `laid`, range-partitioned
+    on shard_id over `n_shards` tasks and sorted in layout order, written
+    (overwriting) as `shard_id=K/` dirs under `dest` — see write_shards for
+    why. Returns the written schema for `_verify_staged`."""
+    laid = laid.select(*_LAYOUT_COLS)
+    (
+        laid.repartitionByRange(n_shards, "shard_id")
+        .sortWithinPartitions("shard_id", "hkey", "doc_id")
+        .write.mode("overwrite")
+        .partitionBy("shard_id")
+        .parquet(dest)
+    )
+    return laid.schema
+
+
+def _verify_staged(
+    spark: SparkSession, staging: str, schema, expected: int, what: str
+) -> None:
+    """The check before every publish of a staged parquet rewrite: the
+    write committed (`_SUCCESS`) and the staged rows, counted from the
+    footers under the declared `schema` (no inference job, and a staging
+    root left without data files counts 0), equal `expected`. On failure
+    the staging dir is removed and the live data was never touched."""
+    import os
+    import shutil
+
+    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
+        problem = "did not commit"
+    else:
+        n = spark.read.schema(schema).parquet(staging).count()
+        problem = None if n == expected else f"has {n} rows, expected {expected}"
+    if problem:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise RuntimeError(
+            f"{what} aborted before swap: staging {staging} {problem}; "
+            f"live data untouched"
+        )
+
 
 @_single_writer
 def write_shards(
@@ -352,13 +390,13 @@ def write_shards(
     - Readers of one shard touch one directory (partition pruning on the
       shard_id dir column), e.g. a resumed training job re-reading shard 17.
 
-    Durability contract (same as sources/maintenance.compact_parquet): the
-    layout is written to a sibling staging dir, verified (_SUCCESS + a
-    footer-only row-count match against the assignment count) BEFORE any
-    mutation of `out_path`, then swapped in with the previous layout parked
-    at `<out>.__old__` until the new one is live; `recover_shards` heals a
-    crash between the two renames. A reshard can therefore never destroy a
-    serving layout on failure.
+    Durability contract (the seam's, shared with every staged parquet
+    rewrite): the layout is written to a sibling staging dir, verified
+    (`_verify_staged`: _SUCCESS + a footer-only row-count match against the
+    assignment count) BEFORE any mutation of `out_path`, then swapped in
+    with the previous layout parked at `<out>.__old__` until the new one is
+    live; `recover_shards` heals a crash between the two renames. A reshard
+    can therefore never destroy a serving layout on failure.
 
     Returns {path, n_shards, n_docs} from the write's own plan (no second
     scan: counts come from the assignment aggregate that also sizes the
@@ -406,25 +444,8 @@ def write_shards(
     else:
         n_shards = int(stats["max_shard"]) + 1
         n_docs = int(stats["n_docs"])
-        laid = assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-        (
-            laid.repartitionByRange(n_shards, "shard_id")
-            .sortWithinPartitions("shard_id", "hkey", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(staging)
-        )
-    if n_shards > 0:
-        if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-            raise RuntimeError(f"shard write to {staging} did not commit")
-        # footer-only scan; the declared schema skips the inference job
-        staged_rows = spark.read.schema(laid.schema).parquet(staging).count()
-        if staged_rows != n_docs:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise RuntimeError(
-                f"shard write aborted before swap: staging has {staged_rows} docs, "
-                f"assignment has {n_docs}; existing layout untouched"
-            )
+        schema = _write_layout(assign, n_shards, staging)
+        _verify_staged(spark, staging, schema, n_docs, "shard write")
     _link_tombstones(out_path, staging)
     LAYOUT_IO.atomic_swap(out_path, staging)
     # drop any cached plan/listing over the (now replaced) layout path —
@@ -487,23 +508,18 @@ def _link_tombstones(out_path: str, staging: str) -> None:
     LAYOUT_IO.link_dir(src, os.path.join(staging, "_deleted"))
 
 
-def _link_snapshot(out_path: str, staging: str, skip_shards: set[int]) -> None:
-    """Stage the kept generation into a fresh sibling snapshot root:
-    every root-level marker FILE (_SUCCESS) and every `shard_id=K/` dir
-    not in `skip_shards`, hard-linked file-by-file through the seam
-    (metadata-only — IO ∝ directory entries, never payload)."""
+def _link_snapshot(out_path: str, staging: str, skip, col: str) -> None:
+    """Carry the kept generation into a snapshot root the rewrite has just
+    been written to: every `<col>=v/` dir of `out_path` whose v is not in
+    `skip` is hard-linked file-by-file through the seam beside the
+    rewritten dirs (metadata-only — IO ∝ directory entries, never
+    payload). The root's `_SUCCESS` is the rewrite's own commit marker."""
     import os
 
-    os.makedirs(staging)
+    skipped = {f"{col}={v}" for v in skip}
     for entry in sorted(os.listdir(out_path)):
-        src = os.path.join(out_path, entry)
-        if not entry.startswith("shard_id="):
-            if os.path.isfile(src):
-                LAYOUT_IO.link_file(src, os.path.join(staging, entry))
-            continue
-        if int(entry.split("=", 1)[1]) in skip_shards:
-            continue
-        LAYOUT_IO.link_dir(src, os.path.join(staging, entry))
+        if entry.startswith(f"{col}=") and entry not in skipped:
+            LAYOUT_IO.link_dir(os.path.join(out_path, entry), os.path.join(staging, entry))
 
 
 def _carry_tombstones_compacted(spark: SparkSession, out_path: str, staging: str) -> None:
@@ -750,23 +766,8 @@ def append_docs(
         }
     n_new_docs = int(stats["n_docs"])
     n_new_shards = int(stats["max_shard"]) - last_shard
-    laid = assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-    (
-        laid.repartitionByRange(n_new_shards, "shard_id")
-        .sortWithinPartitions("shard_id", "hkey", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(staging)
-    )
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        raise RuntimeError(f"shard append to {staging} did not commit")
-    staged_rows = spark.read.schema(laid.schema).parquet(staging).count()
-    if staged_rows != n_new_docs:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"shard append aborted before move: staging has {staged_rows} docs, "
-            f"delta has {n_new_docs}; existing layout untouched"
-        )
+    schema = _write_layout(assign, n_new_shards, staging)
+    _verify_staged(spark, staging, schema, n_new_docs, "shard append")
     # the live root is only created (or first populated) AFTER the staging
     # verification above, so a failed staged write can never leave a
     # poisoned empty layout behind
@@ -826,7 +827,6 @@ def compact_shards(
       an id without reducing fragment count).
 
     Returns {path, n_compacted_shards, n_new_shards, n_moved_docs}."""
-    import os
     import shutil
 
     out_path = out_path.rstrip("/")
@@ -869,20 +869,11 @@ def compact_shards(
         int(prev["n_docs"]),
     )
 
-    # stage: hard-link every kept shard dir (metadata-only)
-    _link_snapshot(out_path, staging, set(under))
-    # tombstones survive compaction (the bar on deleted ids is a property
-    # of the corpus, not of one generation) and get their own small-file
-    # merge here; _manifest deliberately does NOT carry — a compaction
-    # invalidates the shard inventory
-    _carry_tombstones_compacted(spark, out_path, staging)
-
     # re-lay the fragment docs (partition pruning reads only those dirs)
     moved = layout.filter(F.col("shard_id").isin(under)).select(
         "doc_id", "source", "text"
     )
     assign = _assignments_for(moved, budget, carry=("source", "text"))
-    tmp_delta = staging + ".__delta__"
     assign = assign.withColumn(
         "start_off", F.col("start_off") + F.lit(prev_end)
     ).withColumn("shard_id", F.col("shard_id") + F.lit(next_id))
@@ -890,27 +881,16 @@ def compact_shards(
         F.max("shard_id").alias("max_shard"), F.count("*").alias("n_moved")
     ).first()
     n_moved, n_new = int(stats["n_moved"]), int(stats["max_shard"]) - next_id + 1
-    laid = assign.select("doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id")
-    (
-        laid.repartitionByRange(n_new, "shard_id")
-        .sortWithinPartitions("shard_id", "hkey", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(tmp_delta)
-    )
-    for entry in sorted(os.listdir(tmp_delta)):
-        if entry.startswith("shard_id="):
-            os.rename(os.path.join(tmp_delta, entry), os.path.join(staging, entry))
-    shutil.rmtree(tmp_delta, ignore_errors=True)
-
+    schema = _write_layout(assign, n_new, staging)
+    # beside the new shards: every kept shard dir, hard-linked (metadata-
+    # only); tombstones survive compaction (the bar on deleted ids is a
+    # property of the corpus, not of one generation) and get their own
+    # small-file merge here; _manifest deliberately does NOT carry — a
+    # compaction invalidates the shard inventory
+    _link_snapshot(out_path, staging, under, "shard_id")
+    _carry_tombstones_compacted(spark, out_path, staging)
     # verify BEFORE any mutation of the live root (write_shards contract)
-    staged_docs = spark.read.schema(laid.schema).parquet(staging).count()
-    if staged_docs != total_docs:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction aborted before swap: staging has {staged_docs} docs, "
-            f"layout has {total_docs}; existing layout untouched"
-        )
+    _verify_staged(spark, staging, schema, total_docs, "compaction")
     LAYOUT_IO.atomic_swap(out_path, staging)
     spark.catalog.refreshByPath(out_path)
     return {
@@ -927,7 +907,7 @@ def delete_from_shards(
 ) -> dict:
     """Targeted document deletion from a shard layout — right-to-be-
     forgotten applied to the trainer-facing artifact itself (the analogue
-    of sources/maintenance.delete_keys for parquet tables). Rewrites ONLY
+    of sources/maintenance.delete_keys_partitioned for parquet tables). Rewrites ONLY
     the shards that hold doomed doc_ids; every untouched shard dir is
     hard-linked into a sibling snapshot root (metadata-only, same idiom
     as compact_shards) and one atomic root swap serves the new generation
@@ -1031,10 +1011,6 @@ def delete_from_shards(
         }
     total_docs = layout.count()  # parquet footer count, no payload read
 
-    _link_snapshot(out_path, staging, set(affected))
-    _link_tombstones(out_path, staging)
-    n_tombstoned = _write_tombstones(staging)
-
     # the affected-shard scan joins a K-row DataFrame rather than
     # inlining a giant IN-expression (ADVICE-r6): dynamic partition
     # pruning on the broadcast build side prunes the shard dirs the same
@@ -1045,33 +1021,13 @@ def delete_from_shards(
     survivors = layout.join(
         F.broadcast(affected_df), "shard_id", "left_semi"
     ).join(ids, "doc_id", "left_anti")
-    tmp_delta = staging + ".__rewrite__"
-    laid = survivors.select(
-        "doc_id", "source", "hkey", "n_tok", "start_off", "text", "shard_id"
-    )
-    (
-        laid.repartitionByRange(max(len(affected), 1), "shard_id")
-        .sortWithinPartitions("shard_id", "hkey", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(tmp_delta)
-    )
-    rewritten = 0
-    for entry in sorted(os.listdir(tmp_delta)):
-        if entry.startswith("shard_id="):
-            os.rename(os.path.join(tmp_delta, entry), os.path.join(staging, entry))
-            rewritten += 1
-    shutil.rmtree(tmp_delta, ignore_errors=True)
-
-    expected = total_docs - n_deleted
-    # declared schema: a fully-emptied layout has no file to infer one from
-    staged_docs = spark.read.schema(laid.schema).parquet(staging).count()
-    if staged_docs != expected:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"deletion aborted before swap: staging has {staged_docs} docs, "
-            f"expected {expected}; existing layout untouched"
-        )
+    schema = _write_layout(survivors, max(len(affected), 1), staging)
+    # a shard whose every doc was deleted wrote no dir: it is retired
+    rewritten = sum(e.startswith("shard_id=") for e in os.listdir(staging))
+    _link_snapshot(out_path, staging, affected, "shard_id")
+    _link_tombstones(out_path, staging)
+    n_tombstoned = _write_tombstones(staging)
+    _verify_staged(spark, staging, schema, total_docs - n_deleted, "deletion")
     LAYOUT_IO.atomic_swap(out_path, staging)
     spark.catalog.refreshByPath(out_path)
     return {

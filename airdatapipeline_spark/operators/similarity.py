@@ -288,36 +288,16 @@ def recall_at_k(
     brute-force top-k, per query — the self-grading dial for the ANN family:
     tune N_PLANES / N_PROBE against a measured number instead of a blind
     knob. Ground truth is recomputed here (not read from a prior run) so the
-    query is a single self-contained plan: three corpus scans + two
-    equi-joins on (query_id, neighbor_id) + one agg. The expensive side
-    (brute force) is O(Q·N) but Q is the small probe set — at 100 TB this is
-    exactly how recall is audited: a sampled query panel, never the full
-    corpus."""
+    query is a single self-contained plan, graded by `_recall`. The
+    expensive side (brute force) is O(Q·N) but Q is the small probe set —
+    at 100 TB this is exactly how recall is audited: a sampled query panel,
+    never the full corpus."""
     truth = brute_force_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
     lsh = lsh_bucketed_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
     ivf = ivf_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
     sq8 = sq8_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
     trained = trained_ivf_topk(spark, sf_dir, n_queries, k).select("query_id", "neighbor_id")
-
-    def hits(ann: DataFrame, name: str) -> DataFrame:
-        return (
-            truth.join(ann, on=["query_id", "neighbor_id"], how="inner")
-            .groupBy("query_id")
-            .agg(F.count("*").alias(name))
-        )
-
-    out = (
-        truth.select("query_id")
-        .distinct()
-        .join(hits(lsh, "lsh_hits"), on="query_id", how="left")
-        .join(hits(ivf, "ivf_hits"), on="query_id", how="left")
-        .join(hits(sq8, "sq8_hits"), on="query_id", how="left")
-        .join(hits(trained, "trained_hits"), on="query_id", how="left")
-    )
-    lsh_hits = F.coalesce(F.col("lsh_hits"), F.lit(0)).cast("long")
-    ivf_hits = F.coalesce(F.col("ivf_hits"), F.lit(0)).cast("long")
-    sq8_hits = F.coalesce(F.col("sq8_hits"), F.lit(0)).cast("long")
-    trained_hits = F.coalesce(F.col("trained_hits"), F.lit(0)).cast("long")
+    out = _recall(truth, k, lsh=lsh, ivf=ivf, sq8=sq8, trained=trained)
     # Panel-level floor assertion for the trained tier. The exact trained
     # hit counts are NOT emitted: pyspark.ml k-means is not reproducible in
     # the DuckDB oracle, so the contract the oracle checks is the floor
@@ -333,18 +313,12 @@ def recall_at_k(
     # fewer than the eager form (CC-loop precedent).
     out = out.localCheckpoint(eager=False)
     panel = out.agg(
-        (F.sum(trained_hits) / (F.count(F.lit(1)) * F.lit(float(k))) >= F.lit(RECALL_FLOOR))
+        (F.sum("trained_hits") / (F.count(F.lit(1)) * F.lit(float(k))) >= F.lit(RECALL_FLOOR))
         .alias("ivf_trained_floor_met")
     )
     return out.crossJoin(F.broadcast(panel)).select(
-        "query_id",
-        lsh_hits.alias("lsh_hits"),
-        ivf_hits.alias("ivf_hits"),
-        sq8_hits.alias("sq8_hits"),
-        (lsh_hits / F.lit(float(k))).alias("lsh_recall"),
-        (ivf_hits / F.lit(float(k))).alias("ivf_recall"),
-        (sq8_hits / F.lit(float(k))).alias("sq8_recall"),
-        "ivf_trained_floor_met",
+        "query_id", "lsh_hits", "ivf_hits", "sq8_hits",
+        "lsh_recall", "ivf_recall", "sq8_recall", "ivf_trained_floor_met",
     )
 
 
@@ -582,13 +556,8 @@ def clustered_recall_panel(
     probes = _ivf_assign(queries, cent_rows, CLU_N_PROBE).select(*_query_cols("centroid_id"))
     ivfk = _ivf_serve(assigned, probes, k, CLU_DIM).select("query_id", "neighbor_id")
     truth = _brute_force_over(corpus, n_queries, k, CLU_DIM).select("query_id", "neighbor_id")
-
-    hits = (
-        truth.join(ivfk, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count("*").alias("ivf_hits"))
-    )
-    # scanned-rows accounting: list sizes of the probed centroids
+    # scanned-rows accounting: list sizes of the probed centroids (Q rows,
+    # broadcast into the graded panel like _recall's sides)
     lists = assigned.groupBy("centroid_id").agg(F.count("*").alias("list_n"))
     scanned = (
         probes.join(F.broadcast(lists), "centroid_id")
@@ -602,17 +571,13 @@ def clustered_recall_panel(
         corpus.groupBy().agg(F.count(F.lit(1)).cast("double").alias("__n_corpus"))
     )
     return (
-        truth.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .join(scanned, "query_id", "left")
+        _recall(truth, k, ivf=ivfk)
+        .join(F.broadcast(scanned), "query_id", "left")
         .crossJoin(ncnt)
         .select(
             "query_id",
-            F.coalesce("ivf_hits", F.lit(0)).cast("long").alias("ivf_hits"),
-            (F.coalesce("ivf_hits", F.lit(0)).cast("long") / F.lit(float(k))).alias(
-                "ivf_recall"
-            ),
+            "ivf_hits",
+            "ivf_recall",
             F.coalesce("scanned_rows", F.lit(0)).cast("long").alias("scanned_rows"),
             (
                 F.coalesce("scanned_rows", F.lit(0)).cast("long")
@@ -1910,28 +1875,7 @@ def rp_recall(
         k,
         candidates=stage1.select("query_id", "neighbor_id"),
     ).select("query_id", "neighbor_id")
-
-    def hits(ann: DataFrame, name: str) -> DataFrame:
-        return (
-            truth.join(F.broadcast(ann), on=["query_id", "neighbor_id"], how="inner")
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    out_rows = (
-        truth.select("query_id")
-        .distinct()
-        .join(hits(rp, "rp_hits"), on="query_id", how="left")
-        .join(hits(rr, "rp_rerank_hits"), on="query_id", how="left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("rp_hits"), F.lit(0)).cast("long").alias("rp_hits"),
-            F.coalesce(F.col("rp_rerank_hits"), F.lit(0))
-            .cast("long")
-            .alias("rp_rerank_hits"),
-        )
-        .collect()
-    )
+    out_rows = _recall(truth, k, rp=rp, rp_rerank=rr).collect()
     # The panel is ≤ n_queries scalar report rows — the established K-row
     # driver-side posture (IVF centroids, PQ dtabs, BM25 query terms).
     # Collecting it replaces a localCheckpoint + aggregate job + crossJoin

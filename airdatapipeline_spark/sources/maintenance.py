@@ -1,4 +1,5 @@
-"""Table maintenance: small-file compaction for parquet sinks.
+"""Table maintenance for parquet sinks: small-file compaction and keyed
+(right-to-be-forgotten) deletes.
 
 The incremental pattern (SNK2 idempotent appends, streaming foreachBatch
 sinks) accretes one small file per micro-run; at 100 TB a table served by
@@ -7,6 +8,13 @@ file-listing time. Periodic compaction rewrites each partition into
 ~target-sized files — the engine-level equivalent of Delta OPTIMIZE /
 Iceberg rewrite_data_files, expressed with nothing but repartition + a
 staged directory swap.
+
+Both operations publish the way the shard lifecycle does
+(operators/corpus.py): the rewrite goes to a sibling staging root,
+`_verify_staged` checks its `_SUCCESS` and footer row count against the
+expected rows, and `LAYOUT_IO.atomic_swap` publishes it (rollback on
+failure, `recover` heals a crash between the two renames). On object
+storage they inherit the seam's mapping (DESIGN.md §6).
 
 Reference analogue: none (Postgres autovacuums); this is part of the
 owning-your-own-table-format cost the parquet medallion design takes on.
@@ -19,6 +27,9 @@ import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ..operators import corpus
+from ..operators.corpus import _link_snapshot, _verify_staged
 
 TARGET_FILE_BYTES = 256 * 1024 * 1024  # cluster default; tests pass smaller
 
@@ -41,23 +52,12 @@ def _ceil_div(a: int, b: int) -> int:
     return max(1, -(-a // b))
 
 
-def _count_rows(spark: SparkSession, path: str) -> int:
-    """Footer-only row count (no data pages read) — cheap even at 100 TB."""
-    return spark.read.parquet(path).count()
-
-
 def recover_compaction(path: str) -> bool:
-    """Heal an interrupted swap: if a previous compaction crashed between
-    the two renames, the live path is missing and the data sits intact in
-    `<path>.__old__` — restore it. Returns True if a restore happened.
-    Idempotent; safe to call before every compaction and from any reader
-    that finds the path missing."""
-    path = path.rstrip("/")
-    old = path + ".__old__"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-        return True
-    return False
+    """Heal an interrupted swap of a compaction or keyed delete — the live
+    path is missing and the previous table sits intact at `<path>.__old__`
+    — by restoring it (corpus.LocalLayoutIO.recover). Returns True if a
+    restore happened. Idempotent; both operations call it first."""
+    return corpus.LAYOUT_IO.recover(path)
 
 
 def compact_parquet(
@@ -65,7 +65,6 @@ def compact_parquet(
     path: str,
     target_file_bytes: int = TARGET_FILE_BYTES,
     partition_col: str | None = None,
-    verify_rows: bool = True,
 ) -> dict:
     """Rewrite a parquet directory into ~target-sized files. With
     `partition_col`, each `col=value` directory is split independently into
@@ -73,26 +72,13 @@ def compact_parquet(
     at the 256 MB default while small partitions coalesce to one), and the
     partitioning scheme is preserved.
 
-    Durability contract: the rewrite goes to a sibling staging dir and is
-    verified (_SUCCESS) before any mutation of the live path. The swap is
-    two renames with the previous file set retained at `<path>.__old__`
-    until the new set is live; a crash between the renames is healed by
-    `recover_compaction` (called automatically on the next run), and a
-    failure of the second rename rolls the first back in-process. Readers
-    racing the swap can transiently see a missing path — schedule
+    The rewrite is staged, verified against the source's footer row count
+    BEFORE any mutation of the live path (a lost or duplicated task output
+    aborts with the table untouched) and swapped in (module docstring).
+    Readers racing the swap can transiently see a missing path — schedule
     compaction off-peak or take a table lock; true atomic swaps need a
     metadata layer (Delta/Iceberg), which is exactly what this helper's
-    scope deliberately stops short of.
-
-    With `verify_rows` (default), the staged rewrite is re-read and its
-    row count compared to the source's BEFORE any mutation of the live
-    path; a mismatch aborts with the live table untouched. Both counts
-    are parquet-footer scans (no data read), so the check stays cheap at
-    100 TB — it is the self-verification that makes a lost or duplicated
-    task output impossible to swap in silently.
-
-    Local-filesystem implementation (os.walk / rename); on HDFS/S3 the
-    same logic runs through the Hadoop FileSystem API."""
+    scope deliberately stops short of."""
     path = path.rstrip("/")
     recover_compaction(path)
     before_files = data_file_count(path)
@@ -100,7 +86,7 @@ def compact_parquet(
     shutil.rmtree(staging, ignore_errors=True)
 
     df = spark.read.parquet(path)
-    before_rows = _count_rows(spark, path) if verify_rows else None
+    before_rows = df.count()  # footer-only
     if partition_col is not None:
         # per-partition-value byte budgets from the directory layout: a
         # plain repartition(n, partition_col) would hash every value into
@@ -128,25 +114,8 @@ def compact_parquet(
         n_out = _ceil_div(_dir_bytes(path), target_file_bytes)
         df.repartition(n_out).write.mode("overwrite").parquet(staging)
 
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        raise RuntimeError(f"compaction write to {staging} did not commit")
-    if verify_rows:
-        after_rows = _count_rows(spark, staging)
-        if after_rows != before_rows:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction of {path} aborted before swap: staged rewrite has "
-                f"{after_rows} rows, source has {before_rows}; live table untouched"
-            )
-    old = path + ".__old__"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    try:
-        os.rename(staging, path)
-    except BaseException:
-        os.rename(old, path)  # roll back rename #1; live table untouched
-        raise
-    shutil.rmtree(old)
+    _verify_staged(spark, staging, df.schema, before_rows, f"compaction of {path}")
+    corpus.LAYOUT_IO.atomic_swap(path, staging)
     return {
         "path": path,
         "files_before": before_files,
@@ -167,51 +136,36 @@ def delete_keys_partitioned(
     partitioned by a key-derived column: compute the affected partition
     values with `key_to_part` (the same function that bucketed the
     writes), rewrite ONLY those partitions without the keys, and swap the
-    new directories in. Every other partition's files are untouched — the
-    rewrite cost is O(partitions containing the keys), not O(table),
-    which is what makes per-user deletes feasible at 100 TB. Returns the
-    affected partition values.
+    new table in. Every other partition's files are hard-linked into the
+    snapshot root unchanged — the rewrite cost is O(partitions containing
+    the keys), not O(table), which is what makes per-user deletes feasible
+    at 100 TB. Returns the affected partition values.
 
-    The rewrite goes through a staging directory (never a read-then-
-    overwrite of the same path) because of the emptied-partition edge
-    case: a partition whose rows are ALL deleted produces no output rows,
-    and a dynamic partition overwrite would silently leave its stale
-    directory alive — the staged swap removes it instead (regression-
-    tested). Swap order is crash-safe the same way compact_parquet is:
-    old dirs are parked at `<path>.__del_old__` until every new dir is
-    live, so an interrupted run can be healed by moving parked dirs back;
-    on HDFS/S3 the same sequence runs through the Hadoop FileSystem API.
-    The same shape upgrades to Delta/Iceberg DELETE with file-level
-    pruning; on plain parquet the partition is the pruning unit, so the
-    bucketing granularity bounds rewrite amplification."""
+    The snapshot root is staged and verified (live rows minus the deleted
+    ones) before the swap (module docstring), so a crash at any point
+    leaves either the old table or the new one, and the next run heals it.
+    A partition whose rows are ALL deleted writes no directory and is gone
+    after the swap — the emptied-partition case a read-then-dynamic-
+    overwrite silently gets wrong (regression-tested). The same shape
+    upgrades to Delta/Iceberg DELETE with file-level pruning; on plain
+    parquet the partition is the pruning unit, so the bucketing
+    granularity bounds rewrite amplification."""
     parts = sorted({key_to_part(k) for k in keys})
     path = path.rstrip("/")
+    recover_compaction(path)
     staging = path + ".__deleting__"
-    trash = path + ".__del_old__"
     shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
 
     df = spark.read.parquet(path)
-    cleaned = df.filter(F.col(part_col).isin(parts)).filter(
-        ~F.col(key_col).isin(keys)
+    in_parts = F.col(part_col).isin(parts)
+    doomed = F.coalesce(in_parts & F.col(key_col).isin(keys), F.lit(False))
+    n = df.agg(F.count("*").alias("rows"), F.count_if(doomed).alias("doomed")).first()
+    df.filter(in_parts & ~doomed).write.mode("overwrite").partitionBy(part_col).parquet(
+        staging
     )
-    cleaned.write.mode("overwrite").partitionBy(part_col).parquet(staging)
-    if not os.path.exists(os.path.join(staging, "_SUCCESS")):
-        raise RuntimeError(f"staged delete rewrite to {staging} did not commit")
-
-    os.makedirs(trash)
-    swaps = []
-    for v in parts:
-        old_dir = os.path.join(path, f"{part_col}={v}")
-        if os.path.exists(old_dir):
-            parked = os.path.join(trash, f"{part_col}={v}")
-            os.rename(old_dir, parked)
-            swaps.append((old_dir, parked))
-    for v in parts:
-        new_dir = os.path.join(staging, f"{part_col}={v}")
-        if os.path.exists(new_dir):
-            os.rename(new_dir, os.path.join(path, f"{part_col}={v}"))
-        # a fully-deleted partition has no staged dir: it stays removed
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
+    _link_snapshot(path, staging, parts, part_col)
+    _verify_staged(
+        spark, staging, df.schema, n["rows"] - n["doomed"], f"delete from {path}"
+    )
+    corpus.LAYOUT_IO.atomic_swap(path, staging)
     return parts

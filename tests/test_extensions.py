@@ -488,6 +488,57 @@ def test_targeted_delete_rewrites_only_affected_partitions(spark, tmp_path):
         assert not os.path.exists(os.path.join(path, "bucket=3"))
 
 
+def test_keyed_delete_survives_crash_in_swap(spark, tmp_path, monkeypatch):
+    """A keyed delete interrupted by a failing rename into the live table
+    loses nothing: the swap rolls back (or the next run's recover heals
+    it), and the rerun deletes exactly the keyed rows while the untouched
+    partitions keep their files."""
+    import os
+
+    from airdatapipeline_spark.sources import maintenance
+
+    path = str(tmp_path / "ev")
+    spark.range(800).select(
+        F.col("id").alias("user_id"), (F.col("id") % 8).alias("bucket")
+    ).write.partitionBy("bucket").parquet(path)
+
+    def listing():
+        return {
+            d: sorted(os.listdir(os.path.join(path, d)))
+            for d in os.listdir(path)
+            if d.startswith("bucket=")
+        }
+
+    before = listing()
+    real_rename = os.rename
+    failed = []
+
+    def rename_once_failing(src, dst, *a, **kw):
+        dst = os.fspath(dst)
+        if not failed and (dst == path or dst.startswith(path + os.sep)):
+            failed.append(dst)
+            raise OSError("injected crash on a rename into the live table")
+        return real_rename(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "rename", rename_once_failing)
+    with pytest.raises(OSError, match="injected crash"):
+        maintenance.delete_keys_partitioned(
+            spark, path, "bucket", "user_id", [3, 11], key_to_part=lambda u: u % 8
+        )
+    monkeypatch.setattr(os, "rename", real_rename)
+
+    maintenance.delete_keys_partitioned(
+        spark, path, "bucket", "user_id", [3, 11], key_to_part=lambda u: u % 8
+    )
+    back = spark.read.parquet(path)
+    assert back.count() == 798
+    assert back.filter(F.col("user_id").isin(3, 11)).count() == 0
+    after = listing()
+    for d, files in before.items():
+        if d != "bucket=3":
+            assert after[d] == files, f"untouched partition {d} was rewritten"
+
+
 def test_phrase_search_counts_consistent(spark):
     from airdatapipeline_spark.operators import text
 

@@ -22,6 +22,23 @@ def _explain(df) -> str:
     )
 
 
+def test_quick_gate_follows_imports_transitively():
+    """quick_gate maps a changed operator module to every query that
+    reaches it, also through another operator module: tpch's stratified
+    sample (operators/tpch.py imports text._hash_bucket) and the cluster
+    labels (similarity.cluster_labels imports text.tokens_col) re-prove
+    on a change to operators/text.py."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from quick_gate import affected_queries
+
+    subset = affected_queries(["airdatapipeline_spark/operators/text.py"])
+    assert subset is not None
+    assert {"events_stratified_sample", "emb_cluster_labels"} <= set(subset)
+
+
 def test_plan_dump_masking_hides_only_global_counters():
     """capture_plans' masking: two dumps of one plan that differ only in
     Spark's process-global counters compare equal; a changed operator

@@ -603,13 +603,13 @@ def test_compaction_aborts_before_swap_on_row_drift(spark, tmp_path, monkeypatch
         f for _r, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")
     )
 
-    real_count = maintenance._count_rows
+    real_verify = maintenance._verify_staged
 
-    def corrupt_staging_count(sp, p):
-        n = real_count(sp, p)
-        return n - 1 if p.endswith(".__compacting__") else n
+    def corrupt_staging_count(sp, staging, schema, expected, what):
+        # the staged rewrite holds one row fewer than the source
+        return real_verify(sp, staging, schema, expected + 1, what)
 
-    monkeypatch.setattr(maintenance, "_count_rows", corrupt_staging_count)
+    monkeypatch.setattr(maintenance, "_verify_staged", corrupt_staging_count)
     try:
         maintenance.compact_parquet(spark, path)
         raise AssertionError("expected RuntimeError on row drift")

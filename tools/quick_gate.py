@@ -9,9 +9,11 @@ surface hours later. This wrapper is the enforceable middle tier:
 1. map the files changed since a base rev (plus the working tree) to the
    registry families they can affect — direct for registry modules
    (core.QUERY_MODULE records who registered each query), via a static
-   import scan for operator/streaming/source modules (any registry module
-   whose source mentions the changed module re-proves; a superset, never
-   a miss), and EVERYTHING for shared seams (io, session, model, core,
+   import scan for operator/streaming/source modules (closed over the
+   package's own imports: an operator/streaming/source module importing a
+   changed module counts as changed, until nothing new is added; then any
+   registry module importing one of them re-proves — a superset, never a
+   miss), and EVERYTHING for shared seams (io, session, model, core,
    _shared, __init__) — then run tools/check_oracle.py on that subset;
 2. run the quick pytest lane (`-m "not slow"`: unit tiers + the sf0.001
    parity gate, ~15 min; the full lane stays the exit gate).
@@ -54,16 +56,39 @@ def _changed_files(base: str) -> list[str]:
     return sorted({f for f in diff + tree if f.endswith(".py")})
 
 
+def _sources(*subpackages: str) -> dict[str, str]:
+    """{subpackage/module: source} of the package's modules there."""
+    out = {}
+    for sub in subpackages:
+        d = os.path.join(REPO, PKG, sub)
+        for f in os.listdir(d):
+            if f.endswith(".py"):
+                out[f"{sub}/{f[:-3]}"] = open(os.path.join(d, f)).read()
+    return out
+
+
+def _importers(name: str, sources: dict[str, str]) -> set[str]:
+    """Keys of `sources` whose module imports the module `name`. Matches
+    the import forms the package uses: `from ..operators import merge`,
+    `from ..operators.merge import x`, `from .merge import x`,
+    `operators.merge`; a bare-word match would drag in comment mentions
+    and balloon the subset to half the registry."""
+    n = re.escape(name)
+    pat = re.compile(
+        rf"(^\s*from\s+[\w.]*\b{n}\b[\w.]*\s+import\b"  # from ..operators.X import y
+        rf"|^\s*from\s+[\w.]+\s+import\s+[^\n]*\b{n}\b"  # from ..operators import X [as _x]
+        rf"|\b(?:operators|streaming|sources)\.{n}\b)",  # attribute reference
+        re.M,
+    )
+    return {key for key, src in sources.items() if pat.search(src)}
+
+
 def affected_queries(changed: list[str]) -> list[str] | None:
     """Queries whose parity a change can affect; None = full sweep."""
     from airdatapipeline_spark.registry import QUERIES, core
 
-    reg_dir = os.path.join(REPO, PKG, "registry")
-    reg_sources = {
-        f[:-3]: open(os.path.join(reg_dir, f)).read()
-        for f in os.listdir(reg_dir)
-        if f.endswith(".py")
-    }
+    reg_sources = _sources("registry")
+    lib_sources = _sources("operators", "streaming", "sources")
     hit_modules: set[str] = set()
     for f in changed:
         if not f.startswith(f"{PKG}/"):
@@ -75,20 +100,19 @@ def affected_queries(changed: list[str]) -> list[str] | None:
         if rel.startswith("registry/"):
             hit_modules.add(name)
             continue
-        # operator/streaming/source module: any registry module that
-        # IMPORTS it must re-prove (superset by construction — matches
-        # the import forms the registry uses: `from ..operators import
-        # merge`, `from ..operators.merge import x`, `operators.merge`;
-        # a bare-word match would drag in comment mentions and balloon
-        # the subset to half the registry)
-        n = re.escape(name)
-        pat = re.compile(
-            rf"(^\s*from\s+[\w.]*\b{n}\b[\w.]*\s+import\b"  # from ..operators.X import y
-            rf"|^\s*from\s+[\w.]+\s+import\s+[^\n]*\b{n}\b"  # from ..operators import X [as _x]
-            rf"|\b(?:operators|streaming|sources)\.{n}\b)",  # attribute reference
-            re.M,
-        )
-        users = {m for m, src in reg_sources.items() if pat.search(src)}
+        # operator/streaming/source module: it and every library module
+        # that imports it, transitively, count as changed; any registry
+        # module that IMPORTS one of them must re-prove
+        closure, frontier = {name}, [name]
+        while frontier:
+            for key in _importers(frontier.pop(), lib_sources):
+                m = os.path.basename(key)
+                if m not in closure:
+                    closure.add(m)
+                    frontier.append(m)
+        users = {
+            os.path.basename(key) for m in closure for key in _importers(m, reg_sources)
+        }
         if not users:
             return None  # unmapped seam -> full sweep, never skip
         hit_modules |= users
