@@ -27,7 +27,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_table
 from .text import hash56, tokens_col
 
 # Shard layout: documents are laid end-to-end in seeded-hash order and cut
@@ -1015,9 +1015,7 @@ def delete_from_shards(
     # inlining a giant IN-expression (ADVICE-r6): dynamic partition
     # pruning on the broadcast build side prunes the shard dirs the same
     # way the static isin() did, without a 10^5-term predicate at scale
-    affected_df = spark.createDataFrame(
-        [(s,) for s in affected], "shard_id long"
-    )
+    affected_df = local_table(spark, [(s,) for s in affected], "shard_id long")
     survivors = layout.join(
         F.broadcast(affected_df), "shard_id", "left_semi"
     ).join(ids, "doc_id", "left_anti")

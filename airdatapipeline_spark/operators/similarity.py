@@ -31,7 +31,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_table
 from ..streaming.events import _drain
 
 N_PLANES = 6  # 2^6 = 64 buckets
@@ -518,7 +518,8 @@ def clu_centroids(spark: SparkSession, dim: int = CLU_DIM) -> DataFrame:
     deterministic, so the whole scenario value-hashes against DuckDB.
 
     r12: built driver-side from the python twins of the SAME md5
-    expressions and shipped as a 16-row local relation — the expression
+    expressions and shipped as a 16-row JVM local relation
+    (`io.local_table`, no Python worker) — the expression
     form made every consumer's plan re-evaluate 16·dim md5 chains and pay
     a broadcast-build of that subtree on the serve path. Bit-equality of
     twin vs expression rows is pinned in tests/test_extensions.py."""
@@ -526,9 +527,7 @@ def clu_centroids(spark: SparkSession, dim: int = CLU_DIM) -> DataFrame:
     for c in range(CLU_K):
         emb = _clu_center_emb_py(c, dim)
         rows.append((c, emb, _fold_norm_py(emb)))
-    return spark.createDataFrame(
-        rows, "centroid_id bigint, emb array<double>, norm double"
-    )
+    return local_table(spark, rows, "centroid_id bigint, emb array<double>, norm double")
 
 
 def clustered_recall_panel(
@@ -710,7 +709,8 @@ def clustered_residual_ivfpq_recall(
     centers = [r.emb for r in cent_rows]
     assigned = _ivf_assign(corpus, cent_rows, 1)
     cdf = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(c, centers[c]) for c in range(CLU_K)],
             "centroid_id bigint, c_emb array<double>",
         )
@@ -746,8 +746,8 @@ def clustered_residual_ivfpq_recall(
             data.append((vid, cid, _pq_dtab_py(rq, cbs)))
     data.sort(key=lambda t: (t[0], t[1]))
     dtabs = F.broadcast(
-        spark.createDataFrame(
-            data, "query_id bigint, centroid_id bigint, dtab array<array<double>>"
+        local_table(
+            spark, data, "query_id bigint, centroid_id bigint, dtab array<array<double>>"
         )
     )
     cand = codes.join(dtabs, "centroid_id").filter(
@@ -1271,7 +1271,7 @@ def kmeans_centroids(
     model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feats)
     # K rows total (K ~ sqrt(N) even at scale) — a driver-side list by nature
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cent = spark.createDataFrame(rows, "centroid_id int, emb array<double>")
+    cent = local_table(spark, rows, "centroid_id int, emb array<double>")
     return cent.withColumn("norm", F.sqrt(_dot("emb", "emb")))
 
 
@@ -1364,7 +1364,7 @@ def _pq_dtabs_from_rows(spark: SparkSession, rows: list, codebooks: list) -> Dat
     dedicated collect job (the r12 single-scan/python-twin paths) build
     the identical table here."""
     data = [(vid, _pq_dtab_py(x, codebooks)) for vid, x in rows]
-    return spark.createDataFrame(data, "query_id bigint, dtab array<array<double>>")
+    return local_table(spark, data, "query_id bigint, dtab array<array<double>>")
 
 
 def _pq_adc_dist() -> Column:
@@ -1701,7 +1701,8 @@ def kmeans_sq8_stats(
     e = with_sq8(load_table(spark, sf_dir, "embeddings")).select("vec_id", "q")
     cents = kmeans_train(e, k=k, iters=iters)
     final = _km_assign(e, cents)
-    l1 = spark.createDataFrame(
+    l1 = local_table(
+        spark,
         [(j + 1, sum(abs(v) for v in c)) for j, c in enumerate(cents)],
         "cid int, centroid_l1 bigint",
     )
@@ -1897,7 +1898,8 @@ def rp_recall(
         )
         for r in sorted(out_rows, key=lambda r: r.query_id)
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         data,
         "query_id bigint, rp_hits bigint, rp_rerank_hits bigint, "
         "rp_recall double, rp_rerank_recall double, "

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_table
 from .dedup import _shingles
 from .text import hash56
 
@@ -431,7 +431,7 @@ def hq_quantile_estimates(spark: SparkSession, hist: DataFrame) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = hist.withColumn("cum", F.sum("cnt").over(wcum))
-    qdf = spark.createDataFrame([(q,) for q in HQ_QS], "q double")
+    qdf = local_table(spark, [(q,) for q in HQ_QS], "q double")
     return (
         cum.join(totals, on="event_type", how="inner")
         .crossJoin(F.broadcast(qdf))
@@ -481,7 +481,7 @@ def quantile_histogram_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = hq_quantile_estimates(spark, hq_histogram(ev))
     totals = probe.select("event_type", "n_events").distinct()
-    qdf = spark.createDataFrame([(q,) for q in HQ_QS], "q double")
+    qdf = local_table(spark, [(q,) for q in HQ_QS], "q double")
     # exact verifier: rank-select per type (one sort shuffle — test-scale /
     # sampled-only at 100 TB)
     wrn = Window.partitionBy("event_type").orderBy("value")

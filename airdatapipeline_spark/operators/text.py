@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_table
 
 # tiny public stopword samples per language (for the n-gram/stopword
 # language-ID heuristic; real deployments would plug fastText/CLD3 in via a
@@ -974,8 +974,8 @@ def bm25_topk(
         # not score twice (each qrank would re-join the same postings,
         # doubling hits and bm25 — review-pass finding, reproduced)
         uniq = list(dict.fromkeys(terms))
-        want = spark.createDataFrame(
-            [(t, i + 1) for i, t in enumerate(uniq)], "term string, qrank int"
+        want = local_table(
+            spark, [(t, i + 1) for i, t in enumerate(uniq)], "term string, qrank int"
         )
         qrows = (
             dfc.join(F.broadcast(want), "term").select("term", "df", "qrank").collect()
@@ -986,10 +986,9 @@ def bm25_topk(
     qrows = sorted(qrows, key=lambda r: r.qrank)
     n_q = len(qrows)
     if n_q == 0:
-        return spark.createDataFrame(
-            [], "doc_id long, hits int, bm25 double, rank int"
-        )
-    qterms = spark.createDataFrame(
+        return local_table(spark, [], "doc_id long, hits int, bm25 double, rank int")
+    qterms = local_table(
+        spark,
         [
             (
                 r.term,
@@ -1127,8 +1126,8 @@ def _lm_model(spark: SparkSession, docs: DataFrame) -> dict:
     vsz = sum(int(r.n) for r in stats if r.uni)  # vocabulary size
     args = {int(r.c) + (vsz if r.uni else 1) for r in stats}
     lnt = F.broadcast(
-        spark.createDataFrame(
-            [(a, math.log(float(a))) for a in sorted(args)], "arg bigint, lnv double"
+        local_table(
+            spark, [(a, math.log(float(a))) for a in sorted(args)], "arg bigint, lnv double"
         )
     )
     num, den = lnt.alias("num"), lnt.alias("den")
@@ -1366,7 +1365,8 @@ def bpe_train_merges(
     Reference scope: the reference has no tokenizer trainer; this is part
     of the LLM-pipeline extension family the brief asks for."""
     merges = bpe_train(bpe_word_table(load_table(spark, sf_dir, "documents")), n_merges)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         merges,
         "merge_rank int, left_sym string, right_sym string,"
         " merged_sym string, pair_count bigint",

@@ -77,7 +77,9 @@ def get_spark(app_name: str = "airdatapipeline_spark", master: str | None = None
         # Session TZ pinned to UTC so to_date()/date_trunc() over parquet
         # timestamps agree with the UTC-naive DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        # Arrow on: fast toPandas()/createDataFrame and Pandas-UDF transfer.
+        # Arrow on: fast toPandas(), pandas createDataFrame and Pandas-UDF
+        # transfer. Lists never take this path; rows the driver holds enter
+        # a plan through io.local_table, an Arrow table, which needs no flag.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # UI off: nothing reads it. Per-query job and stage metrics come
         # from the status tracker and status store, which run without it.

@@ -3,7 +3,7 @@
 The reference drives headless Chromium over g1.globo.com and unions 8 CSS
 selectors into a row list (/root/reference/scripts/scraper.py:18-195). A
 scrape is inherently a driver/edge-side collector: the Spark-idiomatic
-boundary is (rows out of the scraper) → `spark.createDataFrame(rows, schema)`
+boundary is (rows out of the scraper) → `io.local_table(spark, rows, schema)`
 → landing-zone files; at scale the scraper fleet writes files that a
 Structured Streaming file source (streaming/events.py pattern) ingests.
 
@@ -21,6 +21,7 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import local_table
 from ..schemas import BRONZE_SCHEMA
 
 
@@ -257,4 +258,4 @@ def scrape_to_dataframe(spark: SparkSession, scraper: Scraper | None = None) -> 
         row if "doc_id" in row else {**row, "doc_id": i}
         for i, row in enumerate(scraper.scrape())
     ]
-    return spark.createDataFrame(rows, schema=BRONZE_SCHEMA)
+    return local_table(spark, rows, BRONZE_SCHEMA)

@@ -55,6 +55,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io import local_table
+
 
 class ConcurrentWriteError(RuntimeError):
     """Another writer committed this version first; re-read and retry."""
@@ -232,7 +234,7 @@ class VersionedTable:
 
             files = [f for f in files if keep(f)]
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_table(self.spark, [], schema)
         paths = [os.path.join(self.path, f) for f in files]
         return self.spark.read.schema(schema).parquet(*paths)
 
@@ -245,8 +247,8 @@ class VersionedTable:
                 if os.path.exists(_manifest_path(self.path, v))
             )
         ]
-        return self.spark.createDataFrame(
-            rows, "version int, op string, n_files int, n_rows long, parent int"
+        return local_table(
+            self.spark, rows, "version int, op string, n_files int, n_rows long, parent int"
         )
 
     def changes(self, on: list[str], from_version: int, to_version: int) -> DataFrame:

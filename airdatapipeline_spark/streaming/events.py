@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..io import local_table
 from ..session import scratch_dir
 
 _STAGED: dict[tuple[str, str], str] = {}
@@ -1008,7 +1009,7 @@ def versioned_ingest_append(
         t = versioned.VersionedTable(spark, tdir)
         t.latest_version()
     except FileNotFoundError:
-        t = versioned.create_table(spark, tdir, spark.createDataFrame([], stream.schema))
+        t = versioned.create_table(spark, tdir, local_table(spark, [], stream.schema))
 
     def ingest(bdf: DataFrame, _bid: int) -> None:
         row = bdf.agg(

@@ -13,6 +13,9 @@ change that raises one should say why.
 
 from __future__ import annotations
 
+import datetime
+import math
+
 import pytest
 from conftest import SF_SMALL
 
@@ -145,3 +148,69 @@ def test_bpe_train_matches_duckdb_unroll_past_the_registered_k(spark, duck):
     want = duck.execute(f"WITH {_bpe_oracle_ctes(k)} SELECT * FROM ({rules}) ORDER BY rank").fetchall()
     assert len(got) == k
     assert got == [tuple(row) for row in want]
+
+
+LOCAL_TABLE_CASES = [
+    ([(3, math.log(3.0)), (7, math.log(7.0)), (11, None)], "arg bigint, lnv double"),
+    ([("a", 1), ("b", 2), (None, 3)], "term string, qrank int"),
+    ([(0, [0.1, math.log(2.0)]), (1, [])], "centroid_id bigint, emb array<double>"),
+    ([(1, [[0.1, math.log(5.0)], [-2.5]])], "query_id bigint, dtab array<array<double>>"),
+    ([], "doc_id long, hits int, bm25 double, rank int"),
+    (
+        [
+            (1, datetime.datetime(2024, 1, 2, 3, 4, 5, 6)),
+            (2, datetime.datetime(2024, 3, 31, 1, 30, tzinfo=datetime.timezone.utc)),
+            (3, None),
+        ],
+        "id int, ts timestamp",
+    ),
+]
+
+
+@pytest.mark.parametrize("rows,ddl", LOCAL_TABLE_CASES, ids=[c[1] for c in LOCAL_TABLE_CASES])
+def test_local_table_is_a_local_relation_equal_to_the_list_path(spark, rows, ddl):
+    """Rows the driver holds become a JVM LocalRelation (no Python RDD)
+    with the same schema and values as `createDataFrame` over the list:
+    doubles bit-exact, naive and aware timestamps the same instants."""
+    from airdatapipeline_spark.io import local_table
+
+    df = local_table(spark, rows, ddl)
+    qe = df._jdf.queryExecution()
+    assert qe.logical().getClass().getSimpleName() == "LocalRelation"
+    assert "LocalTableScan" in qe.executedPlan().toString()
+    ref = spark.createDataFrame(rows, ddl)
+    assert df.schema == ref.schema
+    assert df.collect() == ref.collect()  # float == compares exact values, no tolerance
+
+
+def test_create_dataframe_only_inside_local_table():
+    """`createDataFrame` over a Python list runs a Python RDD; the package
+    calls it once, inside `io.local_table`, on an Arrow table."""
+    import inspect
+    import pathlib
+
+    import airdatapipeline_spark
+    from airdatapipeline_spark.io import local_table
+
+    root = pathlib.Path(airdatapipeline_spark.__file__).parent
+    hits = {
+        p.relative_to(root).as_posix(): p.read_text().count("createDataFrame(")
+        for p in root.rglob("*.py")
+    }
+    assert {p: n for p, n in hits.items() if n} == {"io.py": 1}
+    assert "createDataFrame(" in inspect.getsource(local_table)
+
+
+@pytest.mark.parametrize("query", ["text_lm_perplexity_filter", "text_bpe_train_merges"])
+def test_llm_operator_driver_tables_scan_locally(spark, query):
+    """The LM log table and the BPE merges are driver rows: once executed,
+    the plan reads them as a LocalTableScan, not a Python RDD."""
+    from airdatapipeline_spark.registry import QUERIES
+    from airdatapipeline_spark.session import query_scope
+
+    with query_scope(spark):
+        df = QUERIES[query](spark, SF_SMALL)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

@@ -64,6 +64,58 @@ def test_plan_dump_masking_hides_only_global_counters():
     assert a != mask_counters(plan(64, 1035, 18, 9, op="SortMergeJoin"))
 
 
+def test_plan_dump_masking_hides_run_specific_paths():
+    """capture_plans' path masking: the query scope's random root, the
+    random suffixes of scratch dirs under it and the working directory
+    mask to fixed names, also inside a `file:/*` regex; other paths stay."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from capture_plans import mask_paths
+
+    def plan(scope, cwd, a, b):
+        return (
+            f"Location: InMemoryFileIndex [file:{scope}/shards_tomb_{a}/layout]\n"
+            f"regexp_replace(__file#0, ^file:/*{scope[1:]}/vt_ingest_{b}/, , 1)\n"
+            f"Location: [file:{cwd}/spark-warehouse/bkt, file:/data/x_12345678]\n"
+            f"[file:{scope}/vt_{a}/data/c-{b * 4}/part-00000-{a}-{b[:4]}-{a[:4]}-{b[4:]}-{a}{b[:4]}-c000.snappy.parquet]\n"
+            f"md5 literal 0fc68493167646e58efc6d33df84050e\n"
+        )
+
+    a = mask_paths(plan("/tmp/query_scope_ng82b81x", "/src/a", "5c9292be", "acc07ab0"),
+                   "/tmp/query_scope_ng82b81x", "/src/a")
+    b = mask_paths(plan("/tmp/query_scope__m9hpkua", "/work/b", "11f0dd12", "e9a90632"),
+                   "/tmp/query_scope__m9hpkua", "/work/b")
+    assert a == b
+    assert "<scope>/shards_tomb_0/" in a and "<scope>/vt_ingest_1/" in a
+    assert "/c-0/part-00000-1-c000" in a
+    assert "<cwd>/spark-warehouse" in a and "/data/x_12345678" in a
+    assert "literal 0fc68493167646e58efc6d33df84050e" in a
+
+
+def test_plan_dump_records_build_time_frames(spark):
+    """capture_plans' build_frames: every frame collected (also through
+    take) or locally checkpointed inside the block is recorded in order,
+    and DataFrame's methods are restored afterwards."""
+    import os
+    import sys
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from capture_plans import build_frames
+
+    collect, checkpoint = DataFrame.collect, DataFrame.localCheckpoint
+    sections: list = []
+    with build_frames(spark, sections):
+        spark.range(5).filter("id > 1").take(1)
+        spark.range(3).localCheckpoint(eager=False)
+    assert [a for a, _ in sections] == ["collect", "localCheckpoint"]
+    assert "Filter" in sections[0][1] and "Range" in sections[1][1]
+    assert (DataFrame.collect, DataFrame.localCheckpoint) == (collect, checkpoint)
+
+
 def test_q1_filter_pushdown_and_column_pruning(spark):
     ex = _explain(tpch.q1_pricing_summary(spark, SF_SMALL))
     assert "PushedFilters" in ex and "l_shipdate" in ex.split("PushedFilters")[1][:200]
