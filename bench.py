@@ -25,11 +25,14 @@ regression. Sections:
   compaction, IVF index build, r12: the versioned-table commit chain)
   timed at base and on the 10x replica
   (VERDICT-r5 item 6); detail-only, excluded from the headline total.
-- io — per-headline-query job, stage, task, input and shuffle counters of
-  the last timed run, read through its job group (perfbench/layers.py,
-  UI off): the measured form of the plan-shape claims (broadcasts don't
-  shuffle, compressed tiers shuffle codes not arrays, filters reach the
-  scan).
+- io — per-headline-query layer record of the last timed run: its
+  build_s/exec_s split, the Catalyst phase times of the built frame, the
+  run times in run order, and the job, stage, task, input and shuffle
+  counters read through its job group (perfbench/layers.py, UI off): the
+  measured form of the plan-shape claims (broadcasts don't shuffle,
+  compressed tiers shuffle codes not arrays, filters reach the scan).
+  `_run_samples` is the one timing loop: tools/ab_interleaved.py,
+  tools/measured.py and tools/scale_probe.py time through it too.
 - scaling — every scale-eligible headline query re-measured on a 10x
   replica warehouse (sources/scale.py): empirical time ratios next to the
   10x data ratio, catching any operator whose constant factors hide
@@ -289,9 +292,14 @@ def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[
     reads nothing this one persisted.
 
     When `io_sink` is given, the LAST run (build included) runs under its
-    own job group and io_sink[io_key] gets that group's counters
-    (`layers.group_counters`: jobs, stages, tasks, input and shuffle MB,
-    ...), read from the status store after the run, with the UI off."""
+    own job group and io_sink[io_key] gets its layer record: that group's
+    counters (`layers.group_counters`: jobs, stages, tasks, input and
+    shuffle MB, ...), read from the status store with the UI off; the
+    run's `build_s` (fn()) and `exec_s` (the noop write); the Catalyst
+    phase times of the built frame (`analysis_ms`, `optimization_ms`,
+    `planning_ms`); and `runs`, every run's time in run order. The record
+    is read after the timer stops and the group is cleared, inside the
+    run's scope."""
     sc = spark.sparkContext
     times = []
     for i in range(n):
@@ -299,12 +307,20 @@ def _run_samples(fn, spark, n: int = N_RUNS, io_sink=None, io_key=None) -> list[
         layers.set_group(sc, group)
         with query_scope(spark):
             t0 = time.time()
-            fn().write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
-        layers.set_group(sc, None)
-        if group:
-            layers.drain(sc)
-            io_sink[io_key] = {k: round(v, 3) for k, v in layers.group_counters(sc, group).items()}
+            df = fn()
+            t1 = time.time()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.time()
+            times.append(round(t2 - t0, 3))
+            layers.set_group(sc, None)
+            if group:
+                layers.drain(sc)
+                rec = layers.group_counters(sc, group)
+                rec.update(build_s=t1 - t0, exec_s=t2 - t1)
+                phases = layers.plan_phases(df._jdf)[0]
+                rec.update({f"{k}_ms": v for k, v in phases.items()})
+                io_sink[io_key] = {k: round(v, 3) for k, v in rec.items()}
+                io_sink[io_key]["runs"] = list(times)
     return sorted(times)
 
 
@@ -313,6 +329,54 @@ def _median(samples: list[float]) -> float:
     # the SMALLER middle run (steady-state), so one cold outlier cannot
     # become the headline number
     return samples[(len(samples) - 1) // 2]
+
+
+def query_fn(spark, name: str, sf_dir: str):
+    """The zero-argument builder `_run_samples` times for headline query
+    `name` over `sf_dir`: a `registry.QUERIES` entry, or the end-to-end
+    flagship pipeline, which is not registered."""
+    if name == "flagship_pipeline":
+        from airdatapipeline_spark.pipeline import flagship
+
+        return lambda: flagship(spark, sf_dir)
+    from airdatapipeline_spark.registry import QUERIES
+
+    return lambda: QUERIES[name](spark, sf_dir)
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the session before anything is timed: JVM codegen, parquet
+    footers, the Python worker pool, the flagship shape at sf0.001 and the
+    bucketed facts, so timings measure steady-state engine throughput, not
+    process spin-up (a long-lived cluster is always warm)."""
+    import __spark_entry__ as entrymod
+    from airdatapipeline_spark.operators.bucketed import ensure_bucketed_facts
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+    for t in ("lineitem", "orders", "customer", "documents", "embeddings", "events"):
+        spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).collect()
+    spark.range(64).mapInPandas(
+        lambda it: (pdf for pdf in it), schema="id long"
+    ).count()
+    with query_scope(spark):
+        entrymod.entry(spark).count()  # full pipeline shape at sf0.001
+    # bucketed facts are written once at ingest and queried many times —
+    # creating them is warm-up (amortized), timing the join is the bench
+    ensure_bucketed_facts(spark, sf_dir)
+
+    # Untimed warm-up laps of the front-of-suite cohort (VERDICT-r9 item 3):
+    # the r9 driver window showed the FIRST benched queries (flagship 1.57x,
+    # tpch_q1 1.79x, a2_w1 1.51x, j1 1.45x normalized) taxed by residual
+    # JIT ramp — their code had an empty diff and the rest of the suite sat
+    # at ~1.0x. The generic range-sum/footer warm-up above matures the
+    # interpreter tiers but not the join/agg/window codegen paths the first
+    # real plans compile; untimed laps of the leading headline queries run
+    # those exact shapes so the first timed queries read a warm JVM. TWO
+    # laps (r10: C2 tiers need repetition, not just coverage).
+    for _lap in range(2):
+        for name in HEADLINE[:6]:
+            _run_samples(query_fn(spark, name, sf_dir), spark, n=1)
+    sys.stderr.write("[warmup] front-of-suite laps done\n")
 
 
 def _calibrate() -> dict[str, float]:
@@ -494,34 +558,113 @@ def _writes_tier(spark) -> dict:
     return {"data_ratio": float(SCALE_COPIES), "ops": result}
 
 
-def _writes_distinct_tier(spark) -> dict:
-    """The honest-cardinality lifecycle stress (VERDICT-r7 item 6, promoted
-    from tools/measured.py so it re-measures every round): the `writes`
-    tier's 10x replica multiplies ROWS but its copies share doc_ids'
-    hash spread; real ingest grows distinct keys WITH the data. This tier
-    runs the full append(3 live-gated batches) → compact → delete →
-    manifest+verify scenario on the base corpus and on a token-rotated
-    10x-DISTINCT corpus (10x docs AND 10x distinct doc_ids/content
-    hashes), median-of-3 with dispersion. Ratios at or below the 10x data
-    ratio mean the membership gates, fragment re-lays, and affected-shard
-    rewrites stay IO-proportional when key cardinality actually grows;
-    verify_shards is asserted all-OK inside every scenario pass.
+def _build_distinct_10x(spark, sf_dir: str) -> str:
+    """The honest sf1-shaped corpus: 10 copies of every document, each
+    copy's token sequence ROTATED by a copy-specific amount — same token
+    multiset (token stats preserved) but different shingle/span/paragraph
+    keys AND distinct doc_ids per copy, so key cardinality scales with the
+    data (the bench's plain replica multiplies rows only)."""
+    from pyspark.sql import functions as F
+
+    from airdatapipeline_spark.io import load_table
+    from airdatapipeline_spark.session import scratch_dir
+
+    tmp = scratch_dir("sf1corpus_")
+    toks = "split(trim(text), '\\\\s+')"
+    (
+        load_table(spark, sf_dir, "documents")
+        .withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(9))))
+        .select(
+            (F.col("doc_id") * 16 + F.col("r")).alias("doc_id"),
+            F.expr(
+                # rotate the token sequence by r*17+1 positions: same
+                # multiset (token stats preserved), different shingle/
+                # span/paragraph keys per copy
+                f"concat_ws(' ', flatten(array("
+                f"slice({toks}, (r * 17 + 1) % size({toks}) + 1, size({toks})),"
+                f"slice({toks}, 1, (r * 17 + 1) % size({toks})))))"
+            ).alias("text"),
+            "lang",
+            "source",
+            "n_chars",
+        )
+        .repartition(16)
+        .write.mode("overwrite")
+        .parquet(f"{tmp}/documents.parquet")
+    )
+    return tmp
+
+
+def lifecycle_scenario(spark, corpus_dir: str) -> dict[str, float]:
+    """One full lifecycle pass over corpus dir `corpus_dir`: untimed setup
+    (base-layout write from the 90% slice), then timed append(3 live-gated
+    batches) → compact → delete → manifest+verify. verify_shards is
+    asserted all-OK — conservation under stress, not just speed. Timed by
+    the writes_distinct tier, which MEASURED.md's stress section renders."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from airdatapipeline_spark.io import load_table
+    from airdatapipeline_spark.operators import corpus
+
+    work = tempfile.mkdtemp(prefix="lifecycle_stress_")
+    docs = load_table(spark, corpus_dir, "documents")
+    base_sf = f"{work}/base_sf"
+    docs.filter(F.col("doc_id") % 10 != 0).write.mode("overwrite").parquet(
+        f"{base_sf}/documents.parquet"
+    )
+    out = f"{work}/layout"
+    corpus.write_shards(spark, base_sf, out)
+    delta = docs.filter(F.col("doc_id") % 10 == 0)
+    t: dict[str, float] = {}
+    t0 = time.time()
+    for k in range(3):  # K delta batches, each through the live gate
+        corpus.append_docs(spark, delta.filter(F.pmod("doc_id", F.lit(30)) == 10 * k), out)
+    t["append_3_batches"] = time.time() - t0
+    t0 = time.time()
+    corpus.compact_shards(spark, out, min_fill=0.85)
+    t["compact_shards"] = time.time() - t0
+    doomed = docs.filter(F.col("doc_id") % 70 == 0).select("doc_id")
+    t0 = time.time()
+    corpus.delete_from_shards(spark, doomed, out)
+    t["delete_from_shards"] = time.time() - t0
+    t0 = time.time()
+    corpus.write_layout_manifest(spark, out)
+    report = corpus.verify_shards(spark, out).collect()
+    t["manifest_verify"] = time.time() - t0
+    bad = [r for r in report if not r["shard_ok"]]
+    assert not bad, f"verify_shards red under stress at {corpus_dir}: {bad[:3]}"
+    shutil.rmtree(work, ignore_errors=True)
+    return t
+
+
+def _writes_distinct_tier(spark, sf_dir: str) -> dict:
+    """The honest-cardinality lifecycle stress (VERDICT-r7 item 6): the
+    `writes` tier's 10x replica multiplies ROWS but its copies share
+    doc_ids' hash spread; real ingest grows distinct keys WITH the data.
+    This tier runs `lifecycle_scenario` on the `sf_dir` corpus and on a
+    token-rotated 10x-DISTINCT corpus (10x docs AND 10x distinct
+    doc_ids/content hashes), median-of-3 with dispersion. Ratios at or
+    below the 10x data ratio mean the membership gates, fragment re-lays,
+    and affected-shard rewrites stay IO-proportional when key cardinality
+    actually grows; verify_shards is asserted all-OK inside every scenario
+    pass.
 
     This tier is the CANONICAL instrument for the scenario (r9
     reconciliation): base/big passes run INTERLEAVED so host/cache drift
-    hits both corpora symmetrically, and tools/measured.py's regeneration
-    uses the identical statistic. Expected ratios ~2.6-3.4 (fixed per-op
+    hits both corpora symmetrically, and tools/measured.py renders this
+    tier's result. Expected ratios ~2.6-3.4 at sf0.1 (fixed per-op
     overhead amortizes; the IO term grows with the delta)."""
     import shutil
 
-    from tools.measured import _build_distinct_10x, lifecycle_scenario
-
-    big = _build_distinct_10x(spark, SF_DIR)
+    big = _build_distinct_10x(spark, sf_dir)
     try:
         base_p: list[dict] = []
         big_p: list[dict] = []
         for _ in range(WRITE_RUNS):
-            base_p.append(lifecycle_scenario(spark, SF_DIR))
+            base_p.append(lifecycle_scenario(spark, sf_dir))
             big_p.append(lifecycle_scenario(spark, big))
 
         def tier(passes: list[dict]) -> dict[str, dict]:
@@ -606,52 +749,10 @@ def _bpe_production_tier(spark) -> dict:
 
 
 def main() -> None:
-    import __spark_entry__ as entrymod
     from airdatapipeline_spark.session import get_spark
 
     spark = get_spark("bench")
-    queries = entrymod.queries()
-
-    # Warm-up: JVM codegen, parquet footers, and the Python worker pool —
-    # so timings measure steady-state engine throughput, not process spin-up
-    # (a long-lived cluster is always warm).
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in ("lineitem", "orders", "customer", "documents", "embeddings", "events"):
-        spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(1).collect()
-    spark.range(64).mapInPandas(
-        lambda it: (pdf for pdf in it), schema="id long"
-    ).count()
-    with query_scope(spark):
-        entrymod.entry(spark).count()  # full pipeline shape at sf0.001
-    # bucketed facts are written once at ingest and queried many times —
-    # creating them is warm-up (amortized), timing the join is the bench
-    from airdatapipeline_spark.operators.bucketed import ensure_bucketed_facts
-
-    ensure_bucketed_facts(spark, SF_DIR)
-
-    def make_fn(name: str, sf_dir: str):
-        if name == "flagship_pipeline":
-            from airdatapipeline_spark.pipeline import flagship
-
-            return lambda: flagship(spark, sf_dir)
-        return lambda: queries[name](spark, sf_dir)
-
-    # Untimed warm-up lap of the front-of-suite cohort (VERDICT-r9 item 3):
-    # the r9 driver window showed the FIRST benched queries (flagship 1.57x,
-    # tpch_q1 1.79x, a2_w1 1.51x, j1 1.45x normalized) taxed by residual
-    # JIT ramp — their code had an empty diff and the rest of the suite sat
-    # at ~1.0x. The generic range-sum/footer warm-up above matures the
-    # interpreter tiers but not the join/agg/window codegen paths the first
-    # real plans compile; untimed laps of the leading headline queries run
-    # those exact shapes so the first timed queries read a warm JVM. TWO
-    # laps (r10: C2 tiers need repetition, not just coverage).
-    for _lap in range(2):
-        for name in HEADLINE[:6]:
-            if name != "flagship_pipeline" and name not in queries:
-                continue
-            with query_scope(spark):
-                make_fn(name, SF_DIR)().write.format("noop").mode("overwrite").save()
-    sys.stderr.write("[warmup] front-of-suite laps done\n")
+    warm_up(spark, SF_DIR)
 
     # Machine-speed calibration (VERDICT-r7 item 1): identical-HEAD runs
     # have drifted uniformly ~1.3x under ambient host throttling (r7), so
@@ -664,12 +765,10 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     dispersion: dict[str, list[float]] = {}
-    io_by_query: dict[str, dict[str, float]] = {}
+    io_by_query: dict[str, dict] = {}
     for name in HEADLINE:
-        if name != "flagship_pipeline" and name not in queries:
-            continue
         runs = _run_samples(
-            make_fn(name, SF_DIR), spark=spark, io_sink=io_by_query, io_key=name
+            query_fn(spark, name, SF_DIR), spark=spark, io_sink=io_by_query, io_key=name
         )
         dispersion[name] = runs
         timings[name] = _median(runs)
@@ -685,9 +784,7 @@ def main() -> None:
 
     verifier: dict[str, float] = {}
     for name in VERIFIER:
-        if name not in queries:
-            continue
-        runs = _run_samples(make_fn(name, SF_DIR), spark)
+        runs = _run_samples(query_fn(spark, name, SF_DIR), spark)
         dispersion[name] = runs
         verifier[name] = _median(runs)
         sys.stderr.write(f"[verifier] {name}: {verifier[name]}s (runs {runs})\n")
@@ -702,7 +799,7 @@ def main() -> None:
         for name in SCALING:
             if name not in timings:
                 continue
-            runs = _run_samples(make_fn(name, SCALE_DIR), spark)
+            runs = _run_samples(query_fn(spark, name, SCALE_DIR), spark)
             big = _median(runs)
             ratio = round(big / timings[name], 2) if timings[name] > 0 else None
             per_query[name] = {
@@ -764,11 +861,10 @@ def main() -> None:
         writes = {"error": f"{type(exc).__name__}: {exc}"}
 
     # --- writes_distinct tier: the lifecycle scenario under 10x-DISTINCT
-    # ingest (VERDICT-r7 item 6, promoted from tools/measured.py so the
-    # honest-cardinality ratios are re-measured every round, not once) ----
+    # ingest (VERDICT-r7 item 6), re-measured every round, not once ------
     writes_distinct: dict | None = None
     try:
-        writes_distinct = _writes_distinct_tier(spark)
+        writes_distinct = _writes_distinct_tier(spark, SF_DIR)
     except Exception as exc:  # noqa: BLE001 - bench must still emit its line
         writes_distinct = {"error": f"{type(exc).__name__}: {exc}"}
 
@@ -861,7 +957,12 @@ def main() -> None:
                 "(perfbench/layers.py group_counters, read from the status "
                 "store with the UI off): jobs, stages, tasks, executor run/"
                 "CPU/GC seconds, input MB at the sources, shuffle write/read "
-                "MB between stages and spill MB. This is the measured form "
+                "MB between stages and spill MB; build_s (building the "
+                "frame, build-time jobs included) + exec_s (the noop write) "
+                "= the run's wall time; analysis_ms/optimization_ms/"
+                "planning_ms are the Catalyst phases of the built frame, "
+                "read after the timer stopped; runs = every run's time in "
+                "run order. This is the measured form "
                 "of the plan claims — a query whose shuffle_write_mb rivals "
                 "its input_mb is reshuffling the input (candidate for "
                 "broadcast/bucketing/pre-aggregation); compressed-domain "

@@ -349,6 +349,29 @@ def test_bench_query_names_exist_in_registry():
     assert set(bench.SCALING) <= set(bench.HEADLINE)
 
 
+def test_tools_and_tests_do_not_name_their_checkout():
+    """Tools, tests and bench.py find the checkout from their own file, so a
+    copy of the tree (a `git archive` parent, an A/B worktree) runs and
+    writes its own files: none of them spells out the path of the checkout
+    it lives in."""
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    files = [os.path.join(root, "bench.py")]
+    for sub in ("tools", "tests"):
+        files += glob.glob(os.path.join(root, sub, "**", "*.py"), recursive=True)
+    hits = []
+    for path in files:
+        with open(path) as fh:
+            hits += [
+                f"{os.path.relpath(path, root)}:{i}"
+                for i, line in enumerate(fh, 1)
+                if root in line
+            ]
+    assert not hits, hits
+
+
 def test_dashboard_html_matches_golden(spark):
     """Golden-file parity for the dashboard export (VERDICT-r7 item 8):
     the full --html render at sf0.001 (fixed 2025-08-02..06 window) is
@@ -403,11 +426,17 @@ def test_dashboard_html_matches_golden(spark):
 
 def test_bench_io_sink_counts_jobs_with_ui_off(spark):
     """_run_samples(..., io_sink=...) tags the last run with a job group and
-    records that group's counters from the status store, which works on the
-    shared UI-off session: a tiny shuffling query records at least one job
-    and one stage."""
+    records its layer record, which works on the shared UI-off session: a
+    tiny shuffling query records at least one job and one stage, the
+    build/exec split of the tagged run, the Catalyst phases of the built
+    frame and the run times in run order. Reading the phases adds no job
+    to the group: the same query forced under a group of its own, with no
+    phase read, counts the same jobs."""
     import importlib.util
     import os
+
+    from airdatapipeline_spark.session import query_scope
+    from perfbench import layers
 
     spec = importlib.util.spec_from_file_location(
         "bench_mod2", os.path.join(os.path.dirname(__file__), "..", "bench.py")
@@ -415,10 +444,49 @@ def test_bench_io_sink_counts_jobs_with_ui_off(spark):
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
     assert spark.sparkContext.uiWebUrl is None
+
+    def query():
+        return spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+
     sink = {}
-    runs = bench._run_samples(
-        lambda: spark.range(100).groupBy((F.col("id") % 7).alias("k")).count(),
-        n=2, spark=spark, io_sink=sink, io_key="probe",
+    runs = bench._run_samples(query, n=2, spark=spark, io_sink=sink, io_key="probe")
+    rec = sink["probe"]
+    assert len(runs) == 2 and sorted(rec["runs"]) == runs
+    assert rec["jobs"] >= 1 and rec["stages"] >= 1, rec
+    assert abs(rec["build_s"] + rec["exec_s"] - rec["runs"][-1]) <= 0.01, rec
+    assert {"optimization_ms", "planning_ms"} <= set(rec), rec
+
+    sc = spark.sparkContext
+    layers.set_group(sc, "probe:plain")
+    with query_scope(spark):
+        query().write.format("noop").mode("overwrite").save()
+    layers.set_group(sc, None)
+    layers.drain(sc)
+    assert rec["jobs"] == layers.group_counters(sc, "probe:plain")["jobs"], rec
+
+
+def test_ab_trial_times_the_engine_of_its_tree(tmp_path):
+    """ab_interleaved's trial imports the engine from the tree it is given
+    (here a plain copy of the package) and bench.py from this checkout, and
+    reports the median and the layer record of bench's sampler."""
+    import importlib.util
+    import os
+    import shutil
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copytree(
+        os.path.join(repo, "airdatapipeline_spark"),
+        tmp_path / "airdatapipeline_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
-    assert len(runs) == 2
-    assert sink["probe"]["jobs"] >= 1 and sink["probe"]["stages"] >= 1, sink
+    spec = importlib.util.spec_from_file_location(
+        "ab_tool", os.path.join(repo, "tools", "ab_interleaved.py")
+    )
+    ab = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ab)
+
+    t = ab._trial(str(tmp_path), "tpch_q1_pricing_summary", SF_SMALL)
+    assert os.path.realpath(t["engine"]).startswith(os.path.realpath(tmp_path) + os.sep), t
+    rec = t["layers"]
+    assert {"build_s", "exec_s", "optimization_ms", "planning_ms", "jobs"} <= set(rec), rec
+    assert len(rec["runs"]) == 3 and t["median"] == sorted(rec["runs"])[1], t

@@ -359,6 +359,7 @@ def test_first_wins_aggregate_bounds_hot_key_shuffle(spark_global, tmp_path):
     shuffle bound, value-equality of both formulations, the partial_min
     combine in the plan, and that paragraph_dedup contains no Window
     node."""
+    import os
     import sys
 
     from pyspark.sql import Window
@@ -366,7 +367,7 @@ def test_first_wins_aggregate_bounds_hot_key_shuffle(spark_global, tmp_path):
 
     from airdatapipeline_spark.operators import dedup as dd
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
     from measured import summarize
 
     hot = " ".join(f"hot{j}" for j in range(dd.PARA_WORDS))

@@ -5,15 +5,22 @@ page cache, background load) moves slower than minutes, so alternating
 rev-A / rev-B trials cancels it out of the A:B ratio — the same reason
 the writes tier interleaves base/big passes. Each trial is a FRESH
 subprocess + JVM running the query from a detached `git worktree` of that
-revision: 1 untimed warm lap, then median-of-3 timed runs, each forced
-with a noop write (the bench's per-query statistic and forcing, so the
-ratio times the plan bench reports). Every lap runs in its own
-`session.query_scope`, so no lap reuses what an earlier lap persisted;
-both revisions must therefore have `query_scope`. The trial script
-repeats these few lines of bench.py instead of importing it, because it
-runs against other revisions' trees.
+revision: 1 untimed warm lap, then bench.py's `_run_samples` (median of
+3 noop-forced runs, each in its own `session.query_scope`), so the ratio
+times the plan bench reports, and the last run's layer record (build_s,
+exec_s, Catalyst phases, job-group counters) comes with it.
+
+The engine comes from the revision's worktree, the instrument from the
+current tree: the trial imports `airdatapipeline_spark` from the worktree
+first, then loads bench.py (and, through bench's own path setup,
+perfbench/layers.py) from this checkout by path, so both revisions are
+timed by the same code. The worktree's engine must have `query_scope`.
+The trial asserts that every loaded `airdatapipeline_spark` module file
+lies under the worktree, because bench.py puts its own directory first
+on `sys.path`.
 The printed verdict is the median-of-pairs ratio with per-trial
-spreads, so a real plan regression separates from dispersion.
+spreads, so a real plan regression separates from dispersion, and the
+per-layer medians of both revisions say which layer moved.
 
 Usage:
     python tools/ab_interleaved.py REV_A REV_B QUERY [SF_DIR] [N_PAIRS]
@@ -25,44 +32,61 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import _median  # noqa: E402
 
 _TRIAL = r"""
-import sys, time
+import importlib.util, json, os, sys
 sys.path.insert(0, {root!r})
-from airdatapipeline_spark.session import get_spark, query_scope
-from airdatapipeline_spark.registry import QUERIES
+import airdatapipeline_spark  # the engine under test, before bench's path setup
+spec = importlib.util.spec_from_file_location("bench", {bench!r})
+bench = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(bench)
+from airdatapipeline_spark.session import get_spark
 spark = get_spark("ab_trial")
-fn = QUERIES[{query!r}]
-
-def force():  # bench.py's forcing: a noop write runs every projected column
-    fn(spark, {sf!r}).write.format("noop").mode("overwrite").save()
-
-with query_scope(spark):
-    force()  # untimed warm lap (JIT/thread-pool ramp)
-ts = []
-for _ in range(3):
-    with query_scope(spark):
-        t = time.time(); force(); ts.append(time.time() - t)
-print("ABRESULT", sorted(ts)[1], min(ts), max(ts))
+fn = bench.query_fn(spark, {query!r}, {sf!r})
+bench._run_samples(fn, spark, n=1)  # untimed warm lap (JIT/thread-pool ramp)
+rec = {{}}
+runs = bench._run_samples(fn, spark, io_sink=rec, io_key={query!r})
+root = os.path.realpath({root!r}) + os.sep
+stray = [m.__file__ for n, m in list(sys.modules.items())
+         if n.split(".")[0] == "airdatapipeline_spark"
+         and not os.path.realpath(m.__file__).startswith(root)]
+assert not stray, f"engine modules from outside {{root}}: {{stray[:3]}}"
+print("ABRESULT", json.dumps({{"median": bench._median(runs),
+      "layers": rec[{query!r}], "engine": airdatapipeline_spark.__file__}}))
 """
 
 
-def _trial(root: str, query: str, sf: str) -> tuple[float, float, float]:
+def _trial(root: str, query: str, sf: str) -> dict:
+    """One fresh-JVM trial of `query` with the engine under `root`:
+    {"median": s, "layers": the last run's record, "engine": package file}."""
     out = subprocess.run(
-        [sys.executable, "-c", _TRIAL.format(root=root, query=query, sf=sf)],
+        [
+            sys.executable,
+            "-c",
+            _TRIAL.format(
+                root=root, query=query, sf=sf, bench=os.path.join(REPO, "bench.py")
+            ),
+        ],
         capture_output=True,
         text=True,
         cwd=root,
         check=True,
     ).stdout
     line = [ln for ln in out.splitlines() if ln.startswith("ABRESULT")][-1]
-    _, med, lo, hi = line.split()
-    return float(med), float(lo), float(hi)
+    return json.loads(line.split(" ", 1)[1])
+
+
+def _layer_medians(trials: list[dict]) -> dict[str, float]:
+    """Per-layer median over trials of every numeric key of the record."""
+    keys = [k for k, v in trials[0]["layers"].items() if not isinstance(v, list)]
+    return {k: _median(sorted(t["layers"][k] for t in trials)) for k in keys}
 
 
 def main() -> None:
@@ -108,17 +132,24 @@ def main() -> None:
     try:
         for i in range(pairs):
             for rev in (rev_a, rev_b):  # strict alternation: A B A B ...
-                med, lo, hi = _trial(roots[rev], query, sf)
-                results[rev].append((med, lo, hi))
-                print(f"pair {i + 1} {rev[:9]}: median {med:.3f} [{lo:.3f}, {hi:.3f}]", flush=True)
+                t = _trial(roots[rev], query, sf)
+                results[rev].append(t)
+                rec = t["layers"]
+                print(
+                    f"pair {i + 1} {rev[:9]}: median {t['median']:.3f} "
+                    f"[{min(rec['runs']):.3f}, {max(rec['runs']):.3f}] "
+                    f"build {rec['build_s']:.3f} exec {rec['exec_s']:.3f} "
+                    f"jobs {rec['jobs']:.0f} engine {os.path.dirname(t['engine'])}",
+                    flush=True,
+                )
     finally:
         for d in created:
             subprocess.run(
                 ["git", "worktree", "remove", "--force", d], cwd=REPO, capture_output=True
             )
 
-    med_a = statistics.median(m for m, _, _ in results[rev_a])
-    med_b = statistics.median(m for m, _, _ in results[rev_b])
+    med_a = _median(sorted(t["median"] for t in results[rev_a]))
+    med_b = _median(sorted(t["median"] for t in results[rev_b]))
     print(
         json.dumps(
             {
@@ -126,11 +157,13 @@ def main() -> None:
                 "sf": sf,
                 "rev_a": rev_a,
                 "rev_b": rev_b,
-                "median_a": round(med_a, 3),
-                "median_b": round(med_b, 3),
+                "median_a": med_a,
+                "median_b": med_b,
                 "ratio_b_over_a": round(med_b / med_a, 3),
-                "trials_a": [[round(x, 3) for x in t] for t in results[rev_a]],
-                "trials_b": [[round(x, 3) for x in t] for t in results[rev_b]],
+                "layers_a": _layer_medians(results[rev_a]),
+                "layers_b": _layer_medians(results[rev_b]),
+                "trials_a": [t["layers"]["runs"] for t in results[rev_a]],
+                "trials_b": [t["layers"]["runs"] for t in results[rev_b]],
             }
         )
     )

@@ -32,9 +32,10 @@ from __future__ import annotations
 
 import argparse
 import html as _html
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _fmt(v) -> str:

@@ -7,14 +7,21 @@ parquet scan files/bytes/rows (proves pushdown+pruning), shuffle exchanges
 and their written bytes/records (the quantity that decides 100 TB
 feasibility), broadcast exchanges, and Python boundaries.
 
+Every query it builds runs inside a `session.query_scope`, and every time
+it reports comes from bench.py's sampler (`_run_samples`, `_median`): the
+median of 3 noop-forced runs. The lifecycle stress table renders bench's
+`writes_distinct` tier for the same corpus.
+
 Usage: python tools/measured.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 QUERIES_TO_MEASURE = [
     "flagship_enrichment_gold",
@@ -153,61 +160,61 @@ def skew_lines(spark, sf_dir: str) -> list[str]:
     <= n_map_partitions rows, not all its occurrences) and the substring
     posting-list cap engaging (quadratic pair blowup from hot spans
     avoided BEFORE the self-join)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from airdatapipeline_spark.io import load_table
     from airdatapipeline_spark.operators import dedup as dd
-
-    tmp = tempfile.mkdtemp(prefix="skewcorpus_")
-    hot = " ".join(f"boilerplate{j}" for j in range(dd.PARA_WORDS))
-    (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(9))))
-        .select(
-            (F.col("doc_id") * 100 + F.col("r")).alias("doc_id"),
-            F.concat(F.lit(hot), F.lit(" "), F.col("text")).alias("text"),
-        )
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/documents.parquet")
-    )
-
-    segs = dd.paragraph_segments(spark, tmp)
-    total_segs = segs.count()
-    hot_occurrences = segs.groupBy("para_hash").count().agg(F.max("count")).first()[0]
-    fw = dd.first_wins_per_hash(dd.paragraph_segments(spark, tmp))
-    fw.collect()
-    fw_shuffled = summarize(fw)["shuffle_records"]
+    from airdatapipeline_spark.session import query_scope, scratch_dir
 
     cap = 64
-    wins_df = (
-        load_table(spark, tmp, "documents")
-        .filter(F.length("text") >= 40)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, int(floor((length(text) - 40) / 10))),"
-                    " i -> md5(substring(text, i * 10 + 1, 40)))"
-                )
-            ).alias("h"),
+    with query_scope(spark):
+        tmp = scratch_dir("skewcorpus_")
+        hot = " ".join(f"boilerplate{j}" for j in range(dd.PARA_WORDS))
+        (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(9))))
+            .select(
+                (F.col("doc_id") * 100 + F.col("r")).alias("doc_id"),
+                F.concat(F.lit(hot), F.lit(" "), F.col("text")).alias("text"),
+            )
+            .repartition(8)
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/documents.parquet")
         )
-        .distinct()
-        .groupBy("h")
-        .agg(F.count("*").alias("df"))
-    )
-    blocked = (
-        wins_df.filter(F.col("df") > cap)
-        .agg(
-            F.count("*").alias("n_hashes"),
-            F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("avoided_pairs"),
+
+        segs = dd.paragraph_segments(spark, tmp)
+        total_segs = segs.count()
+        hot_occurrences = segs.groupBy("para_hash").count().agg(F.max("count")).first()[0]
+        fw = dd.first_wins_per_hash(dd.paragraph_segments(spark, tmp))
+        fw.collect()
+        fw_shuffled = summarize(fw)["shuffle_records"]
+
+        wins_df = (
+            load_table(spark, tmp, "documents")
+            .filter(F.length("text") >= 40)
+            .select(
+                "doc_id",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(0, int(floor((length(text) - 40) / 10))),"
+                        " i -> md5(substring(text, i * 10 + 1, 40)))"
+                    )
+                ).alias("h"),
+            )
+            .distinct()
+            .groupBy("h")
+            .agg(F.count("*").alias("df"))
         )
-        .first()
-    )
-    capped_pairs = dd.exact_substring_pairs(spark, tmp, max_postings=cap).count()
+        blocked = (
+            wins_df.filter(F.col("df") > cap)
+            .agg(
+                F.count("*").alias("n_hashes"),
+                F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("avoided_pairs"),
+            )
+            .first()
+        )
+        capped_pairs = dd.exact_substring_pairs(spark, tmp, max_postings=cap).count()
 
     return [
         "",
@@ -241,24 +248,22 @@ def interval_skew_lines(spark, sf_dir: str) -> list[str]:
     rides the same corpora: its hot user is ONE window partition (a
     linear straggler, never quadratic), so its time should track the hot
     event count ~linearly."""
-    import shutil
-    import tempfile
-    import time
-
     from pyspark.sql import functions as F
 
     from airdatapipeline_spark.io import load_table
     from airdatapipeline_spark.operators import temporal as tp
+    from airdatapipeline_spark.session import query_scope, scratch_dir
+    from bench import _median, _run_samples
 
     HOT_USER = 10**9
     HOT_CLICKS = 1_000
-    base = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
     rows = []
     for tier, hot_err in (("base", 10_000), ("10x", 100_000)):
-        tmp = tempfile.mkdtemp(prefix=f"intervalskew_{tier}_")
-        try:
+        with query_scope(spark):
+            tmp = scratch_dir(f"intervalskew_{tier}_")
+            base = load_table(spark, sf_dir, "events").select(
+                "event_id", "ts", "user_id", "event_type", "value", "props"
+            )
 
             def hot(n, id_lo, etype):
                 return spark.range(n).selectExpr(
@@ -277,12 +282,9 @@ def interval_skew_lines(spark, sf_dir: str) -> list[str]:
                 hot(hot_err, 3 * 10**9, "error")
             ).repartition(8).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
 
-            df = tp.range_join_errors_near_clicks(spark, tmp)
-            df.collect()  # warm
-            t0 = time.time()
-            df = tp.range_join_errors_near_clicks(spark, tmp)
-            df.collect()
-            range_s = time.time() - t0
+            range_s = _median(
+                _run_samples(lambda: tp.range_join_errors_near_clicks(spark, tmp), spark)
+            )
 
             ev = load_table(spark, tmp, "events")
             sec = F.col("ts").cast("timestamp").cast("long")
@@ -294,19 +296,16 @@ def interval_skew_lines(spark, sf_dir: str) -> list[str]:
             )
             n_err = ev.filter(F.col("event_type") == "error").count()
             hot_cell = (
-                df.filter(F.col("user_id") == HOT_USER)
+                tp.range_join_errors_near_clicks(spark, tmp)
+                .filter(F.col("user_id") == HOT_USER)
                 .agg(F.max("n_errors_5min"))
                 .first()[0]
             )
 
-            adf = tp.asof_last_purchase_before_click(spark, tmp)
-            adf.collect()  # warm
-            t0 = time.time()
-            tp.asof_last_purchase_before_click(spark, tmp).collect()
-            asof_s = time.time() - t0
+            asof_s = _median(
+                _run_samples(lambda: tp.asof_last_purchase_before_click(spark, tmp), spark)
+            )
             rows.append((tier, hot_err, n_err, dsec, hot_cell, range_s, asof_s))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
 
     lines = [
         "",
@@ -342,17 +341,15 @@ def drift_skew_lines(spark, sf_dir: str) -> list[str]:
     partition — so the shuffled record count must stay at the counter
     bound (sources x metrics x bins x tasks at worst) while the hot
     source's row share grows."""
-    import shutil
-    import tempfile
-    import time
-
     from pyspark.sql import functions as F
 
     from airdatapipeline_spark.io import load_table
     from airdatapipeline_spark.operators import drift as dr
+    from airdatapipeline_spark.session import query_scope, scratch_dir
+    from bench import _median, _run_samples
 
-    tmp = tempfile.mkdtemp(prefix="driftskew_")
-    try:
+    with query_scope(spark):
+        tmp = scratch_dir("driftskew_")
         (
             load_table(spark, sf_dir, "documents")
             .select(
@@ -366,12 +363,9 @@ def drift_skew_lines(spark, sf_dir: str) -> list[str]:
             .write.mode("overwrite")
             .parquet(f"{tmp}/documents.parquet")
         )
-        df = dr.snapshot_drift_by_source(spark, tmp)
-        df.collect()  # warm
-        t0 = time.time()
+        took = _median(_run_samples(lambda: dr.snapshot_drift_by_source(spark, tmp), spark))
         df = dr.snapshot_drift_by_source(spark, tmp)
         rows = df.collect()
-        took = time.time() - t0
         s = summarize(df)
         n_docs = load_table(spark, tmp, "documents").count()
         hot_rows = sum(1 for r in rows if r.source == "hot")
@@ -389,131 +383,24 @@ def drift_skew_lines(spark, sf_dir: str) -> list[str]:
             f"{hot_rows} of {len(rows)} rows — the hot key's mass lives in "
             f"its own <= {2 * dr.DRIFT_BINS} counter rows.",
         ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _build_distinct_10x(spark, sf_dir: str) -> str:
-    """The honest sf1-shaped corpus: 10 copies of every document, each
-    copy's token sequence ROTATED by a copy-specific amount — same token
-    multiset (token stats preserved) but different shingle/span/paragraph
-    keys AND distinct doc_ids per copy, so key cardinality scales with the
-    data (the bench's plain replica multiplies rows only)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from airdatapipeline_spark.io import load_table
-
-    tmp = tempfile.mkdtemp(prefix="sf1corpus_")
-    toks = "split(trim(text), '\\\\s+')"
-    (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(9))))
-        .select(
-            (F.col("doc_id") * 16 + F.col("r")).alias("doc_id"),
-            F.expr(
-                # rotate the token sequence by r*17+1 positions: same
-                # multiset (token stats preserved), different shingle/
-                # span/paragraph keys per copy
-                f"concat_ws(' ', flatten(array("
-                f"slice({toks}, (r * 17 + 1) % size({toks}) + 1, size({toks})),"
-                f"slice({toks}, 1, (r * 17 + 1) % size({toks})))))"
-            ).alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-        )
-        .repartition(16)
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/documents.parquet")
-    )
-    return tmp
-
-
-def lifecycle_scenario(spark, corpus_dir: str) -> dict[str, float]:
-    """One full lifecycle pass over corpus dir `corpus_dir`: untimed setup
-    (base-layout write from the 90% slice), then timed append(3 live-gated
-    batches) → compact → delete → manifest+verify. verify_shards is
-    asserted all-OK — conservation under stress, not just speed. Shared by
-    MEASURED.md's stress section and bench.py's writes_distinct tier."""
-    import shutil
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from airdatapipeline_spark.io import load_table
-    from airdatapipeline_spark.operators import corpus
-
-    work = tempfile.mkdtemp(prefix="lifecycle_stress_")
-    docs = load_table(spark, corpus_dir, "documents")
-    base_sf = f"{work}/base_sf"
-    docs.filter(F.col("doc_id") % 10 != 0).write.mode("overwrite").parquet(
-        f"{base_sf}/documents.parquet"
-    )
-    out = f"{work}/layout"
-    corpus.write_shards(spark, base_sf, out)
-    delta = docs.filter(F.col("doc_id") % 10 == 0)
-    t: dict[str, float] = {}
-    t0 = time.time()
-    for k in range(3):  # K delta batches, each through the live gate
-        corpus.append_docs(spark, delta.filter(F.pmod("doc_id", F.lit(30)) == 10 * k), out)
-    t["append_3_batches"] = time.time() - t0
-    t0 = time.time()
-    corpus.compact_shards(spark, out, min_fill=0.85)
-    t["compact_shards"] = time.time() - t0
-    doomed = docs.filter(F.col("doc_id") % 70 == 0).select("doc_id")
-    t0 = time.time()
-    corpus.delete_from_shards(spark, doomed, out)
-    t["delete_from_shards"] = time.time() - t0
-    t0 = time.time()
-    corpus.write_layout_manifest(spark, out)
-    report = corpus.verify_shards(spark, out).collect()
-    t["manifest_verify"] = time.time() - t0
-    bad = [r for r in report if not r["shard_ok"]]
-    assert not bad, f"verify_shards red under stress at {corpus_dir}: {bad[:3]}"
-    shutil.rmtree(work, ignore_errors=True)
-    return t
-
-
-def lifecycle_stress_lines(spark, sf_dir: str, big: str | None = None) -> list[str]:
+def lifecycle_stress_lines(spark, sf_dir: str) -> list[str]:
     """Lifecycle writes under the 10x-DISTINCT corpus (VERDICT-r6 item 6):
     the bench writes tier's 10x replica multiplies rows but not the hash
-    spread of distinct doc_ids the way real ingest does. Here the full
-    append(3 batches) → compact → delete → manifest+verify scenario runs
-    on the token-rotated 10x-distinct corpus (10x docs, 10x distinct ids,
-    disjoint content hashes) and on the base corpus; wall-time ratios at
-    or below the 10x data ratio mean the membership gates, fragment
-    re-lays, and affected-shard rewrites stay IO-proportional when key
-    cardinality actually grows. verify_shards must also come back all-OK
-    on the distinct corpus — conservation under stress, not just speed.
+    spread of distinct doc_ids the way real ingest does. Renders bench.py's
+    `writes_distinct` tier for `sf_dir`: the full append(3 batches) →
+    compact → delete → manifest+verify scenario on the token-rotated
+    10x-distinct corpus (10x docs, 10x distinct ids, disjoint content
+    hashes) and on the base corpus, interleaved, median of 3; wall-time
+    ratios at or below the 10x data ratio mean the membership gates,
+    fragment re-lays, and affected-shard rewrites stay IO-proportional
+    when key cardinality actually grows. verify_shards must also come back
+    all-OK on the distinct corpus — conservation under stress, not just
+    speed."""
+    from bench import _writes_distinct_tier
 
-    Statistic: MEDIAN-of-3, interleaved base/big passes — the same
-    statistic as bench.py's `_writes_distinct_tier`, which is the
-    CANONICAL per-round instrument (r9 reconciliation, VERDICT-r8 item 1:
-    the earlier best-of-2 run under different cache/host state read
-    ratios ~1.4 while a clean interleaved session reads ~2.6-4.1,
-    agreeing with the bench tier; two instruments measuring one scenario
-    must share the statistic or the docs contradict themselves)."""
-    import shutil
-
-    own_corpus = big is None
-    if own_corpus:
-        big = _build_distinct_10x(spark, sf_dir)
-
-    # median-of-3, interleaved (fresh layout each pass: writes mutate state)
-    base_p, big_p = [], []
-    for _ in range(3):
-        base_p.append(lifecycle_scenario(spark, sf_dir))
-        big_p.append(lifecycle_scenario(spark, big))
-
-    def med(passes: list[dict]) -> dict[str, float]:
-        return {k: sorted(p[k] for p in passes)[1] for k in passes[0]}
-
-    base_t, big_t = med(base_p), med(big_p)
-    if own_corpus:
-        shutil.rmtree(big, ignore_errors=True)
+    ops = _writes_distinct_tier(spark, sf_dir)["ops"]
     return [
         "",
         "## lifecycle writes under 10x-DISTINCT ingest (token rotation)",
@@ -522,14 +409,14 @@ def lifecycle_stress_lines(spark, sf_dir: str, big: str | None = None) -> list[s
         "scenario on the 10x-distinct corpus (10x docs AND 10x distinct",
         "doc_ids/content hashes — the bench replica's rows-only growth",
         "understresses the membership gates). verify_shards asserted all-OK",
-        "on both corpora.",
+        "on both corpora. bench.py's `writes_distinct` tier, median of 3.",
         "",
         "| op | base s | 10x-distinct s | ratio (data 10x) |",
         "|---|---|---|---|",
         *[
-            f"| {k} | {base_t[k]:.2f} | {big_t[k]:.2f} | "
-            f"{big_t[k] / base_t[k]:.2f} |"
-            for k in base_t
+            f"| {op} | {e['base']['med']:.2f} | {e['big']['med']:.2f} | "
+            f"{e.get('ratio')} |"
+            for op, e in ops.items()
         ],
         "",
         "Ratios <= the 10x data ratio mean every mutation stays IO-",
@@ -538,58 +425,43 @@ def lifecycle_stress_lines(spark, sf_dir: str, big: str | None = None) -> list[s
     ]
 
 
-def sf1_stress_lines(spark, sf_dir: str, big: str | None = None) -> list[str]:
+def sf1_stress_lines(spark, sf_dir: str) -> list[str]:
     """sf1-equivalent stress (VERDICT-r5 item 8): the bench's 10x replica
     multiplies ROWS but its copies are near-dups of each other, so
     distinct-value cardinality (paragraph hashes, span postings, shingles)
     barely grows — the quantity that actually drives the dedup shuffles.
     Here each of the 10 copies gets a DIFFERENT token rotation of the text
     (same token multiset, disjoint shingles/spans/paragraphs), so distinct
-    keys grow ~10x like a real sf1 corpus. Reports wall-time ratios of the
-    heaviest corpus-prep plans; near-linear (ratio ~10 or less) means the
-    skew guards and candidate bounds hold another decade of scale."""
-    import shutil
-    import time
-
-    import __spark_entry__ as e
+    keys grow ~10x like a real sf1 corpus. Reports wall-time ratios
+    (bench's median of 3) of the heaviest corpus-prep plans; near-linear
+    (ratio ~10 or less) means the skew guards and candidate bounds hold
+    another decade of scale."""
     from airdatapipeline_spark.io import load_table
+    from airdatapipeline_spark.session import query_scope
+    from bench import _build_distinct_10x, _median, _run_samples, query_fn
 
-    own_corpus = big is None
-    tmp = _build_distinct_10x(spark, sf_dir) if own_corpus else big
-
-    queries = e.queries()
     heavy = [
         "dedup_exact_substring_pairs",
         "dedup_paragraph_rebuild",
         "curation_pipeline",
         "training_data_build",
     ]
-
-    def best_of_2(name, d):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            queries[name](spark, d).write.format("noop").mode("overwrite").save()
-            el = time.time() - t0
-            best = el if best is None else min(best, el)
-        return best
-
     rows = []
-    for name in heavy:
-        base_s = best_of_2(name, sf_dir)
-        big_s = best_of_2(name, tmp)
-        rows.append((name, base_s, big_s, big_s / base_s if base_s > 0 else float("nan")))
-
-    base_docs = load_table(spark, sf_dir, "documents").count()
-    if own_corpus:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with query_scope(spark):
+        big = _build_distinct_10x(spark, sf_dir)
+        for name in heavy:
+            base_s = _median(_run_samples(query_fn(spark, name, sf_dir), spark))
+            big_s = _median(_run_samples(query_fn(spark, name, big), spark))
+            rows.append((name, base_s, big_s, big_s / base_s if base_s > 0 else float("nan")))
+        base_docs = load_table(spark, sf_dir, "documents").count()
     return [
         "",
         "## sf1-equivalent stress (10x docs, DISTINCT content per copy — token rotation)",
         "",
         f"Corpus: {sf_dir} documents x10 = {base_docs * 10} docs; unlike the bench",
         "replica, every copy's shingles/spans/paragraph hashes are distinct, so",
-        "key cardinality scales with the data (the honest sf1 shape).",
+        "key cardinality scales with the data (the honest sf1 shape). Times are",
+        "bench.py's median of 3 noop-forced runs.",
         "",
         "| query | base s | 10x-distinct s | ratio (data 10x) |",
         "|---|---|---|---|",
@@ -612,42 +484,43 @@ def recall_scenario_lines(spark, sf_dir: str) -> list[str]:
     from pyspark.sql import functions as F
 
     from airdatapipeline_spark.operators import similarity as sim
-
-    iso = sim.recall_at_k(spark, sf_dir).agg(
-        F.avg(F.col("ivf_hits") / 5.0).alias("r")
-    ).first()
-    clu = (
-        sim.clustered_recall_panel(spark, sf_dir)
-        .agg(F.avg("ivf_recall").alias("r"), F.avg("scanned_frac").alias("f"))
-        .first()
-    )
-    iso_frac = sim.TRAINED_N_PROBE / sim.N_CENTROIDS
-    tiers = (
-        sim.clustered_tier_recall(spark, sf_dir)
-        .agg(
-            F.avg("ivf_recall").alias("ivf"),
-            F.avg("bq_recall").alias("bq"),
-            F.avg("pq_recall").alias("pq"),
-        )
-        .first()
-    )
-    rpq = (
-        sim.clustered_residual_ivfpq_recall(spark, sf_dir)
-        .agg(F.avg("rpq_recall").alias("r"))
-        .first()
-    )
     from airdatapipeline_spark.registry.simsearch import RPQ_RERANK
+    from airdatapipeline_spark.session import query_scope
 
-    rrq = (
-        sim.clustered_residual_ivfpq_recall(spark, sf_dir, rerank=RPQ_RERANK)
-        .agg(F.avg("rpq_recall").alias("r"))
-        .first()
-    )
-    rp = (
-        sim.rp_recall(spark, sf_dir)
-        .agg(F.avg("rp_recall").alias("raw"), F.avg("rp_rerank_recall").alias("rr"))
-        .first()
-    )
+    with query_scope(spark):
+        iso = sim.recall_at_k(spark, sf_dir).agg(
+            F.avg(F.col("ivf_hits") / 5.0).alias("r")
+        ).first()
+        clu = (
+            sim.clustered_recall_panel(spark, sf_dir)
+            .agg(F.avg("ivf_recall").alias("r"), F.avg("scanned_frac").alias("f"))
+            .first()
+        )
+        iso_frac = sim.TRAINED_N_PROBE / sim.N_CENTROIDS
+        tiers = (
+            sim.clustered_tier_recall(spark, sf_dir)
+            .agg(
+                F.avg("ivf_recall").alias("ivf"),
+                F.avg("bq_recall").alias("bq"),
+                F.avg("pq_recall").alias("pq"),
+            )
+            .first()
+        )
+        rpq = (
+            sim.clustered_residual_ivfpq_recall(spark, sf_dir)
+            .agg(F.avg("rpq_recall").alias("r"))
+            .first()
+        )
+        rrq = (
+            sim.clustered_residual_ivfpq_recall(spark, sf_dir, rerank=RPQ_RERANK)
+            .agg(F.avg("rpq_recall").alias("r"))
+            .first()
+        )
+        rp = (
+            sim.rp_recall(spark, sf_dir)
+            .agg(F.avg("rp_recall").alias("raw"), F.avg("rp_rerank_recall").alias("rr"))
+            .first()
+        )
     return [
         "",
         "## IVF recall vs scanned fraction, by embedding regime",
@@ -718,14 +591,14 @@ def recall_scenario_lines(spark, sf_dir: str) -> list[str]:
 def sketch_lines(spark, sf_dir: str) -> list[str]:
     """Mergeable-sketch accuracy (continuation r9): live-measured HLL and
     KMV error against their in-plan exact verifiers."""
-    from pyspark.sql import functions as F
-
     from airdatapipeline_spark.operators import sketches as sk
+    from airdatapipeline_spark.session import query_scope
 
-    hll = sk.hll_shingle_cardinality(spark, sf_dir).toPandas()
+    with query_scope(spark):
+        hll = sk.hll_shingle_cardinality(spark, sf_dir).toPandas()
+        kmv = sk.kmv_source_overlap(spark, sf_dir).toPandas()
     all_row = hll[hll.scope == sk.ALL_SCOPE].iloc[0]
     src = hll[hll.scope != sk.ALL_SCOPE]
-    kmv = sk.kmv_source_overlap(spark, sf_dir).toPandas()
     return [
         "",
         "## Mergeable-sketch accuracy (continuation r9)",
@@ -957,11 +830,10 @@ ROUND_NOTES = [
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import __spark_entry__ as e
-    from airdatapipeline_spark.session import get_spark
+    from airdatapipeline_spark.registry import QUERIES
+    from airdatapipeline_spark.session import get_spark, query_scope
 
     spark = get_spark("measured")
-    queries = e.queries()
     out = [
         "# MEASURED — executed-plan metrics of the headline queries",
         "",
@@ -972,7 +844,7 @@ def main() -> None:
         "Exchange nodes; `scan_rows` is rows leaving parquet scans AFTER",
         "pushdown, so scan_rows ≪ table rows demonstrates pruning.",
         "",
-        "Zero-scan rows (minhash candidates, cluster assignments) are queries",
+        "Zero-scan rows (cluster assignments, the clustered ANN tiers) are queries",
         "whose sources sit behind a persist()/localCheckpoint() boundary — the",
         "scan happened once when the cached table materialized and the final",
         "plan reads InMemoryTableScan/checkpoint instead; their scan costs are",
@@ -982,11 +854,10 @@ def main() -> None:
         "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name in QUERIES_TO_MEASURE:
-        if name not in queries:
-            continue
-        df = queries[name](spark, sf_dir)
-        df.collect()
-        s = summarize(df)
+        with query_scope(spark):
+            df = QUERIES[name](spark, sf_dir)
+            df.collect()
+            s = summarize(df)
         out.append(
             f"| {name} | {s['n_scans']} | {s['scan_files']} | "
             f"{s['scan_bytes'] / 1e6:.2f} | {s['scan_rows']} | {s['n_shuffles']} | "
@@ -997,21 +868,12 @@ def main() -> None:
     out.extend(skew_lines(spark, sf_dir))
     out.extend(interval_skew_lines(spark, sf_dir))
     out.extend(drift_skew_lines(spark, sf_dir))
-    # build the 10x-distinct corpus ONCE for both stress sections, and
-    # clean it up afterwards (each section also self-builds when called
-    # standalone)
-    import shutil
-
-    big = _build_distinct_10x(spark, sf_dir)
-    try:
-        out.extend(sf1_stress_lines(spark, sf_dir, big=big))
-        out.extend(lifecycle_stress_lines(spark, sf_dir, big=big))
-    finally:
-        shutil.rmtree(big, ignore_errors=True)
+    out.extend(sf1_stress_lines(spark, sf_dir))
+    out.extend(lifecycle_stress_lines(spark, sf_dir))
     out.extend(recall_scenario_lines(spark, sf_dir))
     out.extend(sketch_lines(spark, sf_dir))
     out.extend(ROUND_NOTES)
-    with open("/root/repo/MEASURED.md", "w") as f:
+    with open(os.path.join(ROOT, "MEASURED.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"MEASURED.md written ({len(QUERIES_TO_MEASURE)} queries)")
 

@@ -5,10 +5,12 @@ broadcast, codegen spans). Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 AUDIT = [
     "tpch_q1_pricing_summary",
@@ -105,11 +107,10 @@ AUDIT = [
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import __spark_entry__ as e
-    from airdatapipeline_spark.session import get_spark
+    from airdatapipeline_spark.registry import QUERIES
+    from airdatapipeline_spark.session import get_spark, query_scope
 
     spark = get_spark("plan-audit")
-    qs = e.queries()
     out = [
         "# PLANS — physical-plan audit of the headline queries",
         "",
@@ -126,17 +127,17 @@ def main() -> None:
         r"CartesianProduct|BroadcastNestedLoop|\(\d+\) )"
     )
     for name in AUDIT:
-        df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        with query_scope(spark):
+            plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
         lines = [l for l in plan.splitlines() if keep.search(l)]
         out.append(f"## {name}\n")
         out.append("```")
         out.extend(lines[:40])
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md written ({len(AUDIT)} queries)")
 

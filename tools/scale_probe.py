@@ -14,9 +14,9 @@ two shapes VERDICT-r11 named riskiest:
 
 Only the tables the probed queries scan are replicated (events,
 documents), so the 100x build does not pay for 60M unused lineitem rows.
-Timing protocol is bench.py's own (`_run_samples` + `_median`):
-noop-forced, each run in its own query scope, median of 3, ascending
-tiers in one warm session.
+Timing protocol is bench.py's own (`query_fn`, `_run_samples`,
+`_median`): noop-forced, each run (the warm lap too) in its own query
+scope, median of 3, ascending tiers in one warm session.
 
 Usage: python tools/scale_probe.py [--copies 10,30,100] [query ...]
 Writes one JSON line to stdout; paste the table into MEASURED.md.
@@ -43,10 +43,9 @@ def main() -> None:
         args = args[2:]
     queries = list(args) or list(DEFAULT_QUERIES)
 
-    from airdatapipeline_spark.registry import QUERIES
     from airdatapipeline_spark.session import get_spark
     from airdatapipeline_spark.sources.scale import build_replica_warehouse
-    from bench import _median, _run_samples
+    from bench import _median, _run_samples, query_fn
 
     spark = get_spark("scale_probe")
     base_dir = os.path.join(
@@ -63,13 +62,13 @@ def main() -> None:
 
     # warm lap at base so tier-1 timings read a warm JVM
     for q in queries:
-        QUERIES[q](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        _run_samples(query_fn(spark, q, SF_DIR), spark, n=1)
 
     out: dict[str, dict] = {}
     for q in queries:
         rows = {}
         for c, d in sorted(tiers.items()):
-            runs = _run_samples(lambda: QUERIES[q](spark, d), spark)
+            runs = _run_samples(query_fn(spark, q, d), spark)
             med = _median(runs)
             rows[str(c)] = {"median_s": med, "runs": runs}
             sys.stderr.write(f"{q} x{c}: {med}s (runs {runs})\n")
